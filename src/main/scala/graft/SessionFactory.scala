@@ -69,16 +69,7 @@ object SessionFactory {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE coalescing minPartitionSize: round-21 quiet-host A/B (15-query
-      // subset, 3 passes, min) measured the round-20 16k floor at +15%
-      // battery-wide — many-small-task overhead on every tiny shuffle
-      // (q_pagerank 1.81x, q_parts_supplier_count 2.39x, q_khop_reach
-      // 1.38x) — against at best -5% on the similarity-verify stages it
-      // was meant to keep parallel. Default restored to Spark's 1m; the
-      // env knob stays for cluster profiles where a deliberate floor is
-      // wanted.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"))
+      // no AQE minPartitionSize floor: round 21 measured a 16k floor at +15% on the battery
       // split large files so scan parallelism tracks the cluster, not the
       // writer's file layout
       .config("spark.sql.files.maxPartitionBytes", s"${128 * 1024 * 1024}")

@@ -32,7 +32,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * **dynamic partition overwrite** rewrites only the touched specs' manifest
   * entries (data for untouched partitions is never moved or re-listed), and
   * **partition-pruned reads** resolve the scan file set from the manifest
-  * alone — no object-store LIST over 10⁵ partition prefixes.
+  * alone — no object-store LIST over 10⁵ partition prefixes. However many
+  * commits a read spans, the `(commit dir, spec)` leaf dirs the manifest
+  * keeps are scanned as ONE parquet relation with `basePath` = `table/data`
+  * (one file index, one scan — not a union of one relation per commit);
+  * only those leaf dirs are listed, never `data/` itself.
   */
 object Snapshots {
 
@@ -866,8 +870,8 @@ object Snapshots {
     val prev = versions(spark, table)
     requireBase(table, prev, baseVersion)
     val v = prev.lastOption.getOrElse(0L) + 1
-    val prevTxnMap = prev.lastOption
-      .map(readManifest(f, table, _).txn).getOrElse(Map.empty[String, Long])
+    val prevManifest = prev.lastOption.map(readManifest(f, table, _))
+    val prevTxnMap = prevManifest.map(_.txn).getOrElse(Map.empty[String, Long])
     val replayed = txn.exists { case (app, id) => prevTxnMap.get(app).exists(_ >= id) }
     if (replayed) prev.last // already-committed batch: idempotent no-op
     else {
@@ -883,8 +887,7 @@ object Snapshots {
             .map(rest => if (rest.isEmpty) st.getPath.getName else s"${st.getPath.getName}/$rest"))
       val touched = specs(new Path(base), partitionBy.length)
       require(touched.nonEmpty, "commitPartitioned wrote no partitions (empty df?)")
-      val prevParts = prev.lastOption.map { pv =>
-        val m = readManifest(f, table, pv)
+      val prevParts = prevManifest.map { m =>
         require(m.dirs.isEmpty, s"$table is unpartitioned — use commit")
         m.partitions
       }.getOrElse(Map.empty[String, Seq[String]])
@@ -982,8 +985,7 @@ object Snapshots {
       commit(kept.unionByName(updates, allowMissingColumns = true),
         table, SaveMode.Overwrite, baseVersion = Some(vs.last))
     } else {
-      val partCols = parseSpec(m.partitions.keys.head).keys.toSeq
-        .sortBy(k => m.partitions.keys.head.split('/').indexWhere(_.startsWith(k + "=")))
+      val partCols = partColumns(m)
       // partitions the updates touch — resolved from the updates frame, then
       // used to prune the read to only those specs
       val touchedSpecs = updates.select(partCols.map(org.apache.spark.sql.functions.col): _*)
@@ -1065,13 +1067,22 @@ object Snapshots {
       kv.substring(0, i) -> percentDecode(kv.substring(i + 1))
     }.toMap
 
+  /** Partition column names of a spec, in path order (`""` for a segment
+    * with no `=`). */
+  private def specColumns(spec: String): Seq[String] =
+    spec.split('/').toSeq.map(kv => kv.substring(0, math.max(kv.indexOf('='), 0)))
+
+  /** A partitioned manifest's partition columns, in path order. */
+  private def partColumns(m: Manifest): Seq[String] = specColumns(m.partitions.keys.head)
+
   /** Read a snapshot: the latest version by default, or any retained one.
     *
     * For partitioned tables, `partitionFilter` prunes BEFORE any file I/O:
     * the scan set is resolved from the manifest's specs alone, so a
     * point-in-time read of one partition out of 10⁵ opens one manifest and
-    * the matching data dirs — no recursive listing. Partition columns come
-    * back as columns (hive-style discovery anchored at each commit dir). */
+    * the matching data dirs — no recursive listing. The kept dirs of every
+    * commit are scanned as one relation ([[readSpecs]]); partition columns
+    * come back as columns (hive-style discovery anchored at `table/data`). */
   def read(
       spark: SparkSession,
       table: String,
@@ -1102,7 +1113,7 @@ object Snapshots {
       require(kept.nonEmpty, s"partitionFilter matched no partitions of $table v$v")
       readSpecs(spark,
         kept.toSeq.flatMap { case (spec, bases) => bases.map((_, spec)) },
-        m.schema, parseSpec(m.partitions.keys.head).keySet)
+        m.schema, partColumns(m))
     }
   }
 
@@ -1128,28 +1139,48 @@ object Snapshots {
       case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
     }
 
-  /** Scan (commit base, spec) pairs of a partitioned table. Grouped by
-    * commit dir: basePath anchors hive discovery so the k=v path segments
-    * materialize as partition columns; `allowMissingColumns` unions across
-    * commits whose schemas evolved. The explicit schema covers the DATA
-    * columns only (same footer-read rationale as [[readDirs]]); partition
-    * columns stay on hive discovery's inference path, appended after the
-    * data columns exactly as the mergeSchema read laid them out. */
+  /** Scan (commit base, spec) pairs of a partitioned table as ONE parquet
+    * relation over exactly the `base/spec` leaf dirs the manifest names:
+    * one file index and one scan however many commits the read spans, as
+    * per-commit file indexes, plan branches and scan tasks would cost each
+    * small read more than its bytes. Only those leaf dirs are listed, never
+    * `data/` itself, so unpublished commit dirs stay invisible.
+    *
+    * `basePath` is the commit dirs' shared parent, `table/data` (every
+    * writer puts its commit dir there; bases with different parents fail
+    * loudly). Hive discovery then parses the `k=v` segments below it into
+    * partition columns and, under `ignoreInvalidPartitionPaths`, steps
+    * over the `c-<v>-<uuid>` segment above them. That option also SKIPS
+    * any leaf that does not parse to the same columns as the others, so
+    * every spec is first required to name exactly the table's partition
+    * columns: a malformed spec fails the read instead of dropping rows.
+    *
+    * The explicit schema covers the DATA columns only (same footer-read
+    * rationale as [[readDirs]]); files from older commits missing a
+    * later-added column read back null. Partition columns stay on hive
+    * discovery's type inference, appended after the data columns. */
   private def readSpecs(
       spark: SparkSession,
       baseSpecs: Seq[(String, String)],
       schemaJson: Option[String],
-      partCols: Set[String]): DataFrame = {
+      partCols: Seq[String]): DataFrame = {
+    val malformed = baseSpecs.map(_._2).distinct.filterNot(specColumns(_) == partCols)
+    require(partCols.forall(_.nonEmpty) && malformed.isEmpty,
+      s"partition specs [${malformed.mkString(", ")}] do not name exactly the " +
+        s"table's partition columns ${partCols.mkString("/")}")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val parents = baseSpecs.map(_._1).distinct.map { base =>
+      val p = new Path(base).getParent
+      p.getFileSystem(conf).makeQualified(p)
+    }.distinct
+    require(parents.size == 1,
+      s"commit dirs do not share one data dir: ${parents.mkString(", ")}")
     val dataSchema = schemaJson.map(j =>
-      org.apache.spark.sql.types.StructType(structOf(j).filterNot(f => partCols(f.name))))
-    baseSpecs.map { case (base, spec) => (base, s"$base/$spec") }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (base, paths) =>
-        val rd = spark.read.option("basePath", base)
-        dataSchema.fold(rd.option("mergeSchema", "true"))(rd.schema)
-          .parquet(paths.map(_._2).distinct: _*)
-      }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+      org.apache.spark.sql.types.StructType(structOf(j).filterNot(f => partCols.contains(f.name))))
+    val rd = spark.read.option("basePath", parents.head.toString)
+      .option("ignoreInvalidPartitionPaths", "true")
+    dataSchema.fold(rd.option("mergeSchema", "true"))(rd.schema)
+      .parquet(baseSpecs.map { case (base, spec) => s"$base/$spec" }.distinct: _*)
   }
 
   /** Change data feed between two versions: every row added or removed going
@@ -1192,8 +1223,7 @@ object Snapshots {
           }
         def rd(bs: Seq[(String, String)], m: Manifest) =
           if (bs.isEmpty) None
-          else Some(readSpecs(spark, bs, m.schema,
-            parseSpec(m.partitions.keys.head).keySet))
+          else Some(readSpecs(spark, bs, m.schema, partColumns(m)))
         (rd(diff(m2.partitions, m1.partitions), m2),
           rd(diff(m1.partitions, m2.partitions), m1))
       }
@@ -1237,8 +1267,7 @@ object Snapshots {
       // accumulated small files rewrite as one task → one file, then commit
       // as a dynamic overwrite of every spec (all specs are "touched")
       val df = read(spark, table, Some(vs.last))
-      val cols = parseSpec(m.partitions.keys.head).keys.toSeq
-        .sortBy(k => m.partitions.keys.head.split('/').indexWhere(_.startsWith(k + "=")))
+      val cols = partColumns(m)
       commitPartitioned(
         df.repartition(cols.map(org.apache.spark.sql.functions.col): _*),
         table, cols, SaveMode.Overwrite, baseVersion = Some(vs.last))
@@ -1308,8 +1337,7 @@ object Snapshots {
       if (frag.isEmpty) None
       else Some {
         val fragParsed = frag.map(parseSpec).toSet
-        val cols = parseSpec(m.partitions.keys.head).keys.toSeq
-          .sortBy(k => m.partitions.keys.head.split('/').indexWhere(_.startsWith(k + "=")))
+        val cols = partColumns(m)
         // one shuffle task per rewritten spec → one file per spec dir;
         // input pinned to vs.last and the commit CAS'd on it — an ingest
         // commit landing mid-rewrite makes this a LOUD race (the caller's

@@ -659,6 +659,24 @@ class SnapshotsSpec extends SparkSpec {
     val pf = Snapshots.read(spark, tp, None, sp => sp.get("g").contains("1"))
     assert(CountingFs.opens.get() == 0, "partitioned plan read footers")
     assert(pf.select("id").as[Long].collect().forall(_ % 3 == 1))
+    // multi-commit: append, dynamic overwrite, evolved column — the single
+    // relation over every commit's leaf dirs still opens no footer to plan
+    Snapshots.commitPartitioned(spark.range(300, 400)
+      .selectExpr("id", "CAST(id % 3 AS STRING) AS g"), tp, Seq("g"))
+    Snapshots.commitPartitioned(spark.range(400, 410)
+      .selectExpr("id", "'2' AS g"), tp, Seq("g"), SaveMode.Overwrite)
+    Snapshots.commitPartitioned(spark.range(410, 420)
+      .selectExpr("id", "id % 5 AS extra", "'3' AS g"), tp, Seq("g"))
+    CountingFs.opens.set(0)
+    val all = Snapshots.read(spark, tp)
+    assert(CountingFs.opens.get() == 0,
+      s"multi-commit partitioned plan opened ${CountingFs.opens.get()} data files")
+    assert(all.columns.toSeq == Seq("id", "extra", "g"))
+    assert(PlanScans.parquet(all) == 1)
+    // g=0 (100 + 34 rows) and g=1 (100 + 33) span two commits, g=2 was
+    // overwritten to 10 rows, g=3 (10 rows) is the evolved commit's
+    assert(all.count() == 287)
+    assert(all.filter($"extra".isNull).count() == 277)
   }
 
   test("partitioned and plain commits don't mix; specs decode hive escaping") {
@@ -840,7 +858,113 @@ class SnapshotsSpec extends SparkSpec {
       .filterNot(_.startsWith(".")) // local-FS .crc sidecars; hidden anyway
     assert(names.nonEmpty && names.forall(_.matches("v\\d{5}\\.json"))) // no tmp residue
     assert(Snapshots.read(spark, t).agg(sum($"v")).head().getLong(0) == 9900L)
+    // partitioned, several commits: the single relation lists only the leaf
+    // dirs the manifest names, never data/ — a commit dir written but never
+    // published (a writer that died before its manifest rename) is invisible
+    val tp = tmp()
+    Snapshots.commitPartitioned(spark.range(100)
+      .selectExpr("id", "CAST(id % 2 AS STRING) AS p"), tp, Seq("p"))
+    Snapshots.commitPartitioned(spark.range(100, 150)
+      .selectExpr("id", "'1' AS p"), tp, Seq("p"))
+    Snapshots.commitPartitioned(spark.range(150, 160)
+      .selectExpr("id", "'0' AS p"), tp, Seq("p"), SaveMode.Overwrite)
+    spark.range(1000, 1100).selectExpr("id", "CAST(id % 2 AS STRING) AS p")
+      .write.partitionBy("p").parquet(s"$tp/data/c-00004-orphan00")
+    val pr = Snapshots.read(spark, tp)
+    assert(PlanScans.parquet(pr) == 1)
+    assert(pr.select($"id".as[Long]).collect().toSet ==
+      ((1L until 100L by 2).toSet ++ (100L until 160L).toSet))
+    assert(pr.inputFiles.forall(!_.contains("orphan")))
   }
+
+  test("partitioned guard: a spec not naming exactly the partition columns fails the read, never drops rows") {
+    val t = tmp()
+    Snapshots.commitPartitioned(Seq(("d1", "a", 1), ("d1", "b", 2), ("d2", "a", 3))
+      .toDF("dt", "g", "k"), t, Seq("dt", "g"))
+    // hand-written manifests: v1's specs plus the given (spec -> base) entries
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def publishByHand(v: Int, specs: (String, String)*): Unit = {
+      val m = mapper.readTree(new java.io.File(s"$t/_manifests/v00001.json"))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      m.put("version", v)
+      val parts = m.get("partitions").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      specs.foreach { case (spec, base) => parts.putArray(spec).add(base) }
+      mapper.writeValue(new java.io.File(f"$t/_manifests/v$v%05d.json"), m)
+    }
+    // v2: an extra spec that omits the g column
+    val base2 = s"$t/data/c-00002-handmade"
+    Seq(("d3", 4), ("d3", 5)).toDF("dt", "k").write.partitionBy("dt").parquet(base2)
+    publishByHand(2, "dt=d3" -> base2)
+    val e = intercept[IllegalArgumentException](Snapshots.read(spark, t))
+    assert(e.getMessage.contains("dt=d3"))
+    intercept[IllegalArgumentException](Snapshots.read(spark, t, None, _("dt") == "d3"))
+    // v3: a spec with no k=v segment beside a valid one — hive discovery
+    // under ignoreInvalidPartitionPaths would skip its leaf's rows silently
+    val base3 = s"$t/data/c-00003-handmade"
+    Seq(("d2", "a", 30)).toDF("dt", "g", "k").write.partitionBy("dt", "g").parquet(base3)
+    Seq(6, 7).toDF("k").write.parquet(s"$base3/junk")
+    publishByHand(3, "dt=d2/g=a" -> base3, "junk" -> base3)
+    val e3 = intercept[IllegalArgumentException](Snapshots.changes(spark, t, 1L, 3L))
+    assert(e3.getMessage.contains("junk"))
+    // the well-formed version still reads
+    assert(Snapshots.read(spark, t, Some(1L)).count() == 3)
+  }
+
+  test("partitioned read over many commits is ONE parquet scan with the per-commit union's answer") {
+    val t = tmp()
+    val odd = "x/y+z w" // hive-escapes '/' only: path segment g=x%2Fy+z w
+    val cols = Seq("dt", "g")
+    Snapshots.commitPartitioned(Seq(("2025-01-01", "a", 1), ("2025-01-01", "b", 2),
+      ("2025-01-02", "a", 3)).toDF("dt", "g", "k"), t, cols)                     // v1 append
+    Snapshots.commitPartitioned(Seq(("2025-01-02", "a", 30)).toDF("dt", "g", "k"),
+      t, cols, SaveMode.Overwrite)                                               // v2 dynamic overwrite
+    Snapshots.commitPartitioned(Seq(("2025-01-01", "a", 4), ("2025-01-03", odd, 5))
+      .toDF("dt", "g", "k"), t, cols)                                            // v3 append
+    assert(Snapshots.compactFragmented(spark, t, maxBasesPerSpec = 1) == 4L)    // v4 rewrite
+    Snapshots.commitPartitioned(Seq(("2025-01-02", "b", 6, "e"))
+      .toDF("dt", "g", "k", "extra"), t, cols)                                   // v5 adds a column
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+
+    // answers pinned to what the per-commit union returned: data columns
+    // in manifest order, then the partition columns with inferred types
+    val now = Snapshots.read(spark, t)
+    assert(now.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("k" -> "int", "extra" -> "string", "dt" -> "date", "g" -> "string"))
+    assert(rows(now) == Seq("[1,null,2025-01-01,a]", "[2,null,2025-01-01,b]",
+      "[30,null,2025-01-02,a]", "[4,null,2025-01-01,a]", s"[5,null,2025-01-03,$odd]",
+      "[6,e,2025-01-02,b]"))
+    assert(Snapshots.read(spark, t, None, _("g") == odd)
+      .select($"k".as[Int]).collect().toSeq == Seq(5))
+    // time travel: older versions read under their own manifests
+    val v1 = Snapshots.read(spark, t, Some(1L))
+    assert(v1.columns.toSeq == Seq("k", "dt", "g"))
+    assert(rows(v1) == Seq("[1,2025-01-01,a]", "[2,2025-01-01,b]", "[3,2025-01-02,a]"))
+    assert(rows(Snapshots.read(spark, t, Some(3L))) == Seq("[1,2025-01-01,a]",
+      "[2,2025-01-01,b]", "[30,2025-01-02,a]", "[4,2025-01-01,a]", s"[5,2025-01-03,$odd]"))
+    // change feed v1 → v5: inserts span four commit dirs, deletes one
+    val c = Snapshots.changes(spark, t, 1L, 5L)
+    assert(c.columns.toSeq == Seq("k", "extra", "dt", "g", "_change_type"))
+    assert(rows(c) == Seq("[1,null,2025-01-01,a,delete]", "[1,null,2025-01-01,a,insert]",
+      "[3,null,2025-01-02,a,delete]", "[30,null,2025-01-02,a,insert]",
+      "[4,null,2025-01-01,a,insert]", s"[5,null,2025-01-03,$odd,insert]",
+      "[6,e,2025-01-02,b,insert]"))
+
+    // one scan however many commits: the latest read spans four commit
+    // dirs, and each side of the change feed is one scan of its own
+    assert(PlanScans.parquet(now) == 1)
+    assert(PlanScans.parquet(Snapshots.read(spark, t, Some(3L))) == 1)
+    assert(PlanScans.parquet(c) == 2)
+  }
+}
+
+object PlanScans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  /** Parquet file scans in `df`'s executed plan (AQE-aware). */
+  def parquet(df: org.apache.spark.sql.DataFrame): Int =
+    collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.fileFormat
+            .isInstanceOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] => s
+    }.size
 }
 
 /** Test-only FileSystem (scheme flaky://): local semantics, but the next
