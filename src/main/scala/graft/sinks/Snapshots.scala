@@ -1,8 +1,14 @@
 package graft.sinks
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
+import org.apache.hadoop.fs.viewfs.ViewFileSystem
+import org.apache.hadoop.hdfs.DistributedFileSystem
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.SqlBridge
+import org.apache.spark.sql.types.StructType
 
 /** Manifest-based snapshot isolation for plain parquet — the minimal core
   * of what a table format (Delta/Iceberg) provides on top of a file system:
@@ -37,6 +43,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * keeps are scanned as ONE parquet relation with `basePath` = `table/data`
   * (one file index, one scan — not a union of one relation per commit);
   * only those leaf dirs are listed, never `data/` itself.
+  *
+  * Every read lists the leaf dirs it names once, serially on the driver,
+  * and hands the listings to its file index: planning a read starts no
+  * Spark listing job however many dirs it names. The trade is one LIST
+  * per named dir on the driver; compaction keeps that count bounded.
   */
 object Snapshots {
 
@@ -1131,20 +1142,19 @@ object Snapshots {
     * later-added column read back null under the explicit schema; the
     * table's schema is the LAST committed one (a column dropped by the
     * latest commit is gone from reads — table semantics, not file
-    * semantics). Pre-schema manifests fall back to footer reconciliation. */
+    * semantics). Pre-schema manifests fall back to footer reconciliation.
+    * The named dirs are listed once, on the driver ([[scanLeafDirs]]). */
   private def readDirs(
       spark: SparkSession, dirs: Seq[String], schemaJson: Option[String]): DataFrame =
-    schemaJson match {
-      case Some(j) => spark.read.schema(structOf(j)).parquet(dirs: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-    }
+    scanLeafDirs(spark, dirs, schemaJson.map(structOf), Map.empty)
 
   /** Scan (commit base, spec) pairs of a partitioned table as ONE parquet
     * relation over exactly the `base/spec` leaf dirs the manifest names:
     * one file index and one scan however many commits the read spans, as
     * per-commit file indexes, plan branches and scan tasks would cost each
-    * small read more than its bytes. Only those leaf dirs are listed, never
-    * `data/` itself, so unpublished commit dirs stay invisible.
+    * small read more than its bytes. Only those leaf dirs are listed, once
+    * and on the driver ([[scanLeafDirs]]), never `data/` itself, so
+    * unpublished commit dirs stay invisible.
     *
     * `basePath` is the commit dirs' shared parent, `table/data` (every
     * writer puts its commit dir there; bases with different parents fail
@@ -1176,11 +1186,78 @@ object Snapshots {
     require(parents.size == 1,
       s"commit dirs do not share one data dir: ${parents.mkString(", ")}")
     val dataSchema = schemaJson.map(j =>
-      org.apache.spark.sql.types.StructType(structOf(j).filterNot(f => partCols.contains(f.name))))
-    val rd = spark.read.option("basePath", parents.head.toString)
-      .option("ignoreInvalidPartitionPaths", "true")
-    dataSchema.fold(rd.option("mergeSchema", "true"))(rd.schema)
-      .parquet(baseSpecs.map { case (base, spec) => s"$base/$spec" }.distinct: _*)
+      StructType(structOf(j).filterNot(f => partCols.contains(f.name))))
+    scanLeafDirs(spark, baseSpecs.map { case (base, spec) => s"$base/$spec" }, dataSchema,
+      Map("basePath" -> parents.head.toString, "ignoreInvalidPartitionPaths" -> "true"))
+  }
+
+  /** ONE parquet relation over exactly `dirs`, built as Spark's
+    * `DataSource` builds it — same file index, partition discovery and
+    * relation — except that the dirs are listed HERE, once each, serially
+    * on the driver. `DataSource` hands more than
+    * `parallelPartitionDiscovery.threshold` (32) dirs to a distributed
+    * listing job with one task per dir, which on a small read costs more
+    * than the bytes read; a manifest-resolved read names every dir up
+    * front, so the listings are handed to the index through a cache
+    * private to this read, and planning starts no Spark job. The trade:
+    * one serial LIST per named dir, a count compaction keeps bounded.
+    *
+    * The listing is Spark's: recursive below each dir, block locations
+    * kept, hidden and in-flight names (`_*`, `.*`, `*._COPYING_`) skipped
+    * by Spark's own rule. A missing dir fails the read. With no
+    * `dataSchema` (pre-schema manifests) the footers are reconciled with
+    * `mergeSchema`, as before. */
+  private def scanLeafDirs(
+      spark: SparkSession,
+      dirs: Seq[String],
+      dataSchema: Option[StructType],
+      options: Map[String, String]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val roots = dirs.map { d =>
+      val p = new Path(d)
+      p.getFileSystem(conf).makeQualified(p)
+    }.distinct
+    // Spark's own listing: HDFS and viewfs return block locations with the
+    // LIST; elsewhere each file's locations are asked for separately (no
+    // RPC on local or object stores), because the generic
+    // listLocatedStatus reads every local file's permissions by forking a
+    // shell
+    def located(f: FileSystem, st: FileStatus): FileStatus = st match {
+      case _: LocatedFileStatus => st
+      case _ =>
+        new LocatedFileStatus(st.getLen, false, st.getReplication, st.getBlockSize,
+          st.getModificationTime, 0, null, null, null,
+          if (st.isSymlink) st.getSymlink else null, st.getPath, false, false, false,
+          f.getFileBlockLocations(st, 0, st.getLen))
+    }
+    def leafFiles(f: FileSystem, dir: Path): Seq[FileStatus] = {
+      val kids = f match {
+        case _: DistributedFileSystem | _: ViewFileSystem =>
+          val it = f.listLocatedStatus(dir)
+          val b = Seq.newBuilder[FileStatus]
+          while (it.hasNext) b += it.next()
+          b.result()
+        case _ => f.listStatus(dir).toSeq
+      }
+      val (subdirs, files) = kids
+        .filterNot(st => SqlBridge.isHiddenPathName(st.getPath.getName))
+        .partition(_.isDirectory)
+      files.map(located(f, _)) ++ subdirs.flatMap(d => leafFiles(f, d.getPath))
+    }
+    val listed = roots.map(r => r -> leafFiles(r.getFileSystem(conf), r).toArray).toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val opts = if (dataSchema.isEmpty) options + ("mergeSchema" -> "true") else options
+    val index = new InMemoryFileIndex(spark, roots, opts, dataSchema, cache)
+    val format = new ParquetFileFormat
+    val schema = dataSchema.orElse(format.inferSchema(spark, opts, index.allFiles()))
+      .getOrElse(throw new IllegalStateException(
+        s"no parquet footer to infer a schema from under ${roots.mkString(", ")}"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      SqlBridge.asNullable(schema), None, format, opts)(spark))
   }
 
   /** Change data feed between two versions: every row added or removed going

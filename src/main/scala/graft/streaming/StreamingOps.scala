@@ -1118,7 +1118,10 @@ object StreamingOps {
 
   /** Reassemble documents from the chunk store: manifest rows of the
     * requested docs (doc-id-bucket pruned) joined to their chunks,
-    * re-ordered by chunk_idx. Returns (doc_id, text).
+    * re-ordered by chunk_idx. Returns (doc_id, text); requested ids whose
+    * buckets hold no manifest rows (never stored, or erased until the
+    * bucket emptied) are simply absent, and when no requested bucket is
+    * present the frame is empty.
     *
     * Manifest rows are DEDUPED first: a document RE-DELIVERED in a later
     * batch (new batchId, so the txn watermark correctly does not swallow
@@ -1133,21 +1136,31 @@ object StreamingOps {
       docIds: Option[Seq[Long]] = None,
       buckets: Int = 64): DataFrame = {
     import graft.sinks.Snapshots
-    val man = docIds match {
+    def assemble(man: DataFrame): DataFrame =
+      man.select(col("doc_id"), col("chunk_idx"), col("chunk_hash")).distinct()
+        .join(Snapshots.read(spark, chunkTable)
+          .select(col("chunk_hash"), col("ctext")), Seq("chunk_hash"))
+        .groupBy(col("doc_id"))
+        .agg(array_join(transform(
+          array_sort(collect_list(struct(col("chunk_idx"), col("ctext")))),
+          e => e.getField("ctext")), " ").as("text"))
+    docIds match {
+      case None => assemble(Snapshots.read(spark, manifestTable))
       case Some(ids) =>
         val bks = ids.map(i => (((i % buckets) + buckets) % buckets).toString).toSet
-        Snapshots.read(spark, manifestTable,
-            partitionFilter = spec => spec.get("dbucket").exists(bks))
-          .filter(col("doc_id").isin(ids: _*))
-      case None => Snapshots.read(spark, manifestTable)
+        val vs = Snapshots.versions(spark, manifestTable)
+        require(vs.nonEmpty, s"no snapshots at $manifestTable")
+        // explicit manifest probe, pinned to the version the read uses: a
+        // filter matching no spec fails the read, but here it only means
+        // that none of the requested documents is stored
+        if (!Snapshots.partitions(spark, manifestTable, Some(vs.last))
+            .exists(spec => Snapshots.parseSpec(spec).get("dbucket").exists(bks)))
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, text STRING"))
+        else assemble(Snapshots.read(spark, manifestTable, Some(vs.last),
+            spec => spec.get("dbucket").exists(bks))
+          .filter(col("doc_id").isin(ids: _*)))
     }
-    man.select(col("doc_id"), col("chunk_idx"), col("chunk_hash")).distinct()
-      .join(Snapshots.read(spark, chunkTable)
-        .select(col("chunk_hash"), col("ctext")), Seq("chunk_hash"))
-      .groupBy(col("doc_id"))
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("chunk_idx"), col("ctext")))),
-        e => e.getField("ctext")), " ").as("text"))
   }
 
   /** Right-to-be-forgotten for the content-addressed store: drop the

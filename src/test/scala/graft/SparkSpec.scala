@@ -26,4 +26,30 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** `body`'s result and the exact number of Spark jobs it started. Only
+    * jobs carrying this call's tag count (a local property, inherited by
+    * threads `body` spawns), and the listener bus is drained after `body`,
+    * so neither stray jobs nor late events skew the count. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobsDuring"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val prior = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, tag)
+    try {
+      val out = body
+      org.apache.spark.graftspec.Bus.drain(sc)
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty(key, prior)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -11,6 +11,14 @@ class SnapshotsSpec extends SparkSpec {
 
   private def tmp() = Files.createTempDirectory("graft-snap").toString + "/t"
 
+  /** Three appends of 40 `g` specs each: a latest read names 120 leaf
+    * dirs, well past Spark's 32-dir parallel-listing threshold. */
+  private def fortySpecsThreeCommits(t: String): Unit = (0 until 3).foreach { c =>
+    Snapshots.commitPartitioned(spark.range(c * 400, (c + 1) * 400)
+      .selectExpr("id", "CAST(id * 3 AS STRING) AS v", "CAST(id % 40 AS INT) AS g")
+      .coalesce(1), t, Seq("g"))
+  }
+
   test("append commits accumulate; every version stays readable (time travel)") {
     val t = tmp()
     val v1 = Snapshots.commit(Seq((1, "a"), (2, "b")).toDF("k", "v"), t)
@@ -677,6 +685,17 @@ class SnapshotsSpec extends SparkSpec {
     // overwritten to 10 rows, g=3 (10 rows) is the evolved commit's
     assert(all.count() == 287)
     assert(all.filter($"extra".isNull).count() == 277)
+    // 120 leaf dirs: still no footer, and one LIST per named leaf dir
+    // (plus the one of _manifests), never one of data/ itself
+    val wide = "cfs://" + tmp()
+    fortySpecsThreeCommits(wide)
+    CountingFs.opens.set(0)
+    CountingFs.lists.set(0)
+    val wf = Snapshots.read(spark, wide)
+    assert(CountingFs.opens.get() == 0,
+      s"120-leaf plan opened ${CountingFs.opens.get()} data files")
+    assert(CountingFs.lists.get() == 1 + 120, s"${CountingFs.lists.get()} LISTs")
+    assert(wf.count() == 1200)
   }
 
   test("partitioned and plain commits don't mix; specs decode hive escaping") {
@@ -742,6 +761,25 @@ class SnapshotsSpec extends SparkSpec {
     // evolution flows through the change feed too
     val c = Snapshots.changes(spark, t, 1L, 2L)
     assert(c.columns.contains("score"))
+    // pre-schema manifests (no recorded schema) reconcile the footers
+    // instead, on both table flavors, to the same answer
+    val tp = tmp()
+    Snapshots.commitPartitioned(Seq((1, "a", "x")).toDF("k", "v", "g"), tp, Seq("g"))
+    Snapshots.commitPartitioned(Seq((2, "b", 7.5, "y")).toDF("k", "v", "score", "g"), tp, Seq("g"))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (table <- Seq(t, tp); f <- new java.io.File(s"$table/_manifests").listFiles()
+        if f.getName.endsWith(".json")) {
+      val m = mapper.readTree(f).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      m.remove("schema")
+      mapper.writeValue(f, m)
+    }
+    val pre = Snapshots.read(spark, t)
+    assert(pre.columns.toSet == Set("k", "v", "score"))
+    assert(pre.select("k", "score").as[(Int, Option[Double])].collect().toMap == rows)
+    val preP = Snapshots.read(spark, tp)
+    assert(preP.columns.toSet == Set("k", "v", "score", "g"))
+    assert(preP.select("k", "score", "g").as[(Int, Option[Double], String)].collect().toSet ==
+      Set((1, None, "x"), (2, Some(7.5), "y")))
   }
 
   test("txn commits are idempotent: a replayed (app, batch) no-ops") {
@@ -954,6 +992,81 @@ class SnapshotsSpec extends SparkSpec {
     assert(PlanScans.parquet(now) == 1)
     assert(PlanScans.parquet(Snapshots.read(spark, t, Some(3L))) == 1)
     assert(PlanScans.parquet(c) == 2)
+  }
+
+  test("a read naming more than 32 leaf dirs starts no Spark job until its action") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def leaves(t: String, commits: Set[Int], glob: String) =
+      new java.io.File(s"$t/data").listFiles().toSeq
+        .filter(d => commits(d.getName.split('-')(1).toInt))
+        .flatMap(d => if (glob.isEmpty) Seq(d) else d.listFiles().toSeq.filter(_.getName.startsWith(glob)))
+        .map(_.getPath)
+    // partitioned: 3 commits x 40 specs = 120 leaf dirs, then a dynamic
+    // overwrite of every spec so both sides of the change feed are wide
+    val tp = tmp()
+    fortySpecsThreeCommits(tp)
+    Snapshots.commitPartitioned(spark.range(5000, 5040)
+      .selectExpr("id", "CAST(id * 3 AS STRING) AS v", "CAST(id % 40 AS INT) AS g")
+      .coalesce(1), tp, Seq("g"), SaveMode.Overwrite)
+    // unpartitioned: 40 commit dirs, then an overwrite
+    val tu = tmp()
+    (0 until 40).foreach(c => Snapshots.commit(
+      spark.range(c * 10, (c + 1) * 10).selectExpr("id", "CAST(id AS STRING) AS v").coalesce(1), tu))
+    Snapshots.commit(spark.range(900, 905).selectExpr("id", "CAST(id AS STRING) AS v"),
+      tu, SaveMode.Overwrite)
+
+    val ((p3, pc, u40, uIns, uDel), jobs) = jobsDuring((
+      Snapshots.read(spark, tp, Some(3L)),
+      Snapshots.changes(spark, tp, 3L, 4L), // deletes name 120 leaves, inserts 40
+      Snapshots.read(spark, tu, Some(40L)),
+      Snapshots.changes(spark, tu, 1L, 40L), // 39 inserted dirs
+      Snapshots.changes(spark, tu, 40L, 41L))) // 40 deleted dirs
+    assert(jobs == 0, s"$jobs Spark jobs before any action")
+
+    // each equals Spark's own reader over the same leaves
+    val ref = spark.read.option("basePath", new java.io.File(s"$tp/data").toURI.toString)
+      .option("ignoreInvalidPartitionPaths", "true").schema("id BIGINT, v STRING")
+      .parquet(leaves(tp, Set(1, 2, 3), "g="): _*)
+    assert(p3.columns.toSeq == Seq("id", "v", "g") && p3.columns.toSeq == ref.columns.toSeq)
+    assert(p3.schema("g").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(ref.schema("g").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(rows(p3) == rows(ref) && rows(p3).size == 1200)
+    assert(p3.inputFiles.sorted.toSeq == ref.inputFiles.sorted.toSeq)
+    val refDel = ref.withColumn("_change_type", lit("delete"))
+    val refIns = spark.read.option("basePath", new java.io.File(s"$tp/data").toURI.toString)
+      .option("ignoreInvalidPartitionPaths", "true").schema("id BIGINT, v STRING")
+      .parquet(leaves(tp, Set(4), "g="): _*).withColumn("_change_type", lit("insert"))
+    assert(pc.columns.toSeq == refDel.columns.toSeq)
+    assert(rows(pc) == rows(refDel.unionByName(refIns)) && rows(pc).size == 1240)
+    assert(pc.inputFiles.sorted.toSeq == refDel.unionByName(refIns).inputFiles.sorted.toSeq)
+
+    def plain(commits: Range) =
+      spark.read.schema("id BIGINT, v STRING").parquet(leaves(tu, commits.toSet, ""): _*)
+    assert(u40.columns.toSeq == Seq("id", "v"))
+    assert(rows(u40) == rows(plain(1 to 40)) && rows(u40).size == 400)
+    assert(u40.inputFiles.sorted.toSeq == plain(1 to 40).inputFiles.sorted.toSeq)
+    assert(rows(uIns) == rows(plain(2 to 40).withColumn("_change_type", lit("insert"))))
+    assert(uIns.inputFiles.sorted.toSeq == plain(2 to 40).inputFiles.sorted.toSeq)
+    assert(rows(uDel) == rows(plain(1 to 40).withColumn("_change_type", lit("delete"))
+      .unionByName(plain(41 to 41).withColumn("_change_type", lit("insert")))))
+  }
+
+  test("hidden and in-flight files in a leaf dir are skipped by the read") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def plant(dir: java.io.File): Unit = Seq("_junk", ".junk", "part-x._COPYING_").foreach(n =>
+      Files.write(new java.io.File(dir, n).toPath, "not parquet".getBytes("UTF-8")))
+    val tp = tmp()
+    Snapshots.commitPartitioned(spark.range(0, 30)
+      .selectExpr("id", "CAST(id % 3 AS STRING) AS g"), tp, Seq("g"))
+    val tu = tmp()
+    Snapshots.commit(spark.range(0, 30).toDF("id"), tu)
+    val (before, beforeU) = (rows(Snapshots.read(spark, tp)), rows(Snapshots.read(spark, tu)))
+    val commitDir = new java.io.File(s"$tp/data").listFiles().head
+    plant(new java.io.File(commitDir, "g=1"))
+    plant(new java.io.File(s"$tu/data").listFiles().head)
+    assert(rows(Snapshots.read(spark, tp)) == before && before.size == 30)
+    assert(rows(Snapshots.read(spark, tu)) == beforeU && beforeU.size == 30)
+    assert(Snapshots.read(spark, tp).inputFiles.forall(_.endsWith(".parquet")))
   }
 }
 

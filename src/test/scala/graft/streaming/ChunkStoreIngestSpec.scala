@@ -131,6 +131,36 @@ class ChunkStoreIngestSpec extends SparkSpec {
     } finally q2.stop()
   }
 
+  test("reconstruct of ids whose buckets hold nothing returns no row instead of failing the read") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore").toString
+    val (chunkT, manT) = (s"$dir/chunks", s"$dir/manifest")
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val q = StreamingOps.startChunkStoreIngest(
+      mem.toDF().toDF("doc_id", "text"), chunkT, manT, s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      mem.addData(Seq((1L, "first stored doc"), (2L, "second stored doc")))
+      q.processAllAvailable()
+    } finally q.stop()
+    def rec(ids: Seq[Long]) = StreamingOps.reconstruct(spark, manT, chunkT, Some(ids))
+    // 65 shares doc 1's bucket (64 buckets) but is not stored
+    assert(rec(Seq(1L, 65L)).as[(Long, String)].collect().toMap == Map(1L -> "first stored doc"))
+    // bucket 35 holds nothing; an empty id list names no bucket at all
+    for (ids <- Seq(Seq(99L), Nil)) {
+      val df = rec(ids)
+      assert(df.schema.map(f => f.name -> f.dataType.simpleString) ==
+        Seq("doc_id" -> "bigint", "text" -> "string"))
+      assert(df.isEmpty, s"reconstruct($ids)")
+    }
+    // an erased doc whose bucket emptied reads back as no row as well
+    StreamingOps.chunkStoreErase(spark, manT, chunkT, Seq(2L))
+    assert(!Snapshots.partitions(spark, manT).exists(_ == "dbucket=2"))
+    assert(rec(Seq(2L)).isEmpty)
+    assert(rec(Seq(1L, 2L)).as[(Long, String)].collect().toMap == Map(1L -> "first stored doc"))
+  }
+
   test("compaction cadence: buckets collapse to one file each, sidecar re-stamps, dedup and reconstruct unchanged") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore-compact").toString
