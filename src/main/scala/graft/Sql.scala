@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run ad-hoc SQL over the testdata tables (registered as temp
   * views) with the engine's custom functions/strategies available.
   * Usage: tools/run.sh graft.Sql "SELECT count(*) FROM lineitem"
@@ -10,13 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Sql {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = SessionFactory.builder("graft-sql", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.ops.DdbUnwrap.register(spark)
     graft.plans.AsOf.register(spark)

@@ -856,6 +856,15 @@ object Snapshots {
     }
   }
 
+  /** The hive specs a partitioned commit wrote: walks `depth` levels of
+    * k=v dirs under the (private, just-written) commit dir `base`. */
+  private def writtenSpecs(f: FileSystem, base: Path, depth: Int): Seq[String] =
+    if (depth == 0) Seq("")
+    else f.listStatus(base).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+      .flatMap(st => writtenSpecs(f, st.getPath, depth - 1)
+        .map(rest => if (rest.isEmpty) st.getPath.getName else s"${st.getPath.getName}/$rest"))
+
   /** Commit `df` hive-partitioned by `partitionBy` as the next version.
     *
     *  - `SaveMode.Append`: new files add to each touched partition.
@@ -888,15 +897,7 @@ object Snapshots {
     else {
       val base = f"$table/data/c-$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
       df.write.mode(SaveMode.ErrorIfExists).partitionBy(partitionBy: _*).parquet(base)
-      // discover the specs this commit wrote: walk partitionBy.length levels
-      // of k=v dirs under the (private, just-written) commit dir
-      def specs(p: Path, depth: Int): Seq[String] =
-        if (depth == 0) Seq("")
-        else f.listStatus(p).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .flatMap(st => specs(st.getPath, depth - 1)
-            .map(rest => if (rest.isEmpty) st.getPath.getName else s"${st.getPath.getName}/$rest"))
-      val touched = specs(new Path(base), partitionBy.length)
+      val touched = writtenSpecs(f, new Path(base), partitionBy.length)
       require(touched.nonEmpty, "commitPartitioned wrote no partitions (empty df?)")
       val prevParts = prevManifest.map { m =>
         require(m.dirs.isEmpty, s"$table is unpartitioned — use commit")
@@ -945,14 +946,8 @@ object Snapshots {
     else {
       val base = f"$table/data/c-$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
       df.write.mode(SaveMode.ErrorIfExists).partitionBy(partitionBy: _*).parquet(base)
-      def specs(p: Path, depth: Int): Seq[String] =
-        if (depth == 0) Seq("")
-        else f.listStatus(p).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-          .flatMap(st => specs(st.getPath, depth - 1)
-            .map(rest => if (rest.isEmpty) st.getPath.getName else s"${st.getPath.getName}/$rest"))
       val touched =
-        if (f.exists(new Path(base))) specs(new Path(base), partitionBy.length)
+        if (f.exists(new Path(base))) writtenSpecs(f, new Path(base), partitionBy.length)
         else Seq.empty // fully-empty df: parquet writes no directory at all
       val stray = touched.filterNot(replaced.contains)
       require(stray.isEmpty,

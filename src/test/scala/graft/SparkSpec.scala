@@ -13,6 +13,7 @@ object SparkSpec {
       .master("local[2]")
       .appName("graft-test")
       .withExtensions(new plans.GraftExtensions) // production wiring under test
+      .config(SessionFactory.localFileSystem) // likewise: file:// writes
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
