@@ -29,8 +29,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     bucket read, and REBUILDS distributedly — self-healing, never wrong.
   *
   * Hashing: double hashing h1 + i·h2 from two MurmurHash3 string seeds —
-  * deterministic across JVMs (no Random, no object identity). Default
-  * 2^23 bits (1 MiB) / 6 hashes ≈ 1.8% fp at one million digests.
+  * deterministic across JVMs (no Random, no object identity). Size: a
+  * rebuild allots 20-40 bits per stored digest with 6 hashes
+  * ([[sizedBits]] of twice the count), and the gate regrows the sidecar
+  * once the store has roughly doubled — a rebuild at 1,700 digests
+  * writes 8 KiB.
+  *
+  * Retention: [[write]] of version v deletes every published sidecar
+  * older than v - 1, so `_bloom/` holds at most the latest two (v - 1
+  * stays for [[graft.streaming.StreamingOps.chunkStoreMaintenanceRestamp]],
+  * which copies it to a compacted v). Only the latest is ever trusted.
   */
 final class DigestBloom(val bits: Array[Long], val k: Int) {
   private val m: Long = bits.length.toLong * 64L
@@ -75,35 +83,34 @@ final class DigestBloom(val bits: Array[Long], val k: Int) {
 }
 
 object DigestBloom {
-  val defaultBits: Int = 1 << 23
   val defaultK: Int = 6
   private val magic: Int = 0x47424c4d // "GBLM"
 
-  /** Bits for ~10 bits per stored digest (fp ≈ 0.8% at k=6), rounded up
-    * to a power of two and clamped to [`minBits`, 2^29] (64 MiB — a bloom
-    * bigger than that stops being a cheap sidecar). The committer calls
-    * this with the store's ACTUAL digest count at rebuild time, so the
-    * sidecar scales with the corpus instead of silently saturating at the
-    * fixed default (VERDICT r16 item 4). */
-  def sizedBits(n: Long, minBits: Int = defaultBits): Int = {
+  /** Bits for ~10 bits per digest (fp ≈ 0.8% at k=6), rounded up to a
+    * power of two and clamped to [64, 2^29] (one word; 64 MiB — a bloom
+    * bigger than that stops being a cheap sidecar). The committer passes
+    * TWICE the store's actual digest count at rebuild time, so the sidecar
+    * scales with the corpus and is carried forward until the store has
+    * roughly doubled (VERDICT r16 item 4). */
+  def sizedBits(n: Long): Int = {
     val target = 10L * math.max(1L, n)
     val pow = java.lang.Long.highestOneBit(target)
     val rounded = if (pow == target) target else pow << 1
-    math.min(1L << 29, math.max(minBits.toLong, rounded)).toInt
+    math.min(1L << 29, math.max(64L, rounded)).toInt
   }
 
-  def empty(mBits: Int = defaultBits, k: Int = defaultK): DigestBloom = {
+  def empty(mBits: Int, k: Int = defaultK): DigestBloom = {
     require(mBits % 64 == 0 && mBits > 0, "mBits must be a positive multiple of 64")
     new DigestBloom(new Array[Long](mBits / 64), k)
   }
 
   /** Distributed build over a digest column: one partial bloom per
-    * partition, OR-reduced — driver memory is one bloom (1 MiB default)
-    * regardless of corpus size. */
+    * partition, OR-reduced — driver memory is one bloom of `mBits` bits
+    * whatever the number of rows scanned. */
   def build(
       digests: DataFrame,
       col: String,
-      mBits: Int = defaultBits,
+      mBits: Int,
       k: Int = defaultK): DigestBloom = {
     val idx = digests.schema.fieldIndex(col)
     val partial = digests.queryExecution.toRdd // InternalRow scan, no row copies kept
@@ -122,6 +129,7 @@ object DigestBloom {
   private def dir(table: String) = new Path(s"$table/_bloom")
   private def path(table: String, v: Long) =
     new Path(dir(table), f"v-$v%05d")
+  private val Published = "v-(\\d+)".r
   private def fs(spark: SparkSession, table: String): FileSystem =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -157,8 +165,11 @@ object DigestBloom {
   }
 
   /** Publish the sidecar for version `v` (atomic rename, same discipline as
-    * manifest publish — readers never see a torn file). Best-effort: a
-    * failed write just means the next probe rebuilds. */
+    * manifest publish — readers never see a torn file), then delete every
+    * published sidecar older than `v - 1` with its `.crc`. In-flight
+    * `.tmp` files are never touched. Best-effort: a failed write just
+    * means the next probe rebuilds, and a sidecar deleted under a reader
+    * reads as None, the same fallback. */
   def write(spark: SparkSession, table: String, v: Long, bloom: DigestBloom): Unit = {
     val f = fs(spark, table)
     val tmp = new Path(dir(table), f".v-$v%05d.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
@@ -175,7 +186,12 @@ object DigestBloom {
       // sidecar there is for the SAME version so losing the race is fine,
       // but the tmp must not leak into _bloom/
       if (!f.rename(tmp, path(table, v))) f.delete(tmp, false)
-      ()
+      f.listStatus(dir(table)).map(_.getPath).foreach { p =>
+        p.getName match {
+          case Published(old) if old.toLong < v - 1 => f.delete(p, false)
+          case _ =>
+        }
+      }
     } catch { case scala.util.control.NonFatal(_) =>
       try f.delete(tmp, false) catch { case _: java.io.IOException => () } }
   }

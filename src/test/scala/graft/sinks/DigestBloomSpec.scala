@@ -53,14 +53,13 @@ class DigestBloomSpec extends SparkSpec {
     digests(40).foreach(half.add) // ~160/1024 → well under half
     assert(half.fillRatio < 0.2)
     // ~10 bits per digest, rounded up to a power of two
-    assert(DigestBloom.sizedBits(1000, minBits = 64) == 16384)
-    assert(DigestBloom.sizedBits(51, minBits = 64) == 512)
-    // floor: never below minBits (the shipped default for production)
-    assert(DigestBloom.sizedBits(5, minBits = 64) == 64)
-    assert(DigestBloom.sizedBits(5) == DigestBloom.defaultBits)
+    assert(DigestBloom.sizedBits(1000) == 16384)
+    assert(DigestBloom.sizedBits(51) == 512)
+    // floor: one 64-bit word
+    assert(DigestBloom.sizedBits(5) == 64)
     // ceiling: 2^29 bits — past that a sidecar stops being cheap
-    assert(DigestBloom.sizedBits(1L << 40, minBits = 64) == (1 << 29))
-    assert(DigestBloom.sizedBits(1 << 10, minBits = 64) == (1 << 14))
+    assert(DigestBloom.sizedBits(1L << 40) == (1 << 29))
+    assert(DigestBloom.sizedBits(1 << 10) == (1 << 14))
   }
 
   test("sidecar write/read round-trips; reads are version-exact") {
@@ -72,6 +71,19 @@ class DigestBloomSpec extends SparkSpec {
     assert(back.isDefined && back.get.k == 5 && back.get.bits.sameElements(b.bits))
     // a different version has no sidecar — the fallback signal
     assert(DigestBloom.read(spark, dir, 8L).isEmpty)
+  }
+
+  test("write keeps only the latest two published sidecars") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-prune").toString
+    val b = DigestBloom.empty(1 << 12, 5)
+    digests(20).foreach(b.add)
+    for (v <- 1L to 5L) DigestBloom.write(spark, dir, v, b)
+    val left = new java.io.File(s"$dir/_bloom").list().sorted.toSeq
+    assert(left == Seq(".v-00004.crc", ".v-00005.crc", "v-00004", "v-00005"),
+      s"_bloom/ holds ${left.mkString(",")}")
+    for (v <- 1L to 3L) assert(DigestBloom.read(spark, dir, v).isEmpty, s"v$v still readable")
+    for (v <- 4L to 5L)
+      assert(DigestBloom.read(spark, dir, v).exists(_.bits.sameElements(b.bits)), s"v$v lost")
   }
 
   test("corrupt or truncated sidecars read as None, never throw") {

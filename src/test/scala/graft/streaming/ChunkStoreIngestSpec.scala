@@ -301,11 +301,11 @@ class ChunkStoreIngestSpec extends SparkSpec {
     // at 100 TB a saturated bloom degrades to ~100% false positives,
     // never incorrect (FPs only cost extra bucket reads) but the probe
     // quietly stops pruning. The committer now refuses to carry a
-    // > 50%-full sidecar forward and rebuilds at ~10 bits per stored
-    // digest. This spec stamps a deliberately tiny SATURATED sidecar
-    // (valid: it contains every stored digest — no false negatives) and
-    // asserts the next commit rebuilds it bigger, un-saturated, with
-    // dedup exactness untouched.
+    // > 50%-full sidecar forward and rebuilds at 20-40 bits per stored
+    // digest (sized for twice the store). This spec stamps a deliberately
+    // tiny SATURATED sidecar (valid: it contains every stored digest —
+    // no false negatives) and asserts the next commit rebuilds it bigger,
+    // un-saturated, with dedup exactness untouched.
     import graft.sinks.DigestBloom
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore-bloom").toString
@@ -340,12 +340,15 @@ class ChunkStoreIngestSpec extends SparkSpec {
       val v2 = Snapshots.versions(spark, chunkT).last
       val rebuilt = DigestBloom.read(spark, chunkT, v2)
       assert(rebuilt.isDefined, "rebuild must stamp the new version")
-      assert(rebuilt.get.bits.length * 64 >= DigestBloom.defaultBits,
-        s"rebuilt sidecar still tiny: ${rebuilt.get.bits.length * 64} bits")
-      assert(rebuilt.get.fillRatio < 0.5, "rebuilt sidecar still saturated")
-      // no false negatives across the transition: every stored digest hits
       val stored = Snapshots.read(spark, chunkT)
         .select($"chunk_hash".as[String]).collect()
+      // regrown for twice the store: at least 20 bits per stored digest,
+      // so it starts at most ~26% full (k = 6)
+      assert(rebuilt.get.bits.length * 64L >= 20L * stored.length,
+        s"rebuilt sidecar still tiny: ${rebuilt.get.bits.length * 64} bits for ${stored.length} digests")
+      assert(rebuilt.get.fillRatio < 0.3, f"rebuilt sidecar fill ${rebuilt.get.fillRatio}%.3f")
+      assert(rebuilt.get.fillRatio < 0.5, "rebuilt sidecar still saturated")
+      // no false negatives across the transition: every stored digest hits
       assert(stored.forall(rebuilt.get.contains), "rebuild lost digests")
 
       // dedup exactness unchanged: re-delivering doc 1's body as a new doc
@@ -356,6 +359,55 @@ class ChunkStoreIngestSpec extends SparkSpec {
       assert(Snapshots.read(spark, chunkT).count() == preCount,
         "dedup broke after the sidecar rebuild")
     } finally q.stop()
+  }
+
+  test("digest bloom sidecar stays sized to the store and trusted; _bloom/ keeps only the latest two") {
+    // The sidecar grows geometrically with the store instead of sitting
+    // at a fixed size, and each publish deletes the sidecars older than
+    // its predecessor, so `_bloom/` is bounded by the live store, not by
+    // the commit count. Four buckets make every batch touch every bucket,
+    // so compactEvery = 2 really compacts and the in-band re-stamp runs.
+    import graft.sinks.DigestBloom
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore-sidecars").toString
+    val (chunkT, manT) = (s"$dir/chunks", s"$dir/manifest")
+    val shared = (1 to 200).map(i => s"shared$i").mkString(" ")
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)]
+    val q = StreamingOps.startChunkStoreIngest(
+      mem.toDF().toDF("doc_id", "text"), chunkT, manT, s"$dir/ckpt",
+      buckets = 4, compactEvery = 2,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val nBatches = 10
+    val widths = scala.collection.mutable.ArrayBuffer.empty[Int]
+    try {
+      for (b <- 0 until nBatches) {
+        // a growing novel document beside a re-delivered shared one
+        val fresh = (1 to 100 * (b + 1)).map(i => s"b${b}w$i").mkString(" ")
+        mem.addData(Seq((2L * b, fresh), (2L * b + 1, shared)))
+        q.processAllAvailable()
+        val v = Snapshots.versions(spark, chunkT).last
+        val sidecar = DigestBloom.read(spark, chunkT, v)
+        assert(sidecar.isDefined, s"batch $b: no trusted sidecar at the latest version $v")
+        val stored = Snapshots.read(spark, chunkT).select($"chunk_hash".as[String]).collect()
+        assert(stored.forall(sidecar.get.contains), s"batch $b: sidecar misses a stored digest")
+        val bits = sidecar.get.bits.length * 64L
+        assert(bits <= math.max(64L, 40L * stored.length),
+          s"batch $b: $bits bits for ${stored.length} stored digests")
+        widths += sidecar.get.bits.length
+      }
+    } finally q.stop()
+    val vs = Snapshots.versions(spark, chunkT)
+    assert(vs.size > nBatches, s"no compaction ran in ${vs.size} versions")
+    assert(widths.distinct.size > 1, s"the sidecar never regrew: ${widths.mkString(",")} words")
+    val names = new java.io.File(s"$chunkT/_bloom").list().toSeq.sorted
+    val published = names.filter(_.matches("v-\\d+"))
+    assert(published.size <= 2 && published.last == f"v-${vs.last}%05d",
+      s"_bloom/ holds ${names.mkString(",")} at version ${vs.last}")
+    assert(names.filterNot(published.contains).toSet == published.map(p => s".$p.crc").toSet,
+      s"_bloom/ holds more than the published sidecars' checksums: ${names.mkString(",")}")
+    val docs = StreamingOps.reconstruct(spark, manT, chunkT).as[(Long, String)].collect().toMap
+    assert(docs.size == 2 * nBatches && docs(1L) == norm(shared))
   }
 
   test("writer lease enforces erase-vs-live-ingest exclusion: refusal is loud, retry after release is clean") {
