@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
 import org.apache.hadoop.fs.viewfs.ViewFileSystem
 import org.apache.hadoop.hdfs.DistributedFileSystem
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.SqlBridge
@@ -48,6 +48,10 @@ import org.apache.spark.sql.types.StructType
   * and hands the listings to its file index: planning a read starts no
   * Spark listing job however many dirs it names. The trade is one LIST
   * per named dir on the driver; compaction keeps that count bounded.
+  *
+  * The streaming gates read their state through [[readProbedOrEmpty]]: the
+  * specs whose key a micro-batch probes, at one resolved version, or an
+  * empty frame of the gate's columns when no spec can match.
   */
 object Snapshots {
 
@@ -1028,12 +1032,8 @@ object Snapshots {
   }
 
   /** Partition specs of a snapshot, ascending (empty for unpartitioned). */
-  def partitions(spark: SparkSession, table: String, version: Option[Long] = None): Seq[String] = {
-    val f = fs(spark, table)
-    val vs = versions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    readManifest(f, table, version.getOrElse(vs.last)).partitions.keys.toSeq.sorted
-  }
+  def partitions(spark: SparkSession, table: String, version: Option[Long] = None): Seq[String] =
+    manifestAt(spark, table, versions(spark, table), version)._2.partitions.keys.toSeq.sorted
 
   /** Hive/URI-style percent-DECODE: `%XX` byte runs decode as UTF-8, '+'
     * stays LITERAL, malformed escapes pass through verbatim. URLDecoder is
@@ -1081,6 +1081,16 @@ object Snapshots {
   /** A partitioned manifest's partition columns, in path order. */
   private def partColumns(m: Manifest): Seq[String] = specColumns(m.partitions.keys.head)
 
+  /** The retained version `version` names (default: the latest of `vs`,
+    * the table's listed versions) and its parsed manifest. */
+  private def manifestAt(
+      spark: SparkSession, table: String, vs: Seq[Long], version: Option[Long]): (Long, Manifest) = {
+    require(vs.nonEmpty, s"no snapshots at $table")
+    val v = version.getOrElse(vs.last)
+    require(vs.contains(v), s"version $v not in $vs")
+    (v, readManifest(fs(spark, table), table, v))
+  }
+
   /** Read a snapshot: the latest version by default, or any retained one.
     *
     * For partitioned tables, `partitionFilter` prunes BEFORE any file I/O:
@@ -1094,12 +1104,49 @@ object Snapshots {
       table: String,
       version: Option[Long] = None,
       partitionFilter: Map[String, String] => Boolean = _ => true): DataFrame = {
-    val f = fs(spark, table)
-    val vs = versions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v not in $vs")
-    val m = readManifest(f, table, v)
+    val (v, m) = manifestAt(spark, table, versions(spark, table), version)
+    scan(spark, table, v, m, partitionFilter)
+  }
+
+  /** A streaming gate's state read: the rows of `table`'s specs whose `key`
+    * value is in `probed`, at `version` (default: the latest), projected
+    * and cast to `columns` (nullable, as every file read is). When nothing
+    * can match it is an empty frame typed `columns` instead: `probed` is
+    * empty (no file is touched), the table has no version, or no spec of
+    * the resolved version has its `key` in `probed` (an unpartitioned
+    * table has no spec). Either way the caller applies one projection to
+    * the result.
+    *
+    * `_manifests` is listed and the manifest parsed once, and the read is
+    * pinned to the version the probe resolved, so a commit landing between
+    * the probe and the read cannot make the filter match nothing. A read
+    * error (say, a leaf dir the manifest names is gone) still throws: an
+    * unreadable state table must fail the batch, never pass as empty. */
+  def readProbedOrEmpty(
+      spark: SparkSession,
+      table: String,
+      key: String,
+      probed: Set[String],
+      columns: StructType,
+      version: Option[Long] = None): DataFrame = {
+    val inProbe: Map[String, String] => Boolean = _.get(key).exists(probed)
+    val vs = if (probed.isEmpty) Nil else versions(spark, table)
+    Option.when(vs.nonEmpty)(manifestAt(spark, table, vs, version))
+      .filter { case (_, m) => m.partitions.keys.exists(spec => inProbe(parseSpec(spec))) }
+      .map { case (v, m) => scan(spark, table, v, m, inProbe).select(
+        SqlBridge.asNullable(columns).map(c =>
+          org.apache.spark.sql.functions.col(c.name).cast(c.dataType).as(c.name)): _*) }
+      .getOrElse(spark.createDataFrame(java.util.List.of[Row](), columns))
+  }
+
+  /** The scan of manifest `m` (version `v` of `table`), pruned by
+    * `partitionFilter` for partitioned tables. */
+  private def scan(
+      spark: SparkSession,
+      table: String,
+      v: Long,
+      m: Manifest,
+      partitionFilter: Map[String, String] => Boolean): DataFrame =
     if (m.dirs.isEmpty && m.partitions.isEmpty) {
       // A versioned-but-EMPTY snapshot: commitPartitionReplace can legally
       // erase every spec (full GDPR erase of a small table), after which
@@ -1110,9 +1157,7 @@ object Snapshots {
       val schemaJson = m.schema.getOrElse(
         throw new IllegalStateException(
           s"$table v$v is empty and records no schema (pre-schema manifest)"))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], structOf(schemaJson))
     } else if (m.partitions.isEmpty) readDirs(spark, m.dirs, m.schema)
     else {
       val kept = m.partitions.filter { case (spec, _) => partitionFilter(parseSpec(spec)) }
@@ -1121,7 +1166,6 @@ object Snapshots {
         kept.toSeq.flatMap { case (spec, bases) => bases.map((_, spec)) },
         m.schema, partColumns(m))
     }
-  }
 
   private def structOf(json: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(json)

@@ -698,6 +698,61 @@ class SnapshotsSpec extends SparkSpec {
     assert(wf.count() == 1200)
   }
 
+  test("readProbedOrEmpty: typed empty frame with no job when nothing can match, else the pruned read at one version; a read error throws") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    spark.sparkContext.hadoopConfiguration.set("fs.cfs.impl", classOf[CountingFs].getName)
+    val cols = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING")
+    val local = tmp()
+    val t = "cfs://" + local
+    // (result, Spark jobs, LISTs) of one probed read of `t` on key `g`
+    def probe(probed: Set[String], version: Option[Long] = None) = {
+      CountingFs.lists.set(0)
+      val (df, jobs) = jobsDuring(Snapshots.readProbedOrEmpty(spark, t, "g", probed, cols, version))
+      (df, jobs, CountingFs.lists.get())
+    }
+    def assertTypedEmpty(df: org.apache.spark.sql.DataFrame, jobs: Int, what: String): Unit = {
+      assert(df.schema == cols, s"$what: ${df.schema}")
+      assert(jobs == 0, s"$what: $jobs Spark jobs")
+      assert(df.isEmpty, what)
+    }
+    // (a) a table with no version
+    val (a, aJobs, _) = probe(Set("1"))
+    assertTypedEmpty(a, aJobs, "no version")
+    // one commit of three specs g=0, g=1, g=2
+    Snapshots.commitPartitioned(spark.range(0, 30)
+      .selectExpr("id", "CAST(id * 3 AS STRING) AS v", "CAST(id % 3 AS STRING) AS g")
+      .coalesce(1), t, Seq("g"))
+    // (b) an empty probe touches no file
+    val (b, bJobs, bLists) = probe(Set.empty)
+    assertTypedEmpty(b, bJobs, "empty probe")
+    assert(bLists == 0, s"empty probe made $bLists LISTs")
+    // (c) a probe matching no spec
+    val (c, cJobs, _) = probe(Set("7"))
+    assertTypedEmpty(c, cJobs, "probe matching no spec")
+    // (d) a probe matching 1 of 3 specs: the pruned read's rows, one LIST
+    // of _manifests and one of the matching leaf dir
+    val (d, dJobs, dLists) = probe(Set("1"))
+    assert(dJobs == 0, s"$dJobs Spark jobs")
+    assert(dLists == 2, s"$dLists LISTs")
+    assert(d.schema.map(f => f.name -> f.dataType) == cols.map(f => f.name -> f.dataType))
+    val pruned = Snapshots.read(spark, t, partitionFilter = _.get("g").contains("1"))
+    assert(rows(d) == rows(pruned.select("id", "v")) && rows(d).size == 10)
+    // (e) pinned to version 1 after a later commit: version 1's rows only
+    Snapshots.commitPartitioned(spark.range(30, 60)
+      .selectExpr("id", "CAST(id * 3 AS STRING) AS v", "CAST(id % 3 AS STRING) AS g")
+      .coalesce(1), t, Seq("g"))
+    val (e, _, _) = probe(Set("1"), Some(1L))
+    assert(rows(e) == rows(d))
+    assert(probe(Set("1"))._1.count() == 20)
+    // (f) a matching spec whose leaf dir is gone fails the read, never
+    // passes as an empty state
+    new java.io.File(s"$local/data").listFiles().foreach(commit =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(commit, "g=2")))
+    intercept[java.io.FileNotFoundException] {
+      Snapshots.readProbedOrEmpty(spark, t, "g", Set("2"), cols).collect()
+    }
+  }
+
   test("partitioned and plain commits don't mix; specs decode hive escaping") {
     val t = tmp()
     Snapshots.commitPartitioned(Seq(("x y", 1)).toDF("g", "k"), t, Seq("g"))

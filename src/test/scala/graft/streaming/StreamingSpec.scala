@@ -230,6 +230,42 @@ class StreamingOpsSpec extends SparkSpec {
     assert(graft.sinks.Snapshots.read(spark, table).count() == 3) // no dup rows
   }
 
+  test("an empty micro-batch publishes no version from the snapshot sink or the chunk store") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-emptybatch").toString
+    val (table, chunkT, manT) = (s"$dir/t", s"$dir/chunks", s"$dir/manifest")
+    val rows = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    val docs = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    val sink = StreamingOps.startSnapshotSink(
+      rows.toDF().toDF("k", "v"), table, s"$dir/ckpt-sink", appId = "ingest-empty",
+      trigger = Trigger.ProcessingTime(0))
+    val store = StreamingOps.startChunkStoreIngest(
+      docs.toDF().toDF("doc_id", "text"), chunkT, manT, s"$dir/ckpt-store",
+      trigger = Trigger.ProcessingTime(0))
+    def versions(tables: String*) = tables.map(graft.sinks.Snapshots.versions(spark, _))
+    // an offset that carries no rows still runs, as micro-batch 1
+    def emptyBatch(q: org.apache.spark.sql.streaming.StreamingQuery,
+        push: => Unit, ckpt: String, tables: String*): Unit = {
+      val before = versions(tables: _*)
+      assert(before.forall(_.nonEmpty))
+      push
+      q.processAllAvailable()
+      assert(new java.io.File(s"$dir/$ckpt/commits/1").exists, s"$ckpt ran no batch 1")
+      assert(versions(tables: _*) == before, s"$ckpt published a version")
+    }
+    try {
+      rows.addData((1L, "a"))
+      docs.addData((1L, "one stored document"))
+      sink.processAllAvailable()
+      store.processAllAvailable()
+      emptyBatch(sink, rows.addData(Seq.empty[(Long, String)]), "ckpt-sink", table)
+      emptyBatch(store, docs.addData(Seq.empty[(Long, String)]), "ckpt-store", chunkT, manT)
+    } finally {
+      sink.stop()
+      store.stop()
+    }
+  }
+
   test("crash replay: die after table commit, before checkpoint; restart is exactly-once") {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft-crashreplay").toString
