@@ -18,9 +18,10 @@ import org.apache.spark.sql.types._
   * per (partition, group), with the NO_FALSE_NEGATIVES guarantee: no true
   * heavy hitter can be missed, and every estimate carries [lb, ub] bounds.
   *
-  * Completes the mergeable-sketch quartet next to [[ThetaSketchAggregate]]
-  * (set ops), [[KllSketchAggregate]] (quantiles), and the built-in
-  * DataSketches HLL (count-distinct).
+  * Completes the mergeable-sketch quartet next to Spark's built-in
+  * DataSketches theta (`theta_sketch_agg`, set ops), KLL
+  * (`kll_sketch_agg_*`, quantiles) and HLL (count-distinct) aggregates,
+  * none of which covers frequent items.
   */
 case class FreqSketchAggregate(
     child: Expression,

@@ -4,23 +4,27 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{col, udaf, udf}
+import org.apache.spark.sql.functions.{udaf, udf}
 import org.apache.spark.util.sketch.{BloomFilter, CountMinSketch}
 
-/** Bloom and count-min sketches as GROUPED Spark aggregates.
+/** Bloom sketches as a GROUPED Spark aggregate, plus probe helpers for
+  * serialized bloom and count-min sketch columns.
   *
-  * `df.stat.bloomFilter`/`countMinSketch` build one whole-DataFrame sketch
-  * through an RDD aggregate; these expose the same sketches as ordinary
-  * aggregate COLUMNS, so they compose with `groupBy` — one sketch per
-  * group/partition/file — and ride the normal two-phase hash aggregate
+  * `df.stat.bloomFilter` builds one whole-DataFrame sketch through an RDD
+  * aggregate; `bloom_agg` exposes the same sketch as an ordinary aggregate
+  * COLUMN, so it composes with `groupBy` — one sketch per
+  * group/partition/file — and rides the normal two-phase hash aggregate
   * (object buffers live un-serialized inside ObjectHashAggregate; the
   * encoder only runs at shuffle/spill boundaries, so `reduce` is a plain
-  * in-memory `put` per row).
+  * in-memory `put` per row). Spark's `bloom_filter_agg` does not resolve as
+  * a function in 4.1, hence this one.
   *
   * That grouping is what a lakehouse needs sketches for: per-FILE blooms in
   * a stats manifest ([[graft.sinks.FileStats.collectWithBloom]]) prune
-  * point lookups the way zone maps prune ranges, and per-group CMS gives
-  * bounded-memory frequency summaries per partition.
+  * point lookups the way zone maps prune ranges. Count-min sketches come
+  * from the built-in `functions.count_min_sketch`, whose bytes are
+  * `CountMinSketch.writeTo` output — [[cmsFromBytes]] and [[cms_estimate]]
+  * read them.
   *
   * Keys are fed as STRINGS (cast upstream): one canonical representation
   * means the build and every later probe hash identically — the same rule
@@ -45,33 +49,10 @@ object SketchAggregates {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  private class CmsAgg(eps: Double, confidence: Double, seed: Int)
-      extends Aggregator[String, CountMinSketch, Array[Byte]] {
-    def zero: CountMinSketch = CountMinSketch.create(eps, confidence, seed)
-    def reduce(b: CountMinSketch, a: String): CountMinSketch = {
-      if (a != null) b.addString(a)
-      b
-    }
-    def merge(x: CountMinSketch, y: CountMinSketch): CountMinSketch = x.mergeInPlace(y)
-    def finish(b: CountMinSketch): Array[Byte] = {
-      val out = new ByteArrayOutputStream()
-      b.writeTo(out)
-      out.toByteArray
-    }
-    def bufferEncoder: Encoder[CountMinSketch] = Encoders.javaSerialization[CountMinSketch]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
   /** Serialized Bloom filter over the group's (string-cast, non-null)
     * keys. ~`1.2·expected·log2(1/fpp)` bits per group regardless of rows. */
   def bloom_agg(key: Column, expected: Long = 1000000L, fpp: Double = 0.01): Column =
     udaf(new BloomAgg(expected, fpp)).apply(key.cast("string"))
-
-  /** Serialized count-min sketch over the group's keys: estimates
-    * overcount by at most eps·N with the given confidence. */
-  def cms_agg(key: Column, eps: Double = 0.001, confidence: Double = 0.99,
-      seed: Int = 42): Column =
-    udaf(new CmsAgg(eps, confidence, seed)).apply(key.cast("string"))
 
   def bloomFromBytes(bytes: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(bytes))

@@ -63,7 +63,7 @@ object Sketches {
     // both the CMS build and the estimate lookups see strings
     val keyed = df.select(col(keyCol).cast("string").as("k"))
     val bytes = keyed
-      .agg(graft.functions.SketchAggregates.cms_agg(col("k"), eps, confidence))
+      .agg(count_min_sketch(col("k"), lit(eps), lit(confidence), lit(42)))
       .head().getAs[Array[Byte]](0)
     val cmsBc = df.sparkSession.sparkContext.broadcast(
       graft.functions.SketchAggregates.cmsFromBytes(bytes))

@@ -200,43 +200,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           Cast(exprs(0), DoubleType), Cast(exprs(1), LongType),
           litInt(exprs(2), "top_k k"))
       }))
-
-    e.injectFunction((FunctionIdentifier("theta_sketch"),
-      new ExpressionInfo(classOf[graft.functions.ThetaSketchAggregate].getName,
-        "theta_sketch"),
-      (exprs: Seq[Expression]) => {
-        arity("theta_sketch", exprs, 1, 2)
-        graft.functions.ThetaSketchAggregate(
-          exprs.head,
-          if (exprs.size > 1) litInt(exprs(1), "theta_sketch lgK") else 14)
-      }))
-
-    e.injectFunction((FunctionIdentifier("theta_estimate"),
-      new ExpressionInfo(classOf[graft.functions.ThetaEstimate].getName,
-        "theta_estimate"),
-      (exprs: Seq[Expression]) => {
-        arity("theta_estimate", exprs, 1)
-        graft.functions.ThetaEstimate(exprs.head)
-      }))
-
-    e.injectFunction((FunctionIdentifier("kll_sketch"),
-      new ExpressionInfo(classOf[graft.functions.KllSketchAggregate].getName,
-        "kll_sketch"),
-      (exprs: Seq[Expression]) => {
-        arity("kll_sketch", exprs, 1, 2)
-        graft.functions.KllSketchAggregate(
-          Cast(exprs.head, DoubleType),
-          if (exprs.size > 1) litInt(exprs(1), "kll_sketch k") else 200)
-      }))
-
-    e.injectFunction((FunctionIdentifier("kll_quantile"),
-      new ExpressionInfo(classOf[graft.functions.KllQuantile].getName,
-        "kll_quantile"),
-      (exprs: Seq[Expression]) => {
-        arity("kll_quantile", exprs, 2)
-        graft.functions.KllQuantile(
-          exprs(0), Cast(exprs(1), DoubleType))
-      }))
   }
 }
 

@@ -2821,23 +2821,21 @@ object ExtensionBattery {
         |FROM st a JOIN st b ON a.c = b.c AND a.status < b.status
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       import s.implicits._
-      import graft.functions.ThetaSketch
-      // lgK=16: exact until 65k distinct customers per status (~sf0.45) —
-      // thick headroom over the default 14's 16k (~sf0.11), at 512KB/group
+      import graft.functions.ExactRegime
+      // lgK=16: exact until 65k distinct customers per status (~sf0.45)
       val sk = Tables.orders(s, d)
         .groupBy($"o_orderstatus".as("status"))
-        .agg(ThetaSketch.theta_sketch_agg($"o_custkey", lgK = 16).as("sk"))
-      // exactIntersection GUARDS the exact-regime precondition (theta == 1
+        .agg(theta_sketch_agg($"o_custkey", 16).as("sk"))
+      // ExactRegime.theta GUARDS the exact-regime precondition (theta == 1
       // on both inputs): a scale bump past 2^lgK distinct customers fails
       // loudly here, never as a silent oracle hash mismatch.
-      val ix = udf((x: Array[Byte], y: Array[Byte]) =>
-        ThetaSketch.exactIntersection(x, y))
       // pairs side is |statuses|² rows of KB sketches — broadcast-trivial
       sk.toDF("status_a", "sk_a")
         .crossJoin(broadcast(sk.toDF("status_b", "sk_b")))
         .filter($"status_a" < $"status_b")
         .select($"status_a", $"status_b",
-          ix($"sk_a", $"sk_b").as("est_shared_customers"))
+          theta_sketch_estimate(theta_intersection(
+            ExactRegime.theta($"sk_a"), ExactRegime.theta($"sk_b"))).cast("double").as("est_shared_customers"))
         .orderBy($"status_a", $"status_b")
     },
 
@@ -2847,7 +2845,7 @@ object ExtensionBattery {
     // "how much do sources A and B share?" answered from the 20 sketches
     // alone. At 100 TB the alternative is a shingle self-join PER PAIR;
     // here it is |S|² intersections of broadcast-sized sketches. Exact
-    // regime (exactIntersection guards theta == 1 loudly): distinct
+    // regime (ExactRegime.theta guards theta == 1 loudly): distinct
     // shingles per source stay under 2^16 through sf0.1 (~36k at sf0.1,
     // 20× headroom at sf0.01). Oracle = the quadratic distinct-shingle
     // join; only overlapping pairs are reported (est is exactly integral
@@ -2866,7 +2864,7 @@ object ExtensionBattery {
         |FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.source < b.source
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       import s.implicits._
-      import graft.functions.ThetaSketch
+      import graft.functions.ExactRegime
       val shingles = Tables.documents(s, d)
         .withColumn("toks", filter(split(lower($"text"), "\\s+"), w => length(w) > 0))
         .filter(size($"toks") >= 8)
@@ -2874,14 +2872,13 @@ object ExtensionBattery {
           transform(sequence(lit(1), size($"toks") - 7),
             i => array_join(slice($"toks", i, lit(8)), " "))).as("shingle"))
       val sk = shingles.groupBy($"source")
-        .agg(ThetaSketch.theta_sketch_agg($"shingle", lgK = 16).as("sk"))
-      val ix = udf((x: Array[Byte], y: Array[Byte]) =>
-        ThetaSketch.exactIntersection(x, y))
+        .agg(theta_sketch_agg($"shingle", 16).as("sk"))
       sk.toDF("source_a", "sk_a")
         .crossJoin(broadcast(sk.toDF("source_b", "sk_b")))
         .filter($"source_a" < $"source_b")
         .select($"source_a", $"source_b",
-          ix($"sk_a", $"sk_b").as("est_shared_shingles"))
+          theta_sketch_estimate(theta_intersection(
+            ExactRegime.theta($"sk_a"), ExactRegime.theta($"sk_b"))).cast("double").as("est_shared_shingles"))
         .filter($"est_shared_shingles" > 0)
         .orderBy($"source_a", $"source_b")
     },
@@ -2943,18 +2940,18 @@ object ExtensionBattery {
         |    WHERE text NOT IN (SELECT text FROM documents WHERE doc_id < 10))
         |  AS DOUBLE) AS est_clean_docs""".stripMargin) { (s, d) =>
       import s.implicits._
-      import graft.functions.ThetaSketch
+      import graft.functions.ExactRegime
       val docs = Tables.documents(s, d)
       // lgK=16: exact until 65k distinct texts (sf1-scale corpus headroom)
-      val corpus = docs.agg(ThetaSketch.theta_sketch_agg($"text", lgK = 16).as("sk_corpus"))
+      val corpus = docs.agg(theta_sketch_agg($"text", 16).as("sk_corpus"))
       val eval_ = docs.filter($"doc_id" < 10)
-        .agg(ThetaSketch.theta_sketch_agg($"text", lgK = 16).as("sk_eval"))
+        .agg(theta_sketch_agg($"text", 16).as("sk_eval"))
       // guarded exact-regime A\B — same loud-failure contract as
-      // q_theta_overlap's exactIntersection
-      val anb = udf((a: Array[Byte], b: Array[Byte]) =>
-        ThetaSketch.exactANotB(a, b))
+      // q_theta_overlap
       corpus.crossJoin(broadcast(eval_))
-        .select(anb($"sk_corpus", $"sk_eval").as("est_clean_docs"))
+        .select(theta_sketch_estimate(theta_difference(
+          ExactRegime.theta($"sk_corpus"), ExactRegime.theta($"sk_eval")))
+          .cast("double").as("est_clean_docs"))
     },
 
     // Frequent-items sketch (Misra-Gries): mergeable heavy hitters. The
@@ -2990,9 +2987,9 @@ object ExtensionBattery {
     // the exact regime: per (returnflag, ship-month) group sizes are ~240
     // at sf0.01 and ~28k at sf1, all under k=65535, so the sketch never
     // compacts and its INCLUSIVE quantiles ARE percentile_disc order
-    // statistics; exactQuantiles GUARDS that precondition (throws past it —
-    // no silent flip to approximate under a scale bump). The approximate
-    // regime's rank-error bound stays pinned in KllSketchSpec.
+    // statistics; ExactRegime.kllQuantiles GUARDS that precondition (raises
+    // past it — no silent flip to approximate under a scale bump). The
+    // approximate regime's rank-error bound stays pinned in KllSketchSpec.
     sql("q_kll_quantiles",
       """SELECT l_returnflag, strftime(l_shipdate, '%Y-%m') AS ship_month,
         |  round(percentile_disc(0.25) WITHIN GROUP (ORDER BY l_extendedprice), 4) AS p25_est,
@@ -3000,14 +2997,14 @@ object ExtensionBattery {
         |  round(percentile_disc(0.9)  WITHIN GROUP (ORDER BY l_extendedprice), 4) AS p90_est
         |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, d) =>
       import s.implicits._
-      import graft.functions.KllSketch
-      val qs = udf((b: Array[Byte]) =>
-        KllSketch.exactQuantiles(b, Array(0.25, 0.5, 0.9)))
+      import graft.functions.ExactRegime
+      val k = 65535
       Tables.lineitem(s, d)
         .groupBy($"l_returnflag",
           date_format($"l_shipdate", "yyyy-MM").as("ship_month"))
-        .agg(KllSketch.kll_sketch_agg($"l_extendedprice", 65535).as("sk"))
-        .select($"l_returnflag", $"ship_month", qs($"sk").as("q"))
+        .agg(kll_sketch_agg_double($"l_extendedprice", k).as("sk"))
+        .select($"l_returnflag", $"ship_month",
+          ExactRegime.kllQuantiles($"sk", k, 0.25, 0.5, 0.9).as("q"))
         .select($"l_returnflag", $"ship_month",
           round($"q"(0), 4).as("p25_est"),
           round($"q"(1), 4).as("p50_est"),

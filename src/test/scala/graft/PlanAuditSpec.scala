@@ -140,14 +140,14 @@ class PlanAuditSpec extends SparkSpec {
   test("source-overlap sketches partial-aggregate; pairwise stage broadcasts") {
     // q_source_overlap_matrix's scale contract: the shingle stream collapses
     // to one sketch buffer per (partition, source) BEFORE the exchange
-    // (TypedImperativeAggregate → ObjectHashAggregate partial/final), and
+    // (built-in theta_sketch_agg → ObjectHashAggregate partial/final), and
     // the |S|² pairwise stage joins KB-sized sketches via broadcast — the
     // corpus never shuffles for the matrix.
     val q = SparkEntry.queries("q_source_overlap_matrix")(spark, sf)
     q.collect() // finalize the adaptive plan
     val plan = q.queryExecution.executedPlan.toString
     val objAggs = plan.linesIterator.count(_.contains("ObjectHashAggregate"))
-    assert(objAggs >= 2 && plan.contains("partial_theta_sketch"),
+    assert(objAggs >= 2 && plan.contains("partial_theta_sketch_agg"),
       s"expected partial+final sketch aggregation around the shuffle:\n$plan")
     assert(plan.contains("BroadcastNestedLoopJoin"),
       s"pairwise sketch stage did not broadcast:\n$plan")

@@ -31,7 +31,7 @@ class SketchAggregatesSpec extends SparkSpec {
     val df = rows.toDF("g", "k").repartition(4)
     val n = rows.count(_._1 == 0) // rows per group
     val sk = df.groupBy($"g")
-      .agg(SketchAggregates.cms_agg($"k", eps = 0.01, confidence = 0.99).as("c"))
+      .agg(count_min_sketch($"k", lit(0.01), lit(0.99), lit(42)).as("c"))
       .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]]("c")).toMap
     for (g <- 0 until 2) {
       val cms = SketchAggregates.cmsFromBytes(sk(g))
@@ -48,7 +48,7 @@ class SketchAggregatesSpec extends SparkSpec {
     val df = Seq(("a", "x1"), ("a", "x2"), ("b", "y1")).toDF("g", "k")
     val stats = df.groupBy($"g").agg(
       SketchAggregates.bloom_agg($"k", 100, 0.01).as("b"),
-      SketchAggregates.cms_agg($"k", 0.01, 0.99).as("c"))
+      count_min_sketch($"k", lit(0.01), lit(0.99), lit(42)).as("c"))
     val hit = stats.filter(SketchAggregates.might_contain($"b", lit("x1")))
       .select($"g").as[String].collect().toSet
     assert(hit.contains("a") && !hit.contains("b"))

@@ -1,35 +1,44 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+/** Spark's built-in theta sketches (`theta_sketch_agg` and the set
+  * operations over its bytes), and the exact-regime guard the oracled
+  * queries put in front of every intersection and difference. */
 class ThetaSketchSpec extends SparkSpec {
   import spark.implicits._
-  import ThetaSketch._
+
+  /** One sketch per input frame (column `v`), side by side in one row. */
+  private def sketches(lgK: Int, dfs: DataFrame*): DataFrame =
+    dfs.zipWithIndex.map { case (df, i) =>
+      df.agg(theta_sketch_agg($"v", lgK).as(s"s$i"))
+    }.reduce(_ crossJoin _)
+
+  private def estimates(sk: DataFrame, cols: Column*): Seq[Double] = {
+    val r = sk.select(cols.map(theta_sketch_estimate(_).cast("double")): _*).head()
+    cols.indices.map(r.getDouble)
+  }
 
   test("exact mode: estimate, intersection, aNotB equal true set counts") {
-    // two groups over 0..999 with a known 500-element overlap, well under 2^14
-    val df = spark.range(1500).select(
-      when($"id" < 1000, "a").otherwise("b").as("g"),
-      when($"id" < 1000, $"id").otherwise($"id" - 500).as("v"))
-    val sk = df.groupBy($"g").agg(theta_sketch_agg($"v").as("sk"))
-      .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]]("sk")).toMap
-    assert(estimate(sk("a")) == 1000.0)
-    assert(estimate(sk("b")) == 500.0)   // values 1000..1499 minus 500 → 500..999
-    assert(intersectionEstimate(sk("a"), sk("b")) == 500.0)
-    assert(aNotBEstimate(sk("a"), sk("b")) == 500.0)
-    assert(unionEstimate(sk("a"), sk("b")) == 1000.0)
+    // two sets over 0..999 with a known 500-element overlap, well under 2^14
+    val a = spark.range(1000).select($"id".as("v"))
+    val b = spark.range(1000, 1500).select(($"id" - 500).as("v")) // 500..999
+    val sk = sketches(14, a, b)
+    assert(estimates(sk,
+        $"s0", $"s1",
+        theta_intersection($"s0", $"s1"),
+        theta_difference($"s0", $"s1"),
+        theta_union($"s0", $"s1", 14)) ==
+      Seq(1000.0, 500.0, 500.0, 500.0, 1000.0))
   }
 
   test("estimation mode: 100k distinct within 5%; merge is partitioning-invariant") {
     val n = 100000L
-    val df = spark.range(n).select(lit("g").as("g"), $"id".as("v"))
-    def est(parts: Int): Double = {
-      val bytes = df.repartition(parts)
-        .groupBy($"g").agg(theta_sketch_agg($"v", 12).as("sk"))
-        .head().getAs[Array[Byte]]("sk")
-      estimate(bytes)
-    }
+    val df = spark.range(n).select($"id".as("v"))
+    def est(parts: Int): Double =
+      estimates(sketches(12, df.repartition(parts)), $"s0").head
     val e4 = est(4)
     assert(math.abs(e4 - n) / n < 0.05, s"estimate $e4 off $n by >5%")
     // same input through a different partitioning merges to a close estimate
@@ -38,46 +47,50 @@ class ThetaSketchSpec extends SparkSpec {
     assert(math.abs(e16 - n) / n < 0.05, s"estimate $e16 off $n by >5%")
   }
 
-  test("Int column vs Decimal column of the same ids intersect exactly") {
-    // pre-fix, Decimal fell through to toString hashing → intersection ~0
-    val ints = spark.range(1000).select(lit("i").as("g"), $"id".cast("int").as("v"))
-    val decs = spark.range(500, 1500).select(lit("d").as("g"),
-      $"id".cast("decimal(12,2)").as("v"))
-    def sketch(df: org.apache.spark.sql.DataFrame): Array[Byte] =
-      df.groupBy($"g").agg(theta_sketch_agg($"v").as("sk"))
-        .head().getAs[Array[Byte]]("sk")
-    assert(intersectionEstimate(sketch(ints), sketch(decs)) == 500.0)
-  }
-
-  test("long-range whole Decimals beyond 18 digits still hash as longs") {
-    // 5e18 has 19 integer digits yet fits a Long; the old digit-count check
-    // routed it to the double key space, so it never intersected an equal
-    // Long column. longValueExact covers every long-range whole number.
-    val big = 5000000000000000000L // 5e18
-    val longs = spark.range(3).select(lit("l").as("g"), ($"id" + big).as("v"))
-    val decs = spark.range(3).select(lit("d").as("g"),
-      ($"id" + big).cast("decimal(24,2)").as("v"))
-    def sketch(df: org.apache.spark.sql.DataFrame): Array[Byte] =
-      df.groupBy($"g").agg(theta_sketch_agg($"v").as("sk"))
-        .head().getAs[Array[Byte]]("sk")
-    assert(intersectionEstimate(sketch(longs), sketch(decs)) == 3.0)
+  test("Int column vs Bigint column of the same ids intersect exactly") {
+    // both integral widths hash as longs, so equal ids land on equal hashes
+    val ints = spark.range(1000).select($"id".cast("int").as("v"))
+    val longs = spark.range(500, 1500).select($"id".as("v"))
+    assert(estimates(sketches(14, ints, longs),
+      theta_intersection($"s0", $"s1")) == Seq(500.0))
   }
 
   test("unhashable input type throws instead of silently toString-hashing") {
-    val df = spark.range(3).select(lit("g").as("g"), array($"id").as("v"))
-    val e = intercept[Exception] {
-      df.groupBy($"g").agg(theta_sketch_agg($"v").as("sk")).collect()
+    // DECIMAL has no hashing in the built-in: refused at analysis time,
+    // before any row is read
+    for (t <- Seq("decimal(12,2)", "decimal(24,2)")) {
+      val e = intercept[AnalysisException] {
+        sketches(14, spark.range(3).select($"id".cast(t).as("v")))
+      }
+      assert(e.getCondition == "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", e.getMessage)
     }
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(e).exists(_.getMessage != null) &&
-      causes(e).exists(c => c.getMessage != null && c.getMessage.contains("unhashable")))
   }
 
   test("string and long updates of equal logical sets do not collide to zero") {
-    val df = spark.range(100).select(lit("g").as("g"), $"id".cast("string").as("v"))
-    val bytes = df.groupBy($"g").agg(theta_sketch_agg($"v").as("sk"))
-      .head().getAs[Array[Byte]]("sk")
-    assert(estimate(bytes) == 100.0)
+    val strs = spark.range(100).select($"id".cast("string").as("v"))
+    assert(estimates(sketches(14, strs), $"s0") == Seq(100.0))
+  }
+
+  test("exact-regime guard passes an exact sketch through unchanged") {
+    val bytes = sketches(16, spark.range(100).select($"id".as("v")))
+      .head().getAs[Array[Byte]](0)
+    assert(ExactRegime.requireExact(bytes) eq bytes)
+  }
+
+  test("exact-regime guard throws once the sketch is in estimation mode") {
+    // lgK=4 over 100 distinct values: theta < 1, the estimate reads ~135
+    val sk = sketches(4, spark.range(100).select($"id".as("v")))
+    val e = intercept[IllegalArgumentException] {
+      ExactRegime.requireExact(sk.head().getAs[Array[Byte]](0))
+    }
+    assert(e.getMessage.contains("left the exact regime"))
+    // the column form fails the query the same way
+    val q = intercept[Exception] {
+      sk.select(theta_sketch_estimate(ExactRegime.theta($"s0"))).collect()
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(q).exists(c => c.getMessage != null &&
+      c.getMessage.contains("left the exact regime")), q.toString)
   }
 }

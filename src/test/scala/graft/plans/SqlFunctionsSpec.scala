@@ -3,7 +3,8 @@ package graft.plans
 import graft.SparkSpec
 
 /** The custom expression/aggregate surface registered as SQL functions via
-  * GraftExtensions — a SQL user needs no Scala imports. */
+  * GraftExtensions — a SQL user needs no Scala imports — and the built-in
+  * sketch functions that stand in for the custom theta and KLL ones. */
 class SqlFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,31 +28,30 @@ class SqlFunctionsSpec extends SparkSpec {
     assert(rows("b") == Seq(9L))
   }
 
-  test("kll_sketch + kll_quantile compose in SQL; exact below k") {
+  test("built-in KLL sketch functions compose in SQL; exact below k") {
     spark.range(1, 102).selectExpr("'g' AS g", "CAST(id AS DOUBLE) AS v")
       .createOrReplaceTempView("kll_in")
     val p50 = spark.sql(
-      "SELECT kll_quantile(kll_sketch(v), 0.5) AS p50 FROM kll_in GROUP BY g")
+      """SELECT kll_sketch_get_quantile_double(kll_sketch_agg_double(v), 0.5) AS p50
+        |FROM kll_in GROUP BY g""".stripMargin)
       .as[Double].head()
     assert(p50 == 51.0)
   }
 
-  test("theta_sketch + theta_estimate compose in SQL; exact below 2^lgK") {
+  test("built-in theta sketch functions compose in SQL; exact below 2^lgK") {
     spark.range(1000).selectExpr("id % 3 AS g", "id AS v")
       .createOrReplaceTempView("theta_in")
     val rows = spark.sql(
-      """SELECT g, theta_estimate(theta_sketch(v)) AS est
+      """SELECT g, theta_sketch_estimate(theta_sketch_agg(v)) AS est
         |FROM theta_in GROUP BY g ORDER BY g""".stripMargin)
-      .as[(Long, Double)].collect().toMap
-    assert(rows(0L) == 334.0 && rows(1L) == 333.0 && rows(2L) == 333.0)
+      .as[(Long, Long)].collect().toMap
+    assert(rows(0L) == 334L && rows(1L) == 333L && rows(2L) == 333L)
   }
 
   test("wrong arity raises a clean AnalysisException, not IndexOutOfBounds") {
     import org.apache.spark.sql.AnalysisException
     Seq("SELECT top_k(1.0) AS t",
-        "SELECT cosine_similarity(array(1.0)) AS c",
-        "SELECT kll_quantile(x'00') AS q",
-        "SELECT theta_sketch() AS s").foreach { q =>
+        "SELECT cosine_similarity(array(1.0)) AS c").foreach { q =>
       val e = intercept[AnalysisException](spark.sql(q).collect())
       assert(e.getCondition != null && e.getCondition.startsWith("WRONG_NUM_ARGS"),
         s"$q -> ${e.getCondition}: ${e.getMessage}")
