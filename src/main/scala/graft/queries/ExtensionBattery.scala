@@ -2954,29 +2954,28 @@ object ExtensionBattery {
           .cast("double").as("est_clean_docs"))
     },
 
-    // Frequent-items sketch (Misra-Gries): mergeable heavy hitters. The
-    // exact form shuffles one row per distinct item; the sketch ships a
-    // bounded map per partial. FULLY ORACLED: while distinct items fit the
-    // map (≤ 0.75·maxMapSize — suppliers: ~200 at sf0.01, ~2k at sf0.1 vs
-    // 4096), maxError is 0 and estimates ARE the exact counts; at 100 TB
-    // the same plan degrades gracefully to ±N/maxMapSize bounds with the
-    // NO_FALSE_NEGATIVES guarantee (spec-pinned under forced purging).
+    // Frequent-items sketch (Misra-Gries, Spark's approx_top_k): mergeable
+    // heavy hitters. The exact form shuffles one row per distinct item; the
+    // sketch ships a bounded map per partial. FULLY ORACLED: while distinct
+    // items fit the map (suppliers: ~100 at sf0.01, ~1k at sf0.1 vs 32768
+    // tracked), maxError is 0 and estimates ARE the exact counts; at 100 TB
+    // the same plan degrades to ±N/maxItemsTracked estimates.
     sql("q_freq_topk",
       """SELECT l_suppkey AS suppkey, CAST(count(*) AS BIGINT) AS est_count
         |FROM lineitem GROUP BY 1
         |ORDER BY est_count DESC, suppkey LIMIT 10""".stripMargin) { (s, d) =>
       import s.implicits._
-      import graft.functions.FreqSketch
-      // frequentItemsExact GUARDS maxError == 0 (map never purged): estimates
+      import graft.functions.ExactRegime
+      // ExactRegime.topK GUARDS maxError == 0 (map never purged): estimates
       // are exact counts or the query fails loudly — never a silent flip to
-      // approximate under a scale bump.
-      val items = udf((b: Array[Byte]) => FreqSketch.frequentItemsExact(b))
-      // maxMapSize 32768: exact (maxError 0) until ~24k distinct suppliers
-      // (~sf2.4) vs 4096's ~3k (~sf0.3) — 512KB per partial, still sketch-tier
+      // approximate under a scale bump. 32768 tracked: exact for at least
+      // 32k distinct suppliers (~sf3.2)
       Tables.lineitem(s, d)
-        .agg(FreqSketch.freq_sketch_agg($"l_suppkey", 32768).as("sk"))
-        .select(explode(items($"sk")).as("r"))
-        .select($"r._1".as("suppkey"), $"r._2".as("est_count"))
+        .agg(call_function("approx_top_k_accumulate",
+          $"l_suppkey".cast("long"), lit(32768)).as("sk"))
+        .select(explode(call_function("approx_top_k_estimate",
+          ExactRegime.topK($"sk"), lit(32768))).as("r"))
+        .select($"r.item".as("suppkey"), $"r.count".as("est_count"))
         .orderBy($"est_count".desc, $"suppkey")
         .limit(10)
     },

@@ -2,11 +2,14 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Bloom filter over digest strings, used as a VERSION-MATCHED SIDECAR on a
   * [[Snapshots]] table (`<table>/_bloom/v-NNNNN`) so a streaming ingest can
   * answer "which of this batch's digests might already be stored?" without
-  * re-reading the stored digest column every batch.
+  * re-reading the stored digest column every batch. The filter itself is
+  * Spark's `org.apache.spark.util.sketch.BloomFilter`; this object sizes,
+  * builds, publishes and reads it.
   *
   * Why this exists (SURVEY §9.4): the chunk-store gate's existence probe
   * reads the probed cbucket partitions — O(stored corpus) per batch once
@@ -28,70 +31,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     next probe finds no matching sidecar, falls back to the full
   *     bucket read, and REBUILDS distributedly — self-healing, never wrong.
   *
-  * Hashing: double hashing h1 + i·h2 from two MurmurHash3 string seeds —
-  * deterministic across JVMs (no Random, no object identity). Size: a
-  * rebuild allots 20-40 bits per stored digest with 6 hashes
-  * ([[sizedBits]] of twice the count), and the gate regrows the sidecar
-  * once the store has roughly doubled — a rebuild at 1,700 digests
-  * writes 8 KiB.
-  *
   * Retention: [[write]] of version v deletes every published sidecar
   * older than v - 1, so `_bloom/` holds at most the latest two (v - 1
   * stays for [[graft.streaming.StreamingOps.chunkStoreMaintenanceRestamp]],
   * which copies it to a compacted v). Only the latest is ever trusted.
   */
-final class DigestBloom(val bits: Array[Long], val k: Int) {
-  private val m: Long = bits.length.toLong * 64L
-
-  private def set(pos: Long): Unit = {
-    bits((pos >>> 6).toInt) |= (1L << (pos & 63).toInt)
-  }
-  private def get(pos: Long): Boolean =
-    (bits((pos >>> 6).toInt) & (1L << (pos & 63).toInt)) != 0L
-
-  private def positions(s: String): Iterator[Long] = {
-    val h1 = scala.util.hashing.MurmurHash3.stringHash(s, 0x9747b28c)
-    val h2 = scala.util.hashing.MurmurHash3.stringHash(s, 0x85ebca6b) | 1
-    (0 until k).iterator.map { i =>
-      val h = h1.toLong + i.toLong * h2.toLong
-      ((h % m) + m) % m
-    }
-  }
-
-  def add(s: String): Unit = positions(s).foreach(set)
-  def contains(s: String): Boolean = positions(s).forall(get)
-
-  /** Fraction of set bits — the saturation gauge. At ~50% (the classic
-    * optimum for k = m/n·ln2 sizing) the filter is AT capacity; beyond it
-    * the false-positive rate climbs toward 1 and the probe quietly stops
-    * pruning (VERDICT r16 item 4). Computed on demand: one bitCount pass
-    * over the array (~1M longs worst case) is noise next to any probe. */
-  def fillRatio: Double = {
-    var setBits = 0L
-    var i = 0
-    while (i < bits.length) { setBits += java.lang.Long.bitCount(bits(i)); i += 1 }
-    setBits.toDouble / m
-  }
-  def or(other: DigestBloom): DigestBloom = {
-    require(other.bits.length == bits.length && other.k == k,
-      "bloom shape mismatch")
-    var i = 0
-    while (i < bits.length) { bits(i) |= other.bits(i); i += 1 }
-    this
-  }
-  def copy(): DigestBloom = new DigestBloom(bits.clone(), k)
-}
-
 object DigestBloom {
-  val defaultK: Int = 6
-  private val magic: Int = 0x47424c4d // "GBLM"
 
-  /** Bits for ~10 bits per digest (fp ≈ 0.8% at k=6), rounded up to a
-    * power of two and clamped to [64, 2^29] (one word; 64 MiB — a bloom
-    * bigger than that stops being a cheap sidecar). The committer passes
-    * TWICE the store's actual digest count at rebuild time, so the sidecar
-    * scales with the corpus and is carried forward until the store has
-    * roughly doubled (VERDICT r16 item 4). */
+  /** Bits for ~10 bits per digest, rounded up to a power of two and
+    * clamped to [64, 2^29] (one word; 64 MiB — a bloom bigger than that
+    * stops being a cheap sidecar). The committer passes TWICE the store's
+    * actual digest count at rebuild time, so the sidecar scales with the
+    * corpus and is carried forward until the store has roughly doubled
+    * (VERDICT r16 item 4). */
   def sizedBits(n: Long): Int = {
     val target = 10L * math.max(1L, n)
     val pow = java.lang.Long.highestOneBit(target)
@@ -99,31 +51,29 @@ object DigestBloom {
     math.min(1L << 29, math.max(64L, rounded)).toInt
   }
 
-  def empty(mBits: Int, k: Int = defaultK): DigestBloom = {
-    require(mBits % 64 == 0 && mBits > 0, "mBits must be a positive multiple of 64")
-    new DigestBloom(new Array[Long](mBits / 64), k)
-  }
+  /** An empty sidecar of `bits` bits shaped for 10 bits per digest, so
+    * Spark picks 7 hash functions. Every sidecar starts here: partials of
+    * one size merge. */
+  def empty(bits: Int): BloomFilter = BloomFilter.create(bits / 10, bits)
+
+  /** Fraction of set bits — the saturation gauge. Past ~50% the false-
+    * positive rate climbs toward 1 and the probe quietly stops pruning
+    * (VERDICT r16 item 4). */
+  def fillRatio(b: BloomFilter): Double = b.cardinality.toDouble / b.bitSize
 
   /** Distributed build over a digest column: one partial bloom per
-    * partition, OR-reduced — driver memory is one bloom of `mBits` bits
-    * whatever the number of rows scanned. */
-  def build(
-      digests: DataFrame,
-      col: String,
-      mBits: Int,
-      k: Int = defaultK): DigestBloom = {
+    * partition, merged by a tree reduce — driver memory is one bloom of
+    * `bits` bits whatever the number of rows scanned. */
+  def build(digests: DataFrame, col: String, bits: Int): BloomFilter = {
     val idx = digests.schema.fieldIndex(col)
     val partial = digests.queryExecution.toRdd // InternalRow scan, no row copies kept
       .mapPartitions { it =>
-        val b = empty(mBits, k)
-        it.foreach(r => if (!r.isNullAt(idx)) b.add(r.getUTF8String(idx).toString))
-        Iterator.single(b.bits)
+        val b = empty(bits)
+        it.foreach(r => if (!r.isNullAt(idx)) b.putBinary(r.getUTF8String(idx).getBytes))
+        Iterator.single(b)
       }
-    if (partial.getNumPartitions == 0) empty(mBits, k)
-    else new DigestBloom(
-      partial.treeReduce { (a, b) =>
-        var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
-      }, k)
+    if (partial.getNumPartitions == 0) empty(bits)
+    else partial.treeReduce(_ mergeInPlace _)
   }
 
   private def dir(table: String) = new Path(s"$table/_bloom")
@@ -133,33 +83,31 @@ object DigestBloom {
   private def fs(spark: SparkSession, table: String): FileSystem =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  // BloomFilter.writeTo's V2 layout: version = 2, k, seed, word count,
+  // then the words
+  private val headerBytes = 16
+  private val maxBytes = headerBytes + (1L << 29) / 8
+
   /** The sidecar for EXACTLY version `v`, or None (absent, unreadable, or
-    * wrong shape — callers must fall back to the full read). */
-  def read(spark: SparkSession, table: String, v: Long): Option[DigestBloom] = {
+    * wrong shape — callers must fall back to the full read). The header is
+    * checked against the file's length BEFORE `BloomFilter.readFrom`, which
+    * allocates the word array the header names: a corrupt word count would
+    * throw past NonFatal (OOM) and a corrupt k would make every lookup loop
+    * that many times. */
+  def read(spark: SparkSession, table: String, v: Long): Option[BloomFilter] = {
     val f = fs(spark, table)
     val p = path(table, v)
     try {
-      if (!f.exists(p)) None
+      val len = f.getFileStatus(p).getLen
+      if (len < headerBytes || len > maxBytes) None
       else {
-        val in = new java.io.DataInputStream(f.open(p))
-        try {
-          if (in.readInt() != magic) None
-          else {
-            val k = in.readInt()
-            val n = in.readInt()
-            // a truncated/corrupt payload can yield garbage k or n — a
-            // negative or absurd n would throw past an IOException-only
-            // catch (NegativeArraySizeException / OOM) and crash the
-            // streaming batch instead of falling back to the full probe
-            if (k < 1 || k > 64 || n < 1 || n > (1 << 26)) None // ≤ 512 MiB
-            else {
-              val bits = new Array[Long](n)
-              var i = 0
-              while (i < n) { bits(i) = in.readLong(); i += 1 }
-              Some(new DigestBloom(bits, k))
-            }
-          }
-        } finally in.close()
+        val bytes = new Array[Byte](len.toInt)
+        val in = f.open(p)
+        try in.readFully(bytes) finally in.close()
+        val h = java.nio.ByteBuffer.wrap(bytes)
+        val (version, k, words) = (h.getInt(0), h.getInt(4), h.getInt(12))
+        if (version != 2 || k < 1 || k > 64 || headerBytes + 8L * words != len) None
+        else Some(BloomFilter.readFrom(bytes))
       }
     } catch { case scala.util.control.NonFatal(_) => None }
   }
@@ -170,17 +118,12 @@ object DigestBloom {
     * `.tmp` files are never touched. Best-effort: a failed write just
     * means the next probe rebuilds, and a sidecar deleted under a reader
     * reads as None, the same fallback. */
-  def write(spark: SparkSession, table: String, v: Long, bloom: DigestBloom): Unit = {
+  def write(spark: SparkSession, table: String, v: Long, bloom: BloomFilter): Unit = {
     val f = fs(spark, table)
     val tmp = new Path(dir(table), f".v-$v%05d.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     try {
-      val out = new java.io.DataOutputStream(f.create(tmp, true))
-      try {
-        out.writeInt(magic)
-        out.writeInt(bloom.k)
-        out.writeInt(bloom.bits.length)
-        bloom.bits.foreach(out.writeLong)
-      } finally out.close()
+      val out = f.create(tmp, true)
+      try bloom.writeTo(out) finally out.close()
       // rename-no-overwrite filesystems return false with the destination
       // already present (e.g. a concurrent writer won the publish): the
       // sidecar there is for the SAME version so losing the race is fine,

@@ -1117,11 +1117,13 @@ object Snapshots {
     * table has no spec). Either way the caller applies one projection to
     * the result.
     *
-    * `_manifests` is listed and the manifest parsed once, and the read is
-    * pinned to the version the probe resolved, so a commit landing between
-    * the probe and the read cannot make the filter match nothing. A read
-    * error (say, a leaf dir the manifest names is gone) still throws: an
-    * unreadable state table must fail the batch, never pass as empty. */
+    * The manifest is parsed once, and the read is pinned to the version
+    * the probe resolved, so a commit landing between the probe and the read
+    * cannot make the filter match nothing. A pinned `version` is opened
+    * directly, without listing `_manifests`; only the default lists it. A
+    * read error (say, a leaf dir the manifest names is gone, or a pinned
+    * version was vacuumed) still throws: an unreadable state table must
+    * fail the batch, never pass as empty. */
   def readProbedOrEmpty(
       spark: SparkSession,
       table: String,
@@ -1130,8 +1132,8 @@ object Snapshots {
       columns: StructType,
       version: Option[Long] = None): DataFrame = {
     val inProbe: Map[String, String] => Boolean = _.get(key).exists(probed)
-    val vs = if (probed.isEmpty) Nil else versions(spark, table)
-    Option.when(vs.nonEmpty)(manifestAt(spark, table, vs, version))
+    val at = if (probed.isEmpty) None else version.orElse(versions(spark, table).lastOption)
+    at.map(v => v -> readManifest(fs(spark, table), table, v))
       .filter { case (_, m) => m.partitions.keys.exists(spec => inProbe(parseSpec(spec))) }
       .map { case (v, m) => scan(spark, table, v, m, inProbe).select(
         SqlBridge.asNullable(columns).map(c =>

@@ -859,7 +859,7 @@ object StreamingOps {
         // is the planned growth trigger, not a fault: the commit below
         // regrows it instead of carrying it forward. Still surfaced, as
         // a regrow scans the whole digest column.
-        val sidecarFill = sidecar.map(_.fillRatio).getOrElse(0.0)
+        val sidecarFill = sidecar.map(DigestBloom.fillRatio).getOrElse(0.0)
         if (sidecarFill > 0.5)
           System.err.println(f"[graft.chunkstore] WARNING: digest bloom " +
             f"fill ${sidecarFill * 100}%.1f%% — this commit regrows the " +
@@ -867,7 +867,7 @@ object StreamingOps {
         // with a trusted (version-matched) sidecar, only bloom-positive
         // digests can exist; without one, every batch digest might
         val maybe = sidecar match {
-          case Some(b) => pairs.filter { case (d, _) => b.contains(d) }
+          case Some(b) => pairs.filter { case (d, _) => b.mightContainString(d) }
           case None => pairs
         }
         // the stored digests of the probed buckets, read at the version
@@ -894,16 +894,16 @@ object StreamingOps {
           // carried forward — rebuild sized for TWICE the store's actual
           // count (the rebuild scans the digest column anyway; the count
           // is one cheap extra aggregation on a rare path). A fresh
-          // sidecar starts at most ~26% full and lasts until the store
+          // sidecar starts at most ~30% full and lasts until the store
           // has roughly doubled, so rebuild scans cost O(1) per stored
           // digest over time and the sidecar stays near the store's size.
-          val next = sidecar.filter(_ => sidecarFill <= 0.5).map(_.copy()).getOrElse {
+          val next = sidecar.filter(_ => sidecarFill <= 0.5).getOrElse {
             val stored = Snapshots.read(spark, chunkTable, Some(v2))
               .select(col("chunk_hash"))
             DigestBloom.build(stored, "chunk_hash",
               DigestBloom.sizedBits(2 * stored.count()))
           }
-          novelDigests.foreach(next.add)
+          novelDigests.foreach(next.putString)
           DigestBloom.write(spark, chunkTable, v2, next)
           // fragmentation maintenance: selectively rewrite buckets whose
           // commit-dir count crossed the threshold, then re-stamp the

@@ -737,12 +737,15 @@ class SnapshotsSpec extends SparkSpec {
     assert(d.schema.map(f => f.name -> f.dataType) == cols.map(f => f.name -> f.dataType))
     val pruned = Snapshots.read(spark, t, partitionFilter = _.get("g").contains("1"))
     assert(rows(d) == rows(pruned.select("id", "v")) && rows(d).size == 10)
-    // (e) pinned to version 1 after a later commit: version 1's rows only
+    // (e) pinned to version 1 after a later commit: version 1's rows only,
+    // with one LIST (the matching leaf dir) — the pinned manifest is opened
+    // without listing _manifests
     Snapshots.commitPartitioned(spark.range(30, 60)
       .selectExpr("id", "CAST(id * 3 AS STRING) AS v", "CAST(id % 3 AS STRING) AS g")
       .coalesce(1), t, Seq("g"))
-    val (e, _, _) = probe(Set("1"), Some(1L))
+    val (e, _, eLists) = probe(Set("1"), Some(1L))
     assert(rows(e) == rows(d))
+    assert(eLists == 1, s"pinned read made $eLists LISTs")
     assert(probe(Set("1"))._1.count() == 20)
     // (f) a matching spec whose leaf dir is gone fails the read, never
     // passes as an empty state
@@ -750,6 +753,13 @@ class SnapshotsSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(commit, "g=2")))
     intercept[java.io.FileNotFoundException] {
       Snapshots.readProbedOrEmpty(spark, t, "g", Set("2"), cols).collect()
+    }
+    // (g) a pinned version that was vacuumed fails the read, never passes
+    // as an empty state
+    Snapshots.vacuum(spark, t, retainLast = 1, minAgeMs = 0L)
+    assert(Snapshots.versions(spark, t) == Seq(2L))
+    intercept[java.io.FileNotFoundException] {
+      Snapshots.readProbedOrEmpty(spark, t, "g", Set("1"), cols, Some(1L)).collect()
     }
   }
 

@@ -326,12 +326,12 @@ class ChunkStoreIngestSpec extends SparkSpec {
       // as the corpus grows past its capacity
       val tiny = DigestBloom.build(
         Snapshots.read(spark, chunkT, Some(v1)).select($"chunk_hash"),
-        "chunk_hash", mBits = 64, k = 6)
-      assert(tiny.fillRatio > 0.5, "precondition: tiny sidecar saturated")
+        "chunk_hash", bits = 64)
+      assert(DigestBloom.fillRatio(tiny) > 0.5, "precondition: tiny sidecar saturated")
       java.nio.file.Files.delete(
         java.nio.file.Paths.get(f"$chunkT/_bloom/v-$v1%05d"))
       DigestBloom.write(spark, chunkT, v1, tiny)
-      assert(DigestBloom.read(spark, chunkT, v1).get.bits.length == 1)
+      assert(DigestBloom.read(spark, chunkT, v1).get.bitSize == 64)
 
       // next batch: novel content commits, and the committer must REBUILD
       // (not carry) the sidecar — sized from the store's actual count
@@ -343,13 +343,14 @@ class ChunkStoreIngestSpec extends SparkSpec {
       val stored = Snapshots.read(spark, chunkT)
         .select($"chunk_hash".as[String]).collect()
       // regrown for twice the store: at least 20 bits per stored digest,
-      // so it starts at most ~26% full (k = 6)
-      assert(rebuilt.get.bits.length * 64L >= 20L * stored.length,
-        s"rebuilt sidecar still tiny: ${rebuilt.get.bits.length * 64} bits for ${stored.length} digests")
-      assert(rebuilt.get.fillRatio < 0.3, f"rebuilt sidecar fill ${rebuilt.get.fillRatio}%.3f")
-      assert(rebuilt.get.fillRatio < 0.5, "rebuilt sidecar still saturated")
+      // so it starts at most ~30% full (k = 7)
+      assert(rebuilt.get.bitSize >= 20L * stored.length,
+        s"rebuilt sidecar still tiny: ${rebuilt.get.bitSize} bits for ${stored.length} digests")
+      val fill = DigestBloom.fillRatio(rebuilt.get)
+      assert(fill < 0.3, f"rebuilt sidecar fill $fill%.3f")
+      assert(fill < 0.5, "rebuilt sidecar still saturated")
       // no false negatives across the transition: every stored digest hits
-      assert(stored.forall(rebuilt.get.contains), "rebuild lost digests")
+      assert(stored.forall(rebuilt.get.mightContainString), "rebuild lost digests")
 
       // dedup exactness unchanged: re-delivering doc 1's body as a new doc
       // stores ZERO new chunks (probe + anti-join still correct)
@@ -390,11 +391,11 @@ class ChunkStoreIngestSpec extends SparkSpec {
         val sidecar = DigestBloom.read(spark, chunkT, v)
         assert(sidecar.isDefined, s"batch $b: no trusted sidecar at the latest version $v")
         val stored = Snapshots.read(spark, chunkT).select($"chunk_hash".as[String]).collect()
-        assert(stored.forall(sidecar.get.contains), s"batch $b: sidecar misses a stored digest")
-        val bits = sidecar.get.bits.length * 64L
+        assert(stored.forall(sidecar.get.mightContainString), s"batch $b: sidecar misses a stored digest")
+        val bits = sidecar.get.bitSize
         assert(bits <= math.max(64L, 40L * stored.length),
           s"batch $b: $bits bits for ${stored.length} stored digests")
-        widths += sidecar.get.bits.length
+        widths += (bits / 64).toInt
       }
     } finally q.stop()
     val vs = Snapshots.versions(spark, chunkT)

@@ -1,8 +1,9 @@
 #!/bin/bash
 # Run a graft main class against the compiled sbt output without sbt startup
 # overhead. Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/out
+# The classes come from the checkout this script lives in.
 set -e
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+CP="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
