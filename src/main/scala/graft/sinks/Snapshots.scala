@@ -791,10 +791,8 @@ object Snapshots {
   /** Last committed transaction id for a streaming writer `appId`, from the
     * latest manifest (None if the table or the app has never committed).
     * The exactly-once gate: skip any batch with id <= this watermark. */
-  def lastTxn(spark: SparkSession, table: String, appId: String): Option[Long] = {
-    val vs = versions(spark, table)
-    vs.lastOption.flatMap(v => readManifest(fs(spark, table), table, v).txn.get(appId))
-  }
+  def lastTxn(spark: SparkSession, table: String, appId: String): Option[Long] =
+    resolve(spark, table, None).flatMap(_._2.txn.get(appId))
 
   /** Throws the classified 'commit race' when a rewrite's resolved base
     * version has been superseded — the compare-and-swap that closes the
@@ -814,18 +812,10 @@ object Snapshots {
           s"snapshot commit race on $table: rewrite base v$b superseded by v$cur")
     }
 
-  /** Commit `df` as the next version. `Append` keeps prior data dirs in the
-    * new manifest; `Overwrite` starts the version from only this commit's
-    * files. Returns the committed version number.
-    *
-    * `txn = Some(appId -> batchId)` makes the commit IDEMPOTENT per writer:
-    * if the latest manifest already records `appId` at >= `batchId` the
-    * commit is a no-op returning the current version — an at-least-once
-    * streaming source replaying a micro-batch cannot double-append.
-    *
-    * `baseVersion` (rewrite jobs): the version the caller's input data was
-    * RESOLVED at — see [[requireBase]]. An append derives nothing from
-    * prior state and never needs it. */
+  /** Commit `df` as the next version of an UNPARTITIONED table. `Append`
+    * keeps the prior data dirs in the new manifest; `Overwrite` starts the
+    * version from only this commit's files. Returns the committed version;
+    * the `txn` and `baseVersion` contracts are [[commitWith]]'s. */
   def commit(
       df: DataFrame,
       table: String,
@@ -834,29 +824,8 @@ object Snapshots {
       baseVersion: Option[Long] = None): Long = {
     require(mode == SaveMode.Append || mode == SaveMode.Overwrite,
       s"unsupported snapshot commit mode $mode")
-    val spark = df.sparkSession
-    val f = fs(spark, table)
-    val prev = versions(spark, table)
-    requireBase(table, prev, baseVersion)
-    val v = prev.lastOption.getOrElse(0L) + 1
-    // Guard BEFORE writing data, and in BOTH modes: an Overwrite on a
-    // partitioned table would otherwise silently convert it to an
-    // unpartitioned one — full-table overwrite of a partitioned table
-    // should be loud (vacuum + fresh table), per commitPartitioned's doc.
-    val prevManifest = prev.lastOption.map(readManifest(f, table, _))
-    prevManifest.foreach(m => require(m.partitions.isEmpty,
-      s"$table is partitioned — use commitPartitioned"))
-    val prevTxn = prevManifest.map(_.txn).getOrElse(Map.empty[String, Long])
-    val replayed = txn.exists { case (app, id) => prevTxn.get(app).exists(_ >= id) }
-    if (replayed) prev.last // already-committed batch: idempotent no-op
-    else {
-      val dataDir = f"$table/data/c-$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      df.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
-      val dirs =
-        if (mode == SaveMode.Overwrite) Seq(dataDir)
-        else prevManifest.map(_.dirs).getOrElse(Seq.empty) :+ dataDir
-      publish(f, table, v,
-        Manifest(dirs, Map.empty, prevTxn ++ txn, Some(df.schema.json)))
+    commitWith(df, table, Nil, txn, baseVersion) { (prev, base, _) =>
+      Manifest(if (mode == SaveMode.Overwrite) Seq(base) else prev.dirs :+ base, Map.empty)
     }
   }
 
@@ -878,7 +847,8 @@ object Snapshots {
     *    mode here: at 100 TB "overwrite everything" should be loud.)
     *
     * The manifest delta is proportional to TOUCHED partitions, and no
-    * existing data file is moved, rewritten, or even listed. */
+    * existing data file is moved, rewritten, or even listed. `df` must
+    * write at least one partition. */
   def commitPartitioned(
       df: DataFrame,
       table: String,
@@ -889,31 +859,11 @@ object Snapshots {
     require(partitionBy.nonEmpty, "partitionBy must be non-empty")
     require(mode == SaveMode.Append || mode == SaveMode.Overwrite,
       s"unsupported snapshot commit mode $mode")
-    val spark = df.sparkSession
-    val f = fs(spark, table)
-    val prev = versions(spark, table)
-    requireBase(table, prev, baseVersion)
-    val v = prev.lastOption.getOrElse(0L) + 1
-    val prevManifest = prev.lastOption.map(readManifest(f, table, _))
-    val prevTxnMap = prevManifest.map(_.txn).getOrElse(Map.empty[String, Long])
-    val replayed = txn.exists { case (app, id) => prevTxnMap.get(app).exists(_ >= id) }
-    if (replayed) prev.last // already-committed batch: idempotent no-op
-    else {
-      val base = f"$table/data/c-$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      df.write.mode(SaveMode.ErrorIfExists).partitionBy(partitionBy: _*).parquet(base)
-      val touched = writtenSpecs(f, new Path(base), partitionBy.length)
+    commitWith(df, table, partitionBy, txn, baseVersion) { (prev, base, touched) =>
       require(touched.nonEmpty, "commitPartitioned wrote no partitions (empty df?)")
-      val prevParts = prevManifest.map { m =>
-        require(m.dirs.isEmpty, s"$table is unpartitioned — use commit")
-        m.partitions
-      }.getOrElse(Map.empty[String, Seq[String]])
-      val merged =
-        if (mode == SaveMode.Overwrite) // dynamic: only touched specs replaced
-          prevParts -- touched ++ touched.map(_ -> Seq(base))
-        else
-          prevParts ++ touched.map(s => s -> (prevParts.getOrElse(s, Seq.empty) :+ base))
-      publish(f, table, v,
-        Manifest(Seq.empty, merged.toMap, prevTxnMap ++ txn, Some(df.schema.json)))
+      Manifest(Nil,
+        if (mode == SaveMode.Overwrite) prev.partitions -- touched ++ touched.map(_ -> Seq(base))
+        else prev.partitions ++ touched.map(s => s -> (prev.partitions.getOrElse(s, Nil) :+ base)))
     }
   }
 
@@ -925,8 +875,7 @@ object Snapshots {
     *
     * `df` may be empty (all listed specs drop). Specs `df` writes OUTSIDE
     * `replaced` are rejected loudly — a rewrite that manufactures rows in a
-    * partition it was not asked to touch is a bug, not a commit. Same
-    * `txn` idempotence contract as the other commit forms. */
+    * partition it was not asked to touch is a bug, not a commit. */
   def commitPartitionReplace(
       df: DataFrame,
       table: String,
@@ -936,30 +885,65 @@ object Snapshots {
       baseVersion: Option[Long] = None): Long = {
     require(partitionBy.nonEmpty, "partitionBy must be non-empty")
     require(replaced.nonEmpty, "replaced specs must be non-empty")
-    val spark = df.sparkSession
-    val f = fs(spark, table)
-    val prev = versions(spark, table)
-    requireBase(table, prev, baseVersion)
-    val v = prev.lastOption.getOrElse(0L) + 1
-    val prevManifest = prev.lastOption.map(readManifest(f, table, _))
-    prevManifest.foreach(m => require(m.dirs.isEmpty,
-      s"$table is unpartitioned — use commit"))
-    val prevTxnMap = prevManifest.map(_.txn).getOrElse(Map.empty[String, Long])
-    val replayed = txn.exists { case (app, id) => prevTxnMap.get(app).exists(_ >= id) }
-    if (replayed) prev.last
-    else {
-      val base = f"$table/data/c-$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
-      df.write.mode(SaveMode.ErrorIfExists).partitionBy(partitionBy: _*).parquet(base)
-      val touched =
-        if (f.exists(new Path(base))) writtenSpecs(f, new Path(base), partitionBy.length)
-        else Seq.empty // fully-empty df: parquet writes no directory at all
+    commitWith(df, table, partitionBy, txn, baseVersion) { (prev, base, touched) =>
       val stray = touched.filterNot(replaced.contains)
       require(stray.isEmpty,
         s"rewrite produced partitions outside the replaced set: ${stray.mkString(", ")}")
-      val prevParts = prevManifest.map(_.partitions).getOrElse(Map.empty[String, Seq[String]])
-      val merged = prevParts -- replaced ++ touched.map(_ -> Seq(base))
+      Manifest(Nil, prev.partitions -- replaced ++ touched.map(_ -> Seq(base)))
+    }
+  }
+
+  /** The one commit protocol behind [[commit]], [[commitPartitioned]] and
+    * [[commitPartitionReplace]]: list the versions, check `baseVersion`
+    * ([[requireBase]]), read the prior manifest, refuse the wrong table
+    * flavour (`partitionBy` empty = unpartitioned), skip a replayed `txn`,
+    * write `df` into a fresh `data/c-<v>-<uuid>` dir, build the next
+    * manifest with `next(prior, that dir, the specs written there)`, and
+    * publish it as version v.
+    *
+    * The flavour check runs BEFORE any data is written, so a refused
+    * commit leaves no orphan dir behind; `next` may still refuse after
+    * the write (its rules need the written specs).
+    *
+    * `txn = Some(appId -> batchId)` makes a commit IDEMPOTENT per writer:
+    * if the latest manifest already records `appId` at >= `batchId` the
+    * commit is a no-op returning the current version — an at-least-once
+    * streaming source replaying a micro-batch cannot double-append. Every
+    * commit carries the prior txn map forward.
+    *
+    * `baseVersion` (rewrite jobs): the version the caller's input data was
+    * RESOLVED at — see [[requireBase]]. An append derives nothing from
+    * prior state and never needs it.
+    *
+    * Every data file a commit adds lands here, so a manifest that records
+    * its files changes this one place. */
+  private def commitWith(
+      df: DataFrame,
+      table: String,
+      partitionBy: Seq[String],
+      txn: Option[(String, Long)],
+      baseVersion: Option[Long])(
+      next: (Manifest, String, Seq[String]) => Manifest): Long = {
+    val f = fs(df.sparkSession, table)
+    val prev = versions(df.sparkSession, table)
+    requireBase(table, prev, baseVersion)
+    val prior = prev.lastOption.fold(Manifest(Nil, Map.empty))(readManifest(f, table, _))
+    // an Overwrite of a partitioned table through commit would silently
+    // convert it to an unpartitioned one: both directions fail loudly
+    if (partitionBy.isEmpty)
+      require(prior.partitions.isEmpty, s"$table is partitioned — use commitPartitioned")
+    else require(prior.dirs.isEmpty, s"$table is unpartitioned — use commit")
+    if (txn.exists { case (app, id) => prior.txn.get(app).exists(_ >= id) }) prev.last
+    else {
+      val v = prev.lastOption.getOrElse(0L) + 1
+      val base = f"$table/data/c-$v%05d-${java.util.UUID.randomUUID().toString.take(8)}"
+      df.write.mode(SaveMode.ErrorIfExists).partitionBy(partitionBy: _*).parquet(base)
+      // a fully-empty partitioned df writes no directory at all
+      val touched =
+        if (partitionBy.isEmpty || !f.exists(new Path(base))) Nil
+        else writtenSpecs(f, new Path(base), partitionBy.length)
       publish(f, table, v,
-        Manifest(Seq.empty, merged.toMap, prevTxnMap ++ txn, Some(df.schema.json)))
+        next(prior, base, touched).copy(txn = prior.txn ++ txn, schema = Some(df.schema.json)))
     }
   }
 
@@ -984,16 +968,13 @@ object Snapshots {
       updates: DataFrame,
       keys: Seq[String]): Long = {
     require(keys.nonEmpty, "merge keys must be non-empty")
-    val f = fs(spark, table)
-    val vs = versions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val m = readManifest(f, table, vs.last)
+    val (v, m) = manifestAt(spark, table, None)
     if (m.partitions.isEmpty) {
-      val kept = read(spark, table, Some(vs.last)).join(updates, keys, "left_anti")
-      // baseVersion: the rewrite resolved vs.last — a concurrent append
-      // landing mid-merge must fail the commit as a race, not be dropped
+      val kept = scan(spark, table, v, m, _ => true).join(updates, keys, "left_anti")
+      // baseVersion: the rewrite resolved v — a concurrent append landing
+      // mid-merge must fail the commit as a race, not be dropped
       commit(kept.unionByName(updates, allowMissingColumns = true),
-        table, SaveMode.Overwrite, baseVersion = Some(vs.last))
+        table, SaveMode.Overwrite, baseVersion = Some(v))
     } else {
       val partCols = partColumns(m)
       // partitions the updates touch — resolved from the updates frame, then
@@ -1002,11 +983,13 @@ object Snapshots {
         .distinct().collect()
         .map(r => partCols.zipWithIndex.map { case (c, i) => c -> r.get(i).toString }.toMap)
         .toSet
-      val current = read(spark, table, Some(vs.last),
-        spec => touchedSpecs.exists(t => t.forall { case (k, v) => spec.get(k).contains(v) }))
+      val (_, current) = selectAt(spark, table, v, m,
+          spec => touchedSpecs.exists(_.forall { case (c, x) => spec.get(c).contains(x) }))
+        .getOrElse(throw new IllegalArgumentException(
+          s"merge updates touch no partition of $table v$v"))
       val kept = current.join(updates, keys, "left_anti")
       commitPartitioned(kept.unionByName(updates, allowMissingColumns = true),
-        table, partCols, SaveMode.Overwrite, baseVersion = Some(vs.last))
+        table, partCols, SaveMode.Overwrite, baseVersion = Some(v))
     }
   }
 
@@ -1033,7 +1016,7 @@ object Snapshots {
 
   /** Partition specs of a snapshot, ascending (empty for unpartitioned). */
   def partitions(spark: SparkSession, table: String, version: Option[Long] = None): Seq[String] =
-    manifestAt(spark, table, versions(spark, table), version)._2.partitions.keys.toSeq.sorted
+    manifestAt(spark, table, version)._2.partitions.keys.toSeq.sorted
 
   /** Hive/URI-style percent-DECODE: `%XX` byte runs decode as UTF-8, '+'
     * stays LITERAL, malformed escapes pass through verbatim. URLDecoder is
@@ -1081,10 +1064,11 @@ object Snapshots {
   /** A partitioned manifest's partition columns, in path order. */
   private def partColumns(m: Manifest): Seq[String] = specColumns(m.partitions.keys.head)
 
-  /** The retained version `version` names (default: the latest of `vs`,
-    * the table's listed versions) and its parsed manifest. */
+  /** The retained version `version` names (default: the latest) and its
+    * parsed manifest. */
   private def manifestAt(
-      spark: SparkSession, table: String, vs: Seq[Long], version: Option[Long]): (Long, Manifest) = {
+      spark: SparkSession, table: String, version: Option[Long]): (Long, Manifest) = {
+    val vs = versions(spark, table)
     require(vs.nonEmpty, s"no snapshots at $table")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in $vs")
@@ -1104,7 +1088,7 @@ object Snapshots {
       table: String,
       version: Option[Long] = None,
       partitionFilter: Map[String, String] => Boolean = _ => true): DataFrame = {
-    val (v, m) = manifestAt(spark, table, versions(spark, table), version)
+    val (v, m) = manifestAt(spark, table, version)
     scan(spark, table, v, m, partitionFilter)
   }
 
@@ -1115,31 +1099,56 @@ object Snapshots {
     * empty (no file is touched), the table has no version, or no spec of
     * the resolved version has its `key` in `probed` (an unpartitioned
     * table has no spec). Either way the caller applies one projection to
-    * the result.
-    *
-    * The manifest is parsed once, and the read is pinned to the version
-    * the probe resolved, so a commit landing between the probe and the read
-    * cannot make the filter match nothing. A pinned `version` is opened
-    * directly, without listing `_manifests`; only the default lists it. A
-    * read error (say, a leaf dir the manifest names is gone, or a pinned
-    * version was vacuumed) still throws: an unreadable state table must
-    * fail the batch, never pass as empty. */
+    * the result. It is [[readSelected]] with the key's probe as the
+    * selection, so a read error still throws: an unreadable state table
+    * must fail the batch, never pass as empty. */
   def readProbedOrEmpty(
       spark: SparkSession,
       table: String,
       key: String,
       probed: Set[String],
       columns: StructType,
-      version: Option[Long] = None): DataFrame = {
-    val inProbe: Map[String, String] => Boolean = _.get(key).exists(probed)
-    val at = if (probed.isEmpty) None else version.orElse(versions(spark, table).lastOption)
-    at.map(v => v -> readManifest(fs(spark, table), table, v))
-      .filter { case (_, m) => m.partitions.keys.exists(spec => inProbe(parseSpec(spec))) }
-      .map { case (v, m) => scan(spark, table, v, m, inProbe).select(
-        SqlBridge.asNullable(columns).map(c =>
-          org.apache.spark.sql.functions.col(c.name).cast(c.dataType).as(c.name)): _*) }
+      version: Option[Long] = None): DataFrame =
+    (if (probed.isEmpty) None else readSelected(spark, table, version, _.get(key).exists(probed)))
+      .map(_._2.select(SqlBridge.asNullable(columns).map(c =>
+        org.apache.spark.sql.functions.col(c.name).cast(c.dataType).as(c.name)): _*))
       .getOrElse(spark.createDataFrame(java.util.List.of[Row](), columns))
+
+  /** A read→replace job's input: the specs of `table` at `version`
+    * (default: the latest) whose parsed spec `select` accepts, sorted, and
+    * ONE scan of exactly those specs — or None when no spec is selected
+    * (the table has no version, is unpartitioned, or nothing matches).
+    *
+    * The manifest is parsed once and both halves come from it, so the
+    * specs a caller replaces are the specs it read. A pinned `version` is
+    * opened directly, without listing `_manifests`; a rewrite pins the
+    * version it then commits against as `baseVersion`. A read error (say,
+    * a pinned version was vacuumed) throws. */
+  def readSelected(
+      spark: SparkSession,
+      table: String,
+      version: Option[Long],
+      select: Map[String, String] => Boolean): Option[(Seq[String], DataFrame)] =
+    resolve(spark, table, version).flatMap { case (v, m) => selectAt(spark, table, v, m, select) }
+
+  /** [[readSelected]] over an already-resolved manifest `m` (version `v`). */
+  private def selectAt(
+      spark: SparkSession,
+      table: String,
+      v: Long,
+      m: Manifest,
+      select: Map[String, String] => Boolean): Option[(Seq[String], DataFrame)] = {
+    val specs = m.partitions.keys.filter(spec => select(parseSpec(spec))).toSeq.sorted
+    if (specs.isEmpty) None else Some(specs -> scan(spark, table, v, m, select))
   }
+
+  /** `version` of `table` (default: the latest) and its parsed manifest, or
+    * None when the table has no version. A pinned version is opened
+    * directly, without listing `_manifests`. */
+  private def resolve(
+      spark: SparkSession, table: String, version: Option[Long]): Option[(Long, Manifest)] =
+    version.orElse(versions(spark, table).lastOption)
+      .map(v => v -> readManifest(fs(spark, table), table, v))
 
   /** The scan of manifest `m` (version `v` of `table`), pruned by
     * `partitionFilter` for partitioned tables. */
@@ -1357,39 +1366,17 @@ object Snapshots {
     }
   }
 
-  /** Compact the current snapshot to ~`targetFileRows` rows per file as a
-    * NEW version — readers pinned to older manifests are untouched (no
-    * rename-aside dance needed once commits are manifest-published; compare
+  /** Compact the current snapshot as a NEW version — readers pinned to
+    * older manifests are untouched (no rename-aside dance needed once
+    * commits are manifest-published; compare
     * [[LakeMaintenance.compactPartition]] for the raw-directory variant).
-    * Old small files become unreferenced and fall to [[vacuum]]. */
+    * An unpartitioned table rewrites to ~`targetFileRows` rows per file, a
+    * partitioned one to one file per spec. Old small files become
+    * unreferenced and fall to [[vacuum]]. Returns the committed version, or
+    * the current one when the snapshot holds no data. */
   def compact(spark: SparkSession, table: String, targetFileRows: Long = 1000000L): Long = {
-    val f = fs(spark, table)
-    val vs = versions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val m = readManifest(f, table, vs.last)
-    // a fully-erased snapshot (zero data dirs) has nothing to compact;
-    // falling through would commit an empty UNPARTITIONED version and
-    // silently flip a partitioned table's flavor, refusing future
-    // commitPartitioned calls
-    if (m.dirs.isEmpty && m.partitions.isEmpty) vs.last
-    else if (m.partitions.isEmpty) {
-      // rewrite input pinned to vs.last, commit CAS'd on it: a concurrent
-      // append between the read and the Overwrite must race, never vanish
-      val df = read(spark, table, Some(vs.last))
-      val rows = df.count()
-      val nFiles = math.max(1, math.ceil(rows.toDouble / targetFileRows).toInt)
-      commit(df.coalesce(nFiles), table, SaveMode.Overwrite,
-        baseVersion = Some(vs.last))
-    } else {
-      // partitioned: cluster by the partition columns so each partition's
-      // accumulated small files rewrite as one task → one file, then commit
-      // as a dynamic overwrite of every spec (all specs are "touched")
-      val df = read(spark, table, Some(vs.last))
-      val cols = partColumns(m)
-      commitPartitioned(
-        df.repartition(cols.map(org.apache.spark.sql.functions.col): _*),
-        table, cols, SaveMode.Overwrite, baseVersion = Some(vs.last))
-    }
+    val (v, m) = manifestAt(spark, table, None)
+    rewrite(spark, table, v, m, _ => true, targetFileRows).getOrElse(v)
   }
 
   /** PARTITION-SELECTIVE (size-tiered) compaction — the Delta/Iceberg
@@ -1398,77 +1385,55 @@ object Snapshots {
     * manifest entry (and therefore its on-disk files) carries forward
     * untouched. [[compact]] rewrites the whole table, which is fine as a
     * one-off but becomes the scale-killer when a streaming gate invokes it
-    * on a fixed cadence: at 100 TB the maintenance loop would rewrite the
-    * FULL corpus every K micro-batches, while the fragmentation it cures
-    * is concentrated in the partitions the recent batches touched.
-    * Rewrite bytes here are ∝ fragmented specs, not corpus.
-    *
-    * Fragmentation is measured from the manifest alone (bases per spec —
-    * one base dir per touching commit, the exact unit append gates accrete
-    * at), so deciding costs zero file-system listing. A spec crosses the
-    * threshold only after `maxBasesPerSpec` distinct commits touched it
-    * since its last rewrite; cold partitions are never rewritten.
-    *
+    * on a fixed cadence: rewrite bytes here are ∝ fragmented specs, not
+    * corpus. Fragmentation is measured from the manifest alone (one base
+    * dir per touching commit), so deciding costs one `_manifests` LIST and
+    * one manifest open; a rewrite adds its commit's one of each.
     * Unpartitioned tables degrade to all-or-nothing ([[compact]] when
-    * `dirs` exceeds the threshold) — without partition bounds there is no
-    * selective unit. Returns the committed version, or the CURRENT version
-    * unchanged when nothing is fragmented (no commit, no new manifest). */
+    * `dirs` exceeds the threshold).
+    *
+    * Returns `Some(v)` exactly when THIS call published version `v` (its
+    * base is then `v - 1`, which the CAS pins), `None` when nothing was
+    * fragmented (no commit, no new manifest). Out-of-band maintenance
+    * needs the distinction: a sidecar re-stamp must fire only for versions
+    * this call created, never for a concurrent ingest's commit. */
   def compactFragmented(
       spark: SparkSession,
       table: String,
-      maxBasesPerSpec: Int = 4): Long = {
-    val (committed, current) = compactFragmentedImpl(spark, table, maxBasesPerSpec)
-    committed.getOrElse(current)
+      maxBasesPerSpec: Int = 4): Option[Long] = {
+    val (v, m) = manifestAt(spark, table, None)
+    val frag = m.partitions.collect {
+      case (spec, bases) if bases.size > maxBasesPerSpec => parseSpec(spec) }.toSet
+    if (m.partitions.isEmpty && m.dirs.size <= maxBasesPerSpec) None
+    else rewrite(spark, table, v, m, frag, 1000000L)
   }
 
-  /** As [[compactFragmented]], but reports whether a compaction COMMITTED:
-    * `Some(newVersion)` iff THIS call published a rewrite (whose base is
-    * then exactly `newVersion - 1` — the CAS pins it), `None` when nothing
-    * was fragmented. Out-of-band maintenance needs the distinction: a
-    * sidecar re-stamp must fire only for versions this job created — a
-    * loop comparing against a version list read BEFORE the call would
-    * misattribute a concurrent ingest's commit as "its" compaction and
-    * stamp a STALE sidecar over it (bloom false negatives — forbidden). */
-  def compactFragmentedCommitted(
+  /** The compaction rewrite of version `v` (manifest `m`): the whole of an
+    * unpartitioned table, or the specs `select` accepts with one shuffle
+    * task (→ one file) per spec. The input is pinned to `v` and the commit
+    * CAS'd on it, so a commit landing mid-rewrite makes this a LOUD race
+    * where an unpinned rewrite would silently drop the interleaved rows.
+    * None when there is nothing to rewrite: no data dir (a fully-erased
+    * snapshot, whose empty UNPARTITIONED commit would flip a partitioned
+    * table's flavour) or no spec selected. */
+  private def rewrite(
       spark: SparkSession,
       table: String,
-      maxBasesPerSpec: Int = 4): Option[Long] =
-    compactFragmentedImpl(spark, table, maxBasesPerSpec)._1
-
-  /** (committed version if this call published, current version at entry):
-    * ONE manifest listing serves both callers — re-listing in a getOrElse
-    * would be an extra metadata RPC per no-op tick AND a TOCTOU that can
-    * report a concurrent writer's version as this call's outcome. */
-  private def compactFragmentedImpl(
-      spark: SparkSession,
-      table: String,
-      maxBasesPerSpec: Int): (Option[Long], Long) = {
-    val f = fs(spark, table)
-    val vs = versions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val m = readManifest(f, table, vs.last)
-    val committed: Option[Long] = if (m.partitions.isEmpty) {
-      if (m.dirs.size > maxBasesPerSpec) Some(compact(spark, table)) else None
+      v: Long,
+      m: Manifest,
+      select: Map[String, String] => Boolean,
+      targetFileRows: Long): Option[Long] =
+    if (m.partitions.isEmpty) Option.when(m.dirs.nonEmpty) {
+      val df = scan(spark, table, v, m, select)
+      val nFiles = math.max(1, math.ceil(df.count().toDouble / targetFileRows).toInt)
+      commit(df.coalesce(nFiles), table, SaveMode.Overwrite, baseVersion = Some(v))
     } else {
-      val frag = m.partitions.collect {
-        case (spec, bases) if bases.size > maxBasesPerSpec => spec }.toSeq.sorted
-      if (frag.isEmpty) None
-      else Some {
-        val fragParsed = frag.map(parseSpec).toSet
-        val cols = partColumns(m)
-        // one shuffle task per rewritten spec → one file per spec dir;
-        // input pinned to vs.last and the commit CAS'd on it — an ingest
-        // commit landing mid-rewrite makes this a LOUD race (the caller's
-        // maintenance loop just retries), where an unpinned rewrite would
-        // silently drop the interleaved rows (the §9.6 write-skew)
-        val df = read(spark, table, Some(vs.last), spec => fragParsed.contains(spec))
-          .repartition(cols.map(org.apache.spark.sql.functions.col): _*)
-        commitPartitionReplace(df, table, cols, replaced = frag,
-          baseVersion = Some(vs.last))
+      val cols = partColumns(m)
+      selectAt(spark, table, v, m, select).map { case (specs, df) =>
+        commitPartitionReplace(df.repartition(cols.map(org.apache.spark.sql.functions.col): _*),
+          table, cols, specs, baseVersion = Some(v))
       }
     }
-    (committed, vs.last)
-  }
 
   /** Drop data referenced by no retained manifest (failed commits,
     * overwritten versions after `retainLast` manifests are pruned) — at

@@ -198,8 +198,9 @@ object StreamingOps {
     * the commit no-ops on the watermark.
     *
     * `compactEvery` (0 = off): every K corpus commits, rewrite each cell
-    * partition to one file ([[graft.sinks.Snapshots.compact]] — txn map
-    * carries forward, replays still no-op). Measured (§9.4): per-append
+    * partition that crossed the fragmentation threshold to one file
+    * ([[graft.sinks.Snapshots.compactFragmented]] — txn map carries
+    * forward, replays still no-op). Measured (§9.4): per-append
     * fragmentation, not pair math, dominated per-batch cost growth at 50
     * batches (the probed-cell read unions one tiny file per cell per
     * commit), same disease and same cure as the chunk store. */
@@ -292,9 +293,10 @@ object StreamingOps {
     * (pinned in ChunkStoreIngestSpec).
     *
     * `onCompact(table, newVersion)` fires ONLY for versions this loop's
-    * compaction actually committed ([[graft.sinks.Snapshots.compactFragmentedCommitted]]
-    * — a stale version-list compare would misattribute a concurrent
-    * ingest's commit and stamp a stale sidecar over it); the chunk-store
+    * compaction actually committed (the `Some` of
+    * [[graft.sinks.Snapshots.compactFragmented]] — a stale version-list
+    * compare would misattribute a concurrent ingest's commit and stamp a
+    * stale sidecar over it); the chunk-store
     * deployment re-stamps its DigestBloom sidecar there (compaction
     * preserves the digest set, so the base version's sidecar carries
     * verbatim; see [[chunkStoreMaintenanceRestamp]]). Failures inside the
@@ -318,8 +320,7 @@ object StreamingOps {
           if (run.get())
             try {
               if (graft.sinks.Snapshots.versions(spark, t).nonEmpty)
-                graft.sinks.Snapshots
-                  .compactFragmentedCommitted(spark, t, maxBasesPerSpec)
+                graft.sinks.Snapshots.compactFragmented(spark, t, maxBasesPerSpec)
                   .foreach { v =>
                     compactions.incrementAndGet()
                     onCompact(t, v)
@@ -803,12 +804,13 @@ object StreamingOps {
     * fragmentation. Batches whose digests genuinely hit the store (shared
     * boilerplate chunks) must read their buckets, and after N append
     * commits a bucket is N tiny files: measured, hit-batch cost tracked
-    * FILE COUNT, not data volume (§9.4). Every `compactEvery` chunk-table
-    * commits the gate rewrites each bucket to one file
-    * ([[graft.sinks.Snapshots.compact]]) and re-stamps the sidecar at the
-    * compacted version (same digest set — no rebuild). The rewrite is
-    * O(corpus) every K batches — size-tiered cadence for a real
-    * deployment, a fixed K here. */
+    * FILE COUNT, not data volume (§9.4). Every `compactEvery` commits of
+    * each table the gate rewrites the buckets whose commit-dir count
+    * crossed the threshold to one file each
+    * ([[graft.sinks.Snapshots.compactFragmented]]), and when the chunk
+    * table's compaction published a version it re-stamps the sidecar there
+    * (same digest set — no rebuild). Rewrite bytes are ∝ the fragmented
+    * (recently-touched) buckets, never the whole corpus. */
   def startChunkStoreIngest(
       stream: DataFrame, // (doc_id: Long, text: String)
       chunkTable: String,
@@ -907,13 +909,12 @@ object StreamingOps {
           DigestBloom.write(spark, chunkTable, v2, next)
           // fragmentation maintenance: selectively rewrite buckets whose
           // commit-dir count crossed the threshold, then re-stamp the
-          // sidecar at the compacted version (identical digest set — no
-          // rebuild needed; a no-op compaction returns v2, where the
-          // sidecar already sits)
-          if (compactEvery > 0 && v2 % compactEvery == 0) {
-            val v3 = Snapshots.compactFragmented(spark, chunkTable)
-            if (v3 != v2) DigestBloom.write(spark, chunkTable, v3, next)
-          }
+          // sidecar at the version that compaction published (identical
+          // digest set — no rebuild needed; a no-op compaction publishes
+          // nothing and the sidecar stays at v2)
+          if (compactEvery > 0 && v2 % compactEvery == 0)
+            Snapshots.compactFragmented(spark, chunkTable)
+              .foreach(DigestBloom.write(spark, chunkTable, _, next))
         }
         val manifest = ch.select(
           pmod(col("doc_id"), lit(buckets)).as("dbucket"),
@@ -1037,7 +1038,6 @@ object StreamingOps {
       docIds: Seq[Long],
       buckets: Int): Unit = {
     var cands: Option[DataFrame] = None
-    var manifestLegRan = false
     if (Snapshots.versions(spark, manifestTable).nonEmpty && docIds.nonEmpty) {
       val dbks = docIds.map(i => (((i % buckets) + buckets) % buckets).toString).toSet
       // the whole derive+replace sits INSIDE the race retry: losing the
@@ -1045,20 +1045,15 @@ object StreamingOps {
       // retry around only the commit would replay stale inputs forever
       Snapshots.commitRetryingRaces() {
         cands = None
-        manifestLegRan = false
         val manV = Snapshots.versions(spark, manifestTable).last
+        def inBuckets(bks: Set[String]) =
+          Snapshots.readSelected(spark, manifestTable, Some(manV), _.get("dbucket").exists(bks))
+            .map { case (specs, rows) => (specs, rows.localCheckpoint()) } // probe + rewrite
         // manifest overlap probe FIRST (the standing gate discipline):
-        // after a prior erase emptied these docs' dbuckets the filter
-        // matches nothing, and a filtered read would refuse — that absence
-        // means the manifest leg is already done (the chunk sweep below
-        // still runs: recovery)
-        val replacedMan = Snapshots.partitions(spark, manifestTable, Some(manV))
-          .filter(sp => Snapshots.parseSpec(sp).get("dbucket").exists(dbks))
-        val bucketRows =
-          if (replacedMan.isEmpty) None
-          else Some(Snapshots.read(spark, manifestTable, Some(manV),
-              partitionFilter = m => m.get("dbucket").exists(dbks))
-            .localCheckpoint()) // one read serves the probe and the rewrite
+        // after a prior erase emptied these docs' dbuckets nothing is
+        // selected — that absence means the manifest leg is already done
+        // (the chunk sweep below still runs: recovery)
+        val derived = inBuckets(dbks)
         // COVERAGE CHECK on the dbucket derivation (same premise-
         // verification as the sweep's, ADVICE r16): with the ingest's own
         // bucket count every still-present requested doc lives in its
@@ -1066,58 +1061,40 @@ object StreamingOps {
         // EITHER already erased OR sitting in a partition the (mismatched)
         // derivation never read — and concluding "already erased" in the
         // second case silently RETAINS the doc on an erasure API.
-        val found: Set[Long] = bucketRows.map(
-          _.filter(col("doc_id").isin(docIds: _*)).select(col("doc_id"))
+        val found: Set[Long] = derived.map(
+          _._2.filter(col("doc_id").isin(docIds: _*)).select(col("doc_id"))
             .distinct().collect().map(_.getLong(0)).toSet).getOrElse(Set.empty)
-        if (found == docIds.toSet) {
-          val br = bucketRows.get
-          val erasedRows = br.filter(col("doc_id").isin(docIds: _*))
-          // the erased docs' own digests, pinned BEFORE the replace: only
-          // these can have been orphaned BY THIS ERASE, so the sweep can
-          // prune its chunk-side read to their cbuckets (§9.6 curve —
-          // without this the sweep re-reads the whole chunk table per
-          // erase). Pre-existing orphans from an earlier crash still
-          // fall to the full recovery sweep below.
-          cands = Some(erasedRows.select(col("chunk_hash")).distinct().localCheckpoint())
-          manifestLegRan = true
-          Snapshots.commitPartitionReplace(
-            br.filter(!col("doc_id").isin(docIds: _*)),
-            manifestTable, Seq("dbucket"), replacedMan,
-            baseVersion = Some(manV))
-        } else {
-          // premise failed for at least one doc: locate the docs' rows
-          // bucket-agnostically (ONE column-pruned manifest scan — the
-          // same O as the sweep's reference scan, paid only on premise
-          // failure), then rewrite exactly the partitions that hold them
-          val hitBks: Set[String] = Snapshots.read(spark, manifestTable, Some(manV))
+        // premise failed for at least one doc: locate the docs' rows
+        // bucket-agnostically (ONE column-pruned manifest scan — the same O
+        // as the sweep's reference scan, paid only on premise failure),
+        // then rewrite exactly the partitions that hold them; none found
+        // means genuinely nothing left to erase
+        val target =
+          if (found == docIds.toSet) derived
+          else inBuckets(Snapshots.read(spark, manifestTable, Some(manV))
             .filter(col("doc_id").isin(docIds: _*))
             .select(col("dbucket").cast("string")).distinct()
-            .collect().map(_.getString(0)).toSet
-          if (hitBks.isEmpty) manV // genuinely nothing left to erase
-          else {
-            val replaced2 = Snapshots.partitions(spark, manifestTable, Some(manV))
-              .filter(sp => Snapshots.parseSpec(sp).get("dbucket").exists(hitBks))
-            val rows2 = Snapshots.read(spark, manifestTable, Some(manV),
-                partitionFilter = m => m.get("dbucket").exists(hitBks))
-              .localCheckpoint()
-            cands = Some(rows2.filter(col("doc_id").isin(docIds: _*))
+            .collect().map(_.getString(0)).toSet)
+        target match {
+          case None => manV
+          case Some((replaced, rows)) =>
+            // the erased docs' own digests, pinned BEFORE the replace: only
+            // these can have been orphaned BY THIS ERASE, so the sweep can
+            // prune its chunk-side read to their cbuckets (§9.6 curve —
+            // without this the sweep re-reads the whole chunk table per
+            // erase). Pre-existing orphans from an earlier crash still
+            // fall to the full recovery sweep below.
+            cands = Some(rows.filter(col("doc_id").isin(docIds: _*))
               .select(col("chunk_hash")).distinct().localCheckpoint())
-            manifestLegRan = true
-            Snapshots.commitPartitionReplace(
-              rows2.filter(!col("doc_id").isin(docIds: _*)),
-              manifestTable, Seq("dbucket"), replaced2,
-              baseVersion = Some(manV))
-          }
+            Snapshots.commitPartitionReplace(rows.filter(!col("doc_id").isin(docIds: _*)),
+              manifestTable, Seq("dbucket"), replaced, baseVersion = Some(manV))
         }
       }
     }
-    if (manifestLegRan)
-      sweepOrphanChunksLocked(spark, manifestTable, chunkTable, cands, buckets)
-    else
-      // nothing matched the manifest (already-replaced dbuckets, an empty
-      // table, or no docIds): run the FULL recovery sweep — this is exactly
-      // the crash-between-commits path the header describes
-      sweepOrphanChunksLocked(spark, manifestTable, chunkTable, None, buckets)
+    // no candidates when nothing matched the manifest (already-replaced
+    // dbuckets, an empty table, or no docIds): the FULL recovery sweep —
+    // exactly the crash-between-commits path the header describes
+    sweepOrphanChunksLocked(spark, manifestTable, chunkTable, cands, buckets)
   }
 
   /** GC leg of [[chunkStoreErase]], callable on its own as crash recovery:
@@ -1184,42 +1161,40 @@ object StreamingOps {
           val pbks: Set[String] = cand
             .select(pmod(xxhash64(col("chunk_hash")), lit(buckets)).cast("string"))
             .distinct().collect().map(_.getString(0)).toSet
-          val parts = Snapshots.partitions(spark, chunkTable, Some(chunkV))
-          if (pbks.isEmpty || parts.isEmpty) None
-          else {
-            // localCheckpoint: the coverage count below AND the sweep's
-            // downstream reference anti-join both consume this join —
-            // uncached it would re-read the pruned partitions twice per
-            // erase (the exact IO the §9.6 pruning bought back). Bounded
-            // by the candidates' own chunk rows.
-            val pruned =
-              if (parts.exists(sp =>
-                  Snapshots.parseSpec(sp).get("cbucket").exists(pbks)))
-                Some(Snapshots.read(spark, chunkTable, Some(chunkV),
-                    partitionFilter = m => m.get("cbucket").exists(pbks))
-                  .select(col("cbucket"), col("chunk_hash"))
-                  .join(cand, Seq("chunk_hash"))
-                  .localCheckpoint())
-              else None
-            // COVERAGE CHECK on the pruning premise (ADVICE r16): the
-            // candidates came from manifest rows this erase just removed,
-            // and ingest commits chunks BEFORE manifests — so with the
-            // RIGHT bucket count every candidate digest is present in its
-            // derived cbucket. A candidate the pruned read cannot find
-            // means the premise is broken: the caller's `buckets` differs
-            // from the ingest's (the arithmetic derivation points at the
-            // wrong partitions — silently no-op'ing would RETAIN erased
-            // text on an erasure API), or a prior pass already swept it.
-            // Either way the bucket-agnostic full scan is correct, still
-            // candidate-joined, and only paid when the premise fails.
-            val candN = cand.count()
-            val foundN = pruned.map(
-              _.select(col("chunk_hash")).distinct().count()).getOrElse(0L)
-            if (candN == 0) None
-            else if (foundN == candN) pruned
-            else Some(Snapshots.read(spark, chunkTable, Some(chunkV))
-              .select(col("cbucket"), col("chunk_hash"))
-              .join(cand, Seq("chunk_hash")))
+          // the bucket-agnostic full scan, candidate-joined — None when the
+          // chunk table holds no spec at all (nothing stored to sweep)
+          def unpruned = Snapshots.readSelected(spark, chunkTable, Some(chunkV), _ => true)
+            .map(_._2.select(col("cbucket"), col("chunk_hash")).join(cand, Seq("chunk_hash")))
+          if (pbks.isEmpty) None
+          else Snapshots.readSelected(spark, chunkTable, Some(chunkV),
+              _.get("cbucket").exists(pbks)) match {
+            // no derived bucket is stored: the premise below fails outright
+            case None => unpruned
+            case Some((_, rows)) =>
+              // localCheckpoint: the coverage count below AND the sweep's
+              // downstream reference anti-join both consume this join —
+              // uncached it would re-read the pruned partitions twice per
+              // erase (the exact IO the §9.6 pruning bought back). Bounded
+              // by the candidates' own chunk rows.
+              val pruned = rows.select(col("cbucket"), col("chunk_hash"))
+                .join(cand, Seq("chunk_hash"))
+                .localCheckpoint()
+              // COVERAGE CHECK on the pruning premise (ADVICE r16): the
+              // candidates came from manifest rows this erase just removed,
+              // and ingest commits chunks BEFORE manifests — so with the
+              // RIGHT bucket count every candidate digest is present in its
+              // derived cbucket. A candidate the pruned read cannot find
+              // means the premise is broken: the caller's `buckets` differs
+              // from the ingest's (the arithmetic derivation points at the
+              // wrong partitions — silently no-op'ing would RETAIN erased
+              // text on an erasure API), or a prior pass already swept it.
+              // Either way the bucket-agnostic full scan is correct, still
+              // candidate-joined, and only paid when the premise fails.
+              val candN = cand.count()
+              val foundN = pruned.select(col("chunk_hash")).distinct().count()
+              if (candN == 0) None
+              else if (foundN == candN) Some(pruned)
+              else unpruned
           }
         case None => Some(Snapshots.read(spark, chunkTable, Some(chunkV))
           .select(col("cbucket"), col("chunk_hash")))
@@ -1235,16 +1210,14 @@ object StreamingOps {
             .localCheckpoint() // bounded by the erased docs' own chunk count
           val cbks = dead.select(col("cbucket").cast("string"))
             .distinct().collect().map(_.getString(0)).toSet
-          val replaced =
-            if (cbks.isEmpty) Seq.empty
-            else Snapshots.partitions(spark, chunkTable, Some(chunkV))
-              .filter(sp => Snapshots.parseSpec(sp).get("cbucket").exists(cbks))
-          if (replaced.isEmpty) chunkV // nothing orphaned — idempotent no-op
-          else Snapshots.commitPartitionReplace(
-            Snapshots.read(spark, chunkTable, Some(chunkV),
-                partitionFilter = m => m.get("cbucket").exists(cbks))
-              .join(dead.select(col("chunk_hash")), Seq("chunk_hash"), "left_anti"),
-            chunkTable, Seq("cbucket"), replaced, baseVersion = Some(chunkV))
+          (if (cbks.isEmpty) None
+            else Snapshots.readSelected(spark, chunkTable, Some(chunkV),
+              _.get("cbucket").exists(cbks))) match {
+            case None => chunkV // nothing orphaned — idempotent no-op
+            case Some((replaced, rows)) => Snapshots.commitPartitionReplace(
+              rows.join(dead.select(col("chunk_hash")), Seq("chunk_hash"), "left_anti"),
+              chunkTable, Seq("cbucket"), replaced, baseVersion = Some(chunkV))
+          }
       }
     }
     ()
@@ -1349,15 +1322,12 @@ object StreamingOps {
         // inputs; an unpinned replace would drop interleaved commits)
         Snapshots.commitRetryingRaces() {
           val v = Snapshots.versions(spark, table).last
-          val replaced = Snapshots.partitions(spark, table, Some(v))
-            .filter(sp => Snapshots.parseSpec(sp).get(partCol).exists(bks))
-          if (replaced.isEmpty) v
-          else {
-            val kept = Snapshots.read(spark, table, Some(v),
-                partitionFilter = m => m.get(partCol).exists(bks))
-              .join(ids, Seq("doc_id"), "left_anti")
-            Snapshots.commitPartitionReplace(kept, table, Seq(partCol), replaced,
-              baseVersion = Some(v))
+          val want = bks // by-name: derived once per attempt, not per spec
+          Snapshots.readSelected(spark, table, Some(v), _.get(partCol).exists(want)) match {
+            case None => v
+            case Some((replaced, rows)) =>
+              Snapshots.commitPartitionReplace(rows.join(ids, Seq("doc_id"), "left_anti"),
+                table, Seq(partCol), replaced, baseVersion = Some(v))
           }
         }
         ()

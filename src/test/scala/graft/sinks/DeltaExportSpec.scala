@@ -590,7 +590,9 @@ class DeltaExportSpec extends SparkSpec {
   * discipline. RawLocalFileSystem.listStatus delegates to getFileStatus
   * per child internally — an implementation detail of the LOCAL fs (an
   * object store answers a list in one RPC), so nested calls are excluded
-  * from the count via the in-list flag. */
+  * from the count via the in-list flag. LISTs and opens under a table's
+  * `_manifests` dir are also tallied on their own, so a spec can pin how
+  * often an operation resolves a manifest. */
 class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "cfs"
   override def getUri: java.net.URI = java.net.URI.create("cfs:///")
@@ -600,6 +602,7 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   }
   override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
     CountingFs.lists.incrementAndGet()
+    if (CountingFs.underManifests(p)) CountingFs.manifestLists.incrementAndGet()
     CountingFs.inList.set(true)
     try super.listStatus(p) finally CountingFs.inList.set(false)
   }
@@ -608,6 +611,7 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     // parquet only: a plan-time read legitimately opens the (one) manifest
     // JSON; what must stay zero is DATA-file footer reconciliation
     if (p.getName.endsWith(".parquet")) CountingFs.opens.incrementAndGet()
+    if (CountingFs.underManifests(p)) CountingFs.manifestOpens.incrementAndGet()
     super.open(p, bufferSize)
   }
 }
@@ -616,5 +620,9 @@ object CountingFs {
   val gets = new java.util.concurrent.atomic.AtomicInteger(0)
   val lists = new java.util.concurrent.atomic.AtomicInteger(0)
   val opens = new java.util.concurrent.atomic.AtomicInteger(0)
+  val manifestLists = new java.util.concurrent.atomic.AtomicInteger(0)
+  val manifestOpens = new java.util.concurrent.atomic.AtomicInteger(0)
+  def underManifests(p: org.apache.hadoop.fs.Path): Boolean =
+    p.getName == "_manifests" || p.toUri.getPath.contains("/_manifests/")
   val inList = new ThreadLocal[Boolean] { override def initialValue(): Boolean = false }
 }

@@ -143,7 +143,7 @@ class SnapshotsSpec extends SparkSpec {
 
     val vBefore = Snapshots.versions(spark, t).last
     val v = Snapshots.compactFragmented(spark, t, maxBasesPerSpec = 4)
-    assert(v == vBefore + 1, "fragmented spec present — must commit")
+    assert(v == Some(vBefore + 1), "fragmented spec present — must commit")
     // hot collapsed to one commit dir / one file; cold untouched
     assert(bases("g=hot").size == 1)
     val coldFilesAfter = Snapshots.read(spark, t, None, m => m("g") == "cold")
@@ -158,8 +158,10 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.read(spark, t).select("k").as[Int].collect().sorted.toSeq ==
       Seq(-1, 0, 1, 2, 3, 4, 5))
     // nothing fragmented anymore: the next call is a NO-OP — no commit
-    assert(Snapshots.compactFragmented(spark, t, maxBasesPerSpec = 4) == v)
-    assert(Snapshots.versions(spark, t).last == v)
+    val vsCompacted = Snapshots.versions(spark, t)
+    assert(Snapshots.compactFragmented(spark, t, maxBasesPerSpec = 4).isEmpty)
+    assert(Snapshots.versions(spark, t) == vsCompacted)
+    assert(vsCompacted.last == vBefore + 1)
 
     // a fully-erased table: both compaction flavors no-op instead of
     // committing an empty UNPARTITIONED version (which would flip the
@@ -168,22 +170,52 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commitPartitioned(Seq(("x", 1)).toDF("g", "k"), e, Seq("g"))
     Snapshots.commitPartitionReplace(Seq.empty[(String, Int)].toDF("g", "k"),
       e, Seq("g"), Seq("g=x"))
-    val ev = Snapshots.versions(spark, e).last
+    val evs = Snapshots.versions(spark, e)
+    val ev = evs.last
     assert(Snapshots.compact(spark, e) == ev)
-    assert(Snapshots.compactFragmented(spark, e) == ev)
+    assert(Snapshots.compactFragmented(spark, e).isEmpty)
+    assert(Snapshots.versions(spark, e) == evs)
     Snapshots.commitPartitioned(Seq(("y", 2)).toDF("g", "k"), e, Seq("g"))
     assert(Snapshots.read(spark, e).count() == 1)
 
     // unpartitioned tier: all-or-nothing via dirs count
     val u = tmp()
     (1 to 3).foreach(i => Snapshots.commit(Seq((i, s"v$i")).toDF("k", "v"), u))
-    val uv = Snapshots.versions(spark, u).last
-    assert(Snapshots.compactFragmented(spark, u, maxBasesPerSpec = 4) == uv) // 3 <= 4
+    val uvs = Snapshots.versions(spark, u)
+    assert(Snapshots.compactFragmented(spark, u, maxBasesPerSpec = 4).isEmpty) // 3 <= 4
+    assert(Snapshots.versions(spark, u) == uvs)
     (4 to 6).foreach(i => Snapshots.commit(Seq((i, s"v$i")).toDF("k", "v"), u))
     val uv2 = Snapshots.compactFragmented(spark, u, maxBasesPerSpec = 4)
-    assert(uv2 == Snapshots.versions(spark, u).last)
+    assert(uv2 == Some(Snapshots.versions(spark, u).last))
     assert(Snapshots.read(spark, u).count() == 6)
     assert(Snapshots.read(spark, u).inputFiles.length == 1)
+  }
+
+  test("compactFragmented resolves the manifest once to decide and once to commit") {
+    spark.sparkContext.hadoopConfiguration.set("fs.cfs.impl", classOf[CountingFs].getName)
+    val t = "cfs://" + tmp()
+    Snapshots.commitPartitioned(Seq(("cold", 0)).toDF("g", "k"), t, Seq("g"))
+    (1 to 3).foreach(i => Snapshots.commitPartitioned(Seq(("hot", i)).toDF("g", "k"), t, Seq("g")))
+    // (result, `_manifests` LISTs, manifest opens) of one call
+    def manifestIo[T](body: => T): (T, Int, Int) = {
+      CountingFs.manifestLists.set(0)
+      CountingFs.manifestOpens.set(0)
+      val out = body
+      (out, CountingFs.manifestLists.get(), CountingFs.manifestOpens.get())
+    }
+    // a compacting call: one LIST + open to decide and pin the rewrite's
+    // input, one more of each for the commit's base check and prior manifest
+    val (v, lists, opens) = manifestIo(Snapshots.compactFragmented(spark, t, maxBasesPerSpec = 2))
+    assert(v == Some(5L))
+    assert(lists == 2, s"compacting call: $lists _manifests LISTs")
+    assert(opens <= 2, s"compacting call: $opens manifest opens")
+    // a no-op call decides from one LIST and one open
+    val (noop, noopLists, noopOpens) =
+      manifestIo(Snapshots.compactFragmented(spark, t, maxBasesPerSpec = 2))
+    assert(noop.isEmpty)
+    assert((noopLists, noopOpens) == (1, 1), s"no-op call: $noopLists LISTs, $noopOpens opens")
+    assert(Snapshots.versions(spark, t) == (1L to 5L))
+    assert(Snapshots.read(spark, t).select("k").as[Int].collect().sorted.toSeq == Seq(0, 1, 2, 3))
   }
 
   test("concurrent writers: each version is won by exactly one publish; losers fail loudly, the chain stays consistent") {
@@ -296,7 +328,7 @@ class SnapshotsSpec extends SparkSpec {
     (1 to 5).foreach(i => Snapshots.commitPartitioned(
       Seq(("a", 100 + i)).toDF("g", "k"), t, Seq("g")))
     val v = Snapshots.compactFragmented(spark, t, maxBasesPerSpec = 2)
-    assert(v == Snapshots.versions(spark, t).last)
+    assert(v == Some(Snapshots.versions(spark, t).last))
     assert(Snapshots.read(spark, t).select("k").as[Int].collect().toSet ==
       Set(1, 3, 101, 102, 103, 104, 105))
   }
@@ -774,6 +806,19 @@ class SnapshotsSpec extends SparkSpec {
     }
     assert(Snapshots.parseSpec(Snapshots.partitions(spark, t).head) == Map("g" -> "x y"))
     assert(Snapshots.read(spark, t).select("g").as[String].head() == "x y")
+    // the reverse direction: partitioned commits on a plain table are
+    // refused BEFORE any data is written, so no orphan commit dir is left
+    // in data/ for vacuum's grace window to keep
+    val plain = tmp()
+    Snapshots.commit(Seq((1, "a")).toDF("k", "v"), plain)
+    intercept[IllegalArgumentException] {
+      Snapshots.commitPartitioned(Seq((2, "b")).toDF("k", "g"), plain, Seq("g"))
+    }
+    intercept[IllegalArgumentException] {
+      Snapshots.commitPartitionReplace(Seq((2, "b")).toDF("k", "g"), plain, Seq("g"), Seq("g=b"))
+    }
+    assert(new java.io.File(s"$plain/data").list().toSeq.map(_.take(8)) == Seq("c-00001-"))
+    assert(Snapshots.versions(spark, plain) == Seq(1L))
     // percent-decode discipline: %XX decodes, '+' stays literal (hive
     // never escapes it), malformed/SIGNED escapes pass through verbatim
     // (Integer.parseInt would otherwise accept "%-1"/"%+4" as hex)
@@ -1023,7 +1068,7 @@ class SnapshotsSpec extends SparkSpec {
       t, cols, SaveMode.Overwrite)                                               // v2 dynamic overwrite
     Snapshots.commitPartitioned(Seq(("2025-01-01", "a", 4), ("2025-01-03", odd, 5))
       .toDF("dt", "g", "k"), t, cols)                                            // v3 append
-    assert(Snapshots.compactFragmented(spark, t, maxBasesPerSpec = 1) == 4L)    // v4 rewrite
+    assert(Snapshots.compactFragmented(spark, t, maxBasesPerSpec = 1) == Some(4L)) // v4 rewrite
     Snapshots.commitPartitioned(Seq(("2025-01-02", "b", 6, "e"))
       .toDF("dt", "g", "k", "extra"), t, cols)                                   // v5 adds a column
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
