@@ -16,14 +16,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     are immutable and live under the table root, so the log simply
   *     references them relative — no data copy, and any standard Delta
   *     reader (Spark+delta, DuckDB delta, Trino, polars) can now scan the
-  *     engine's table.
+  *     engine's table. The files, sizes and partition values come from
+  *     [[Snapshots.liveFiles]]: one manifest open and one LIST per leaf
+  *     dir. A null partition value is written as JSON null.
   *   - [[read]]: scan a Delta table through its log — replay the JSON
   *     commits in version order, accumulate `add` minus `remove` (path
   *     identity, the protocol's reconciliation rule), and read exactly the
-  *     live files, hive partition columns materialized from each add's
-  *     `partitionValues`. This is the manifest-resolved scan discipline
-  *     ([[Snapshots.read]]) applied to the external format: no directory
-  *     listing, partition pruning available BEFORE any file IO.
+  *     live files as ONE parquet relation ([[Snapshots.scanFiles]]) in
+  *     which each file carries its own add's `partitionValues` (JSON null
+  *     and "" read as null). This is the manifest-resolved scan discipline
+  *     ([[Snapshots.read]]) applied to the external format: partition
+  *     pruning on the log BEFORE any file IO, one LIST per dir the kept
+  *     files live in, and a filter on a partition column pruning files.
   *
   * Checkpoints: [[export]] writes a single-part parquet CHECKPOINT
   * (`NNN…N.checkpoint.parquet` + `_last_checkpoint`) every
@@ -88,37 +92,10 @@ object DeltaExport {
       checkpointInterval: Int = 10,
       logRetention: Int = 0): Long = {
     val f = fs(spark, table)
-    val vs = Snapshots.versions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val current = Snapshots.read(spark, table)
-    val schemaJson = current.schema.json
-    val partCols = Snapshots.partitions(spark, table) match {
-      case Seq() => Seq.empty[String]
-      case specs => Snapshots.parseSpec(specs.head).keys.toSeq
-        .sortBy(k => specs.head.split('/').indexWhere(_.startsWith(k + "=")))
-    }
-    // live parquet files with their partition values, via the same
-    // manifest resolution the engine reads with (inputFiles resolves from
-    // the manifest, not a listing)
-    val root = f.makeQualified(new Path(table)).toString.stripSuffix("/")
-    val uris = current.inputFiles.toSeq.sorted
-    val statByPath = statLiveFiles(f, uris)
-    val files = uris.map { uri =>
-      val qualified = f.makeQualified(new Path(new java.net.URI(uri))).toString
-      require(qualified.startsWith(root + "/"),
-        s"data file $qualified outside table root $root")
-      val rel = qualified.stripPrefix(root + "/")
-      val st = statByPath.getOrElse(qualified,
-        f.getFileStatus(new Path(new java.net.URI(uri))))
-      // partition values parse from the path's k=v segments (the commit
-      // dirs are hive-layout for partitioned tables; hive %XX unescape,
-      // '+' literal)
-      val pv = rel.split('/').filter(_.contains('=')).map { kv =>
-        val i = kv.indexOf('=')
-        kv.substring(0, i) -> Snapshots.percentDecode(kv.substring(i + 1))
-      }.toMap
-      (rel, st.getLen, st.getModificationTime, pv)
-    }
+    // the live files with their sizes, mtimes and partition values (null
+    // for a null partition), from the snapshot read's own listing
+    val (schema, partCols, files) = Snapshots.liveFiles(spark, table)
+    val schemaJson = schema.json
     val priorVersions = listDeltaVersions(f, table)
     val priorCkpts = listCheckpointVersions(f, table)
     val v = (priorVersions ++ priorCkpts).maxOption.map(_ + 1).getOrElse(0L)
@@ -158,7 +135,7 @@ object DeltaExport {
       line(mapper.writeValueAsString(metaW))
     }
     val nowMs = System.currentTimeMillis()
-    val currentSet = files.map(_._1).toSet
+    val currentSet = files.map(_.rel).toSet
     priorLive.diff(currentSet).toSeq.sorted.foreach { gone =>
       val rmW = mapper.createObjectNode()
       val rm = rmW.putObject("remove")
@@ -167,31 +144,24 @@ object DeltaExport {
       rm.put("dataChange", true)
       line(mapper.writeValueAsString(rmW))
     }
-    files.filterNot(fi => priorLive.contains(fi._1)).foreach {
-      case (rel, len, mtime, pv) =>
-        val addW = mapper.createObjectNode()
-        val add = addW.putObject("add")
-        add.put("path", encodePath(rel)) // spec: percent-encoded relative path
-        val pvo = add.putObject("partitionValues")
-        pv.toSeq.sortBy(_._1).foreach { case (k, vv) => pvo.put(k, vv) }
-        add.put("size", len)
-        add.put("modificationTime", mtime)
-        add.put("dataChange", true)
-        line(mapper.writeValueAsString(addW))
+    files.filterNot(fi => priorLive.contains(fi.rel)).foreach { fi =>
+      val addW = mapper.createObjectNode()
+      val add = addW.putObject("add")
+      add.put("path", encodePath(fi.rel)) // spec: percent-encoded relative path
+      // a null partition value serializes as JSON null (the protocol's
+      // "Partition Value Serialization")
+      val pvo = add.putObject("partitionValues")
+      fi.partitionValues.toSeq.sortBy(_._1).foreach { case (k, vv) => pvo.put(k, vv) }
+      add.put("size", fi.status.getLen)
+      add.put("modificationTime", fi.status.getModificationTime)
+      add.put("dataChange", true)
+      line(mapper.writeValueAsString(addW))
     }
-    // write-temp + rename: same atomic publish discipline as Snapshots,
-    // same per-writer tmp nonce (a shared version-derived tmp lets a
-    // racing loser overwrite the winner's bytes before its rename)
+    // the same atomic no-overwrite publish as a Snapshots manifest
     f.mkdirs(logDir(table))
-    val tmp = new Path(logDir(table),
-      f".$v%020d.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!Snapshots.publishNoOverwrite(f, tmp, versionFile(table, v))) {
-      try f.delete(tmp, false) catch { case _: java.io.IOException => () }
-      throw new java.io.IOException(s"delta export race on $table v$v")
-    }
+    Snapshots.publishAtomically(f, versionFile(table, v),
+      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      s"delta export race on $table v$v")
     if (checkpointInterval > 0 && v > 0 && v % checkpointInterval == 0) {
       writeCheckpoint(spark, f, table, v, schemaJson, partCols, files)
       if (logRetention > 0) {
@@ -225,20 +195,6 @@ object DeltaExport {
     }
     v
   }
-
-  /** size/mtime for the live files via ONE listStatus per leaf directory,
-    * not a getFileStatus per file: at millions of files the per-file form
-    * is millions of sequential metadata RPCs on an object store — the
-    * exact disease [[Snapshots.versionAsOf]] documents avoiding. O(leaf
-    * dirs) calls, keyed by qualified path (spec-pinned via a counting
-    * FileSystem in DeltaExportSpec). */
-  private[sinks] def statLiveFiles(
-      f: FileSystem,
-      uris: Seq[String]): Map[String, org.apache.hadoop.fs.FileStatus] =
-    uris.map(u => new Path(new java.net.URI(u)).getParent).distinct
-      .flatMap(dir => f.listStatus(dir).filter(_.isFile)
-        .map(st => f.makeQualified(st.getPath).toString -> st))
-      .toMap
 
   private def checkpointPath(table: String, v: Long) =
     new Path(logDir(table), f"$v%020d.checkpoint.parquet")
@@ -297,7 +253,7 @@ object DeltaExport {
       v: Long,
       schemaJson: String,
       partCols: Seq[String],
-      files: Seq[(String, Long, Long, Map[String, String])]): Unit = {
+      files: Seq[Snapshots.LiveFile]): Unit = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
     val pvType = MapType(StringType, StringType, valueContainsNull = true)
@@ -355,13 +311,15 @@ object DeltaExport {
       Row(tableId, Row("parquet", Map.empty[String, String]), schemaJson,
         partCols, Map.empty[String, String], System.currentTimeMillis()),
       null))
-    files.foreach { case (rel, len, mtime, pv) =>
+    files.foreach { fi =>
+      val (pv, len, mtime) =
+        (fi.partitionValues, fi.status.getLen, fi.status.getModificationTime)
       val add =
-        if (parsedField.isEmpty) Row(encodePath(rel), pv, len, mtime, true)
+        if (parsedField.isEmpty) Row(encodePath(fi.rel), pv, len, mtime, true)
         else {
           val parsed = Row.fromSeq(partCols.map(c =>
             parsedExternal(parsedTypes(c), pv.getOrElse(c, null))))
-          Row(encodePath(rel), pv, parsed, len, mtime, true)
+          Row(encodePath(fi.rel), pv, parsed, len, mtime, true)
         }
       rows.add(Row(null, null, add))
     }
@@ -650,13 +608,16 @@ object DeltaExport {
     * the shared hive/protocol decoder. */
   private[sinks] def decodePath(p: String): String = Snapshots.percentDecode(p)
 
-  /** Scan a Delta table (log-resolved, no directory listing). The latest
+  /** Scan a Delta table, its files resolved from the log. The latest
     * version by default; any version whose JSON commits are retained
     * otherwise (Delta time travel). `partitionFilter` prunes on each add's
     * `partitionValues` BEFORE any file IO — same contract as
     * [[Snapshots.read]] — and rides INTO the checkpoint scan as a UDF
     * (so it must be serializable; any plain closure is), keeping driver
-    * state ∝ kept files rather than table size. */
+    * state ∝ kept files rather than table size. The kept files are ONE
+    * parquet relation whose file index holds one partition per distinct
+    * `partitionValues` tuple ([[Snapshots.scanFiles]]): one plan node
+    * however many tuples, with no union. */
   def read(
       spark: SparkSession,
       table: String,
@@ -751,31 +712,13 @@ object DeltaExport {
       .getOrElse(throw new IllegalStateException(s"no metaData action in $table log"))
     val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val live = liveMap.toSeq
-      .filter { case (_, pv) => combined(pv) }
-    val dataCols = schema.filterNot(fld => partCols.contains(fld.name))
-    val dataSchema = org.apache.spark.sql.types.StructType(dataCols)
-    if (live.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    if (partCols.isEmpty)
-      spark.read.schema(dataSchema).parquet(live.map(t => s"$table/${t._1}"): _*)
-    else {
-      // group files by identical partition tuple; literal partition columns
-      // attach per group from the log's partitionValues (the protocol's
-      // source of truth — hive path segments are not re-parsed)
-      import org.apache.spark.sql.functions.lit
-      live.groupBy(_._2).toSeq.sortBy(_._1.toSeq.sortBy(_._1).mkString(","))
-        .map { case (pv, paths) =>
-          val base = spark.read.schema(dataSchema)
-            .parquet(paths.map(t => s"$table/${t._1}"): _*)
-          partCols.foldLeft(base) { (df, c) =>
-            val field = schema(c)
-            df.withColumn(c, lit(pv.getOrElse(c, null)).cast(field.dataType))
-          }
-        }
-        .reduce(_.unionByName(_))
-        .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
-    }
+    // each kept add's partition values, as the log states them, attach to
+    // its own file (the protocol's source of truth — hive path segments
+    // are not re-parsed); an empty string is a null, per the protocol's
+    // "Partition Value Serialization"
+    Snapshots.scanFiles(spark, schema, partCols, liveMap.toSeq.collect {
+      case (rel, pv) if combined(pv) =>
+        (s"$table/$rel", pv.map { case (c, x) => c -> (if (x == null || x.isEmpty) null else x) })
+    })
   }
 }

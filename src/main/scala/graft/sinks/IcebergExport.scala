@@ -26,7 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     manifests' TYPED partition tuples BEFORE any file IO (the
   *     [[Snapshots.read]] discipline applied to the external format; hive
   *     path segments are never re-parsed — the manifest is the source of
-  *     truth, as the spec requires).
+  *     truth, as the spec requires). The kept files are ONE parquet
+  *     relation in which each file carries its manifest entry's tuple
+  *     ([[Snapshots.scanFiles]]): no union, and no join on file names.
   *
   * `record_count` is REQUIRED by the spec for every data file; a real
   * writer knows it at write time, an exporter must recover it. One footer
@@ -247,10 +249,11 @@ object IcebergExport {
   /** `record_count` for every live parquet file — REQUIRED by the spec.
     * One footer read per file, distributed over the cluster: a driver-side
     * loop would be millions of sequential opens at scale (the same
-    * metadata-RPC disease [[DeltaExport.statLiveFiles]] documents). The
-    * session's hadoop configuration ships to the executors whole, so
-    * store credentials and filesystem registrations resolve identically
-    * to the driver path. */
+    * metadata-RPC disease [[Snapshots.liveFiles]] avoids by taking sizes
+    * from one LIST per leaf dir, not a stat per file). The session's
+    * hadoop configuration ships to the executors whole, so store
+    * credentials and filesystem registrations resolve identically to the
+    * driver path. */
   private def recordCounts(spark: SparkSession, uris: Seq[String]): Map[String, Long] =
     if (uris.isEmpty) Map.empty
     else if (uris.size <= 16) {
@@ -314,45 +317,29 @@ object IcebergExport {
   def export(spark: SparkSession, table: String, retainSnapshots: Int = 10): Long = {
     require(retainSnapshots >= 1, "retainSnapshots must be >= 1")
     val f = fs(spark, table)
-    val vs = Snapshots.versions(spark, table)
-    require(vs.nonEmpty, s"no snapshots at $table")
-    val current = Snapshots.read(spark, table)
-    val schema = current.schema
-    val partCols = Snapshots.partitions(spark, table) match {
-      case Seq() => Seq.empty[String]
-      case specs => Snapshots.parseSpec(specs.head).keys.toSeq
-        .sortBy(k => specs.head.split('/').indexWhere(_.startsWith(k + "=")))
-    }
+    // the live files with their sizes and partition values (null for a
+    // null partition), from the snapshot read's own listing
+    val (schema, partCols, live) = Snapshots.liveFiles(spark, table)
     val fieldId = schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     val root = f.makeQualified(new Path(table)).toString.stripSuffix("/")
 
-    // live files + their typed partition tuples (hive %XX decode, then the
-    // identity codec casts to the column's type)
-    val uris = current.inputFiles.toSeq.sorted
-    val statByPath = DeltaExport.statLiveFiles(f, uris)
+    // typed partition tuples: the identity codec casts each value to its
+    // column's type
+    val uris = live.map(_.status.getPath.toUri.toString)
     val counts = recordCounts(spark, uris)
     val partTypes = partCols.map(c => c -> schema(c).dataType)
     val codecs = partTypes.map { case (c, t) => c -> partCodec(t) }.toMap
-    val files = uris.map { uri =>
-      val qualified = f.makeQualified(new Path(new java.net.URI(uri))).toString
-      require(qualified.startsWith(root + "/"),
-        s"data file $qualified outside table root $root")
-      val rel = qualified.stripPrefix(root + "/")
-      val st = statByPath.getOrElse(qualified,
-        f.getFileStatus(new Path(new java.net.URI(uri))))
-      val pv: Map[String, AnyRef] = rel.split('/').filter(_.contains('=')).map { kv =>
-        val i = kv.indexOf('=')
-        val k = kv.substring(0, i)
-        val raw = Snapshots.percentDecode(kv.substring(i + 1))
-        k -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null else codecs(k)._2(raw))
-      }.toMap
+    val files = live.zip(uris).map { case (lf, uri) =>
+      val pv: Map[String, AnyRef] = lf.partitionValues.map { case (k, raw) =>
+        k -> (if (raw == null) null else codecs(k)._2(raw))
+      }
       // record_count is spec-REQUIRED and consumed by scan planners and
       // count(*) shortcuts downstream — a missing footer read must fail
       // the export by name, never publish 0 (ADVICE r17)
       val nRows = counts.getOrElse(uri, throw new IllegalStateException(
         s"IcebergExport: no footer record count recovered for live file $uri " +
           "— refusing to publish metadata with a wrong record_count"))
-      (qualified, st.getLen, nRows, pv)
+      (lf.status.getPath.toString, lf.status.getLen, nRows, pv)
     }
 
     // chain state: prior metadata carries uuid, snapshots, sequence
@@ -569,14 +556,8 @@ object IcebergExport {
       mlog.addObject().put("timestamp-ms", nowMs)
         .put("metadata-file", f.makeQualified(metadataPath(table, pv)).toString)
     }
-    val tmp = new Path(metaDir(table),
-      s".v$v.metadata.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(md)) finally out.close()
-    if (!Snapshots.publishNoOverwrite(f, tmp, metadataPath(table, v))) {
-      try f.delete(tmp, false) catch { case _: java.io.IOException => () }
-      throw new java.io.IOException(s"iceberg export race on $table v$v")
-    }
+    Snapshots.publishAtomically(f, metadataPath(table, v), mapper.writeValueAsBytes(md),
+      s"iceberg export race on $table v$v")
     // version-hint.text (HadoopCatalog convention): best-effort pointer,
     // the listing is authoritative
     val hintTmp = new Path(metaDir(table),
@@ -645,19 +626,6 @@ object IcebergExport {
       out.result()
     } finally rd.close()
   }
-
-  /** Scheme/authority-insensitive canonical form of a file URI, the join
-    * key between manifest-declared paths and `input_file_name()` output —
-    * Hadoop prints `file:/a`, Spark's scan reports `file:///a`, and both
-    * must key the same partition tuple. Unparseable strings pass through
-    * raw (both sides use this same function, so a shared raw form still
-    * matches). */
-  private[sinks] def normPath(s: String): String =
-    try {
-      val u = new java.net.URI(s)
-      if (u.getScheme == null) s
-      else s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
-    } catch { case _: java.net.URISyntaxException => s }
 
   /** One manifest's KEPT live data files as plain `(file_path, partition
     * tuple)` pairs — plain data, not GenericRecords, so the distributed
@@ -904,7 +872,10 @@ object IcebergExport {
     * executor-side inside the distributed manifest scan (so it must be
     * serializable there — any plain closure is), with only kept files
     * returning to the driver. Every out-of-scope feature refuses loudly
-    * by name.
+    * by name. The kept files are read as ONE parquet relation whose file
+    * index holds one partition per distinct tuple
+    * ([[Snapshots.scanFiles]]), so the plan stays one scan however many
+    * tuples the table has.
     *
     * `predicates` (round-20): a conjunction of STRUCTURED
     * [[PartitionPredicate]]s, applied IN ADDITION to the closure (a file
@@ -975,7 +946,7 @@ object IcebergExport {
     }
     val pCols = partCols.result()
     // partition SOURCE types must survive the stringify → cast round trip
-    // the literal-column attachment below performs: a date/timestamptz/
+    // the scan below performs on each file's tuple: a date/timestamptz/
     // decimal identity partition would stringify to its raw storage form
     // (epoch days / micros) and cast back to NULL — a silent misread.
     // Refuse those loudly, mirroring partCodec on the export side.
@@ -1068,9 +1039,7 @@ object IcebergExport {
     // metadata-RPC disease this module repeatedly refuses (VERDICT r17
     // item 4a). The predicate ships with the job on that path, so it must
     // be serializable (any plain Scala closure over plain values is).
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      schema.filterNot(fld => pCols.contains(fld.name)))
-    val expectedCols = dataSchema.fieldNames.toSeq
+    val expectedCols = schema.fieldNames.toSeq.filterNot(pCols.contains)
     val kept: Seq[(String, Map[String, String])] =
       if (manifests.size <= 16)
         manifests.flatMap(mp =>
@@ -1095,50 +1064,9 @@ object IcebergExport {
           }.collect().toSeq // bounded: one (path, tuple) pair per KEPT file
       }
 
-    if (kept.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    if (pCols.isEmpty)
-      spark.read.schema(dataSchema).parquet(kept.map(_._1): _*)
-    else {
-      // ONE parquet read over every kept file; partition columns attach
-      // via a BROADCAST (normalized path → typed tuple) join keyed on
-      // input_file_name(). The r17 shape — one read + unionByName per
-      // DISTINCT tuple — was correct but O(partitions) in plan size: at
-      // thousands of partition tuples the union chain bloats analysis and
-      // codegen (VERDICT r17 item 4b). The manifest's typed values stay
-      // the source of truth — hive path segments are never re-parsed.
-      import org.apache.spark.sql.functions.{broadcast, col, concat, input_file_name, lit, raise_error, udf, when}
-      import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
-      val pvRows = kept.map { case (p, pv) =>
-        org.apache.spark.sql.Row.fromSeq(
-          (normPath(p) +: pCols.map(c => pv.getOrElse(c, null))) :+ true)
-      }
-      val pvDf = pCols.foldLeft(
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(pvRows, 1),
-          StructType((StructField("__graft_file", StringType) +:
-            pCols.map(c => StructField(c, StringType))) :+
-            StructField("__graft_hit", BooleanType))))(
-        (d, c) => d.withColumn(c, col(c).cast(schema(c).dataType)))
-      val norm = udf(normPath _)
-      spark.read.schema(dataSchema).parquet(kept.map(_._1): _*)
-        .withColumn("__graft_file", norm(input_file_name()))
-        .join(broadcast(pvDf), Seq("__graft_file"), "left")
-        // a row whose scan path matched no manifest path would carry NULL
-        // partition columns — a silent misread in a module whose contract
-        // is refuse-loudly. Only a normPath asymmetry could cause it
-        // (both sides run the same function, but exotic URI encodings
-        // exist); make the miss throw AT SCAN TIME naming the file.
-        .withColumn("__graft_hit",
-          when(col("__graft_hit").isNull, raise_error(concat(
-            lit("IcebergExport: scanned file "), col("__graft_file"),
-            lit(" matched no manifest data_file path — URI normalization " +
-              "mismatch between the manifest and the scan; refusing a " +
-              "silent NULL-partition read"))))
-            .otherwise(col("__graft_hit")))
-        .filter(col("__graft_hit")) // always true; forces the guard's eval
-        .select(schema.fieldNames.map(col).toSeq: _*)
-    }
+    // ONE parquet relation over every kept file, each file carrying its
+    // manifest entry's typed tuple (the source of truth — hive path
+    // segments are never re-parsed)
+    Snapshots.scanFiles(spark, schema, pCols, kept)
   }
 }

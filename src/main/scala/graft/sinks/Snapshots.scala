@@ -5,7 +5,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path}
 import org.apache.hadoop.fs.viewfs.ViewFileSystem
 import org.apache.hadoop.hdfs.DistributedFileSystem
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.SqlBridge
 import org.apache.spark.sql.types.StructType
@@ -128,21 +130,33 @@ object Snapshots {
     }
     m.schema.foreach(root.put("schema", _))
     f.mkdirs(manifestDir(table))
-    // tmp name carries a per-writer nonce: a version-derived tmp is SHARED
-    // by concurrent writers racing the same version, and the loser can
-    // overwrite the winner's tmp content before its publish — publishing
-    // the wrong manifest under the winner's version (found live by the
-    // concurrent-writers spec). With unique tmps each writer publishes only
-    // its own bytes and the no-overwrite publish arbitrates the version.
-    val tmp = new Path(manifestDir(table),
-      f".v$v%05d.json.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writeValueAsBytes(root)) finally out.close()
-    if (!publishNoOverwrite(f, tmp, manifestPath(table, v))) {
-      try f.delete(tmp, false) catch { case _: java.io.IOException => () }
-      throw new java.io.IOException(s"snapshot commit race on $table v$v")
-    }
+    publishAtomically(f, manifestPath(table, v), mapper.writeValueAsBytes(root),
+      s"snapshot commit race on $table v$v")
     v
+  }
+
+  /** Publish `bytes` as `dst` unless `dst` already exists: write them to a
+    * tmp beside `dst`, then [[publishNoOverwrite]]. On a lost race the tmp
+    * is deleted and an IOException with message `race` is thrown. The
+    * `Snapshots` manifest, the Delta commit and the Iceberg metadata file
+    * all publish through here.
+    *
+    * The tmp name carries a per-writer nonce: a version-derived tmp is
+    * SHARED by concurrent writers racing the same version, and the loser
+    * can overwrite the winner's tmp content before its publish, publishing
+    * the wrong bytes under the winner's version (found live by the
+    * concurrent-writers spec). With unique tmps each writer publishes only
+    * its own bytes and the no-overwrite publish arbitrates the version. */
+  private[sinks] def publishAtomically(
+      f: FileSystem, dst: Path, bytes: Array[Byte], race: String): Unit = {
+    val tmp = new Path(dst.getParent,
+      s".${dst.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val out = f.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    if (!publishNoOverwrite(f, tmp, dst)) {
+      try f.delete(tmp, false) catch { case _: java.io.IOException => () }
+      throw new java.io.IOException(race)
+    }
   }
 
   /** Hard-link support, probed ONCE per manifest directory and cached.
@@ -202,7 +216,7 @@ object Snapshots {
     * could both "win" — the claim file closes that.) Any other IO failure
     * at publish time PROPAGATES as a commit failure. Returns false when the
     * version was already won. */
-  private[sinks] def publishNoOverwrite(f: FileSystem, tmp: Path, dst: Path): Boolean =
+  private def publishNoOverwrite(f: FileSystem, tmp: Path, dst: Path): Boolean =
     if ("file".equals(f.getUri.getScheme)) {
       val t = java.nio.file.Paths.get(f.makeQualified(tmp).toUri.getPath)
       val d = java.nio.file.Paths.get(f.makeQualified(dst).toUri.getPath)
@@ -829,8 +843,8 @@ object Snapshots {
     }
   }
 
-  /** The hive specs a partitioned commit wrote: walks `depth` levels of
-    * k=v dirs under the (private, just-written) commit dir `base`. */
+  /** The hive specs under commit dir `base`: walks `depth` levels of k=v
+    * dirs (a commit's written specs, and [[vacuum]]'s candidates). */
   private def writtenSpecs(f: FileSystem, base: Path, depth: Int): Seq[String] =
     if (depth == 0) Seq("")
     else f.listStatus(base).toSeq
@@ -983,12 +997,12 @@ object Snapshots {
         .distinct().collect()
         .map(r => partCols.zipWithIndex.map { case (c, i) => c -> r.get(i).toString }.toMap)
         .toSet
-      val (_, current) = selectAt(spark, table, v, m,
+      // a spec the table does not hold yet has no current rows: updates
+      // touching only such specs insert, as a merge against nothing
+      val kept = selectAt(spark, table, v, m,
           spec => touchedSpecs.exists(_.forall { case (c, x) => spec.get(c).contains(x) }))
-        .getOrElse(throw new IllegalArgumentException(
-          s"merge updates touch no partition of $table v$v"))
-      val kept = current.join(updates, keys, "left_anti")
-      commitPartitioned(kept.unionByName(updates, allowMissingColumns = true),
+        .map(_._2.join(updates, keys, "left_anti"))
+      commitPartitioned(kept.fold(updates)(_.unionByName(updates, allowMissingColumns = true)),
         table, partCols, SaveMode.Overwrite, baseVersion = Some(v))
     }
   }
@@ -1061,8 +1075,10 @@ object Snapshots {
   private def specColumns(spec: String): Seq[String] =
     spec.split('/').toSeq.map(kv => kv.substring(0, math.max(kv.indexOf('='), 0)))
 
-  /** A partitioned manifest's partition columns, in path order. */
-  private def partColumns(m: Manifest): Seq[String] = specColumns(m.partitions.keys.head)
+  /** A manifest's partition columns, in path order (none when
+    * unpartitioned). */
+  private def partColumns(m: Manifest): Seq[String] =
+    m.partitions.keys.headOption.fold(Seq.empty[String])(specColumns)
 
   /** The retained version `version` names (default: the latest) and its
     * parsed manifest. */
@@ -1081,7 +1097,7 @@ object Snapshots {
     * the scan set is resolved from the manifest's specs alone, so a
     * point-in-time read of one partition out of 10⁵ opens one manifest and
     * the matching data dirs — no recursive listing. The kept dirs of every
-    * commit are scanned as one relation ([[readSpecs]]); partition columns
+    * commit are scanned as one relation ([[readLeaves]]); partition columns
     * come back as columns (hive-style discovery anchored at `table/data`). */
   def read(
       spark: SparkSession,
@@ -1158,6 +1174,15 @@ object Snapshots {
       v: Long,
       m: Manifest,
       partitionFilter: Map[String, String] => Boolean): DataFrame =
+    scanListed(spark, table, v, m, partitionFilter)._1
+
+  /** [[scan]], with the leaf dirs it listed. */
+  private def scanListed(
+      spark: SparkSession,
+      table: String,
+      v: Long,
+      m: Manifest,
+      partitionFilter: Map[String, String] => Boolean): (DataFrame, Seq[Leaf]) =
     if (m.dirs.isEmpty && m.partitions.isEmpty) {
       // A versioned-but-EMPTY snapshot: commitPartitionReplace can legally
       // erase every spec (full GDPR erase of a small table), after which
@@ -1168,89 +1193,97 @@ object Snapshots {
       val schemaJson = m.schema.getOrElse(
         throw new IllegalStateException(
           s"$table v$v is empty and records no schema (pre-schema manifest)"))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], structOf(schemaJson))
-    } else if (m.partitions.isEmpty) readDirs(spark, m.dirs, m.schema)
-    else {
-      val kept = m.partitions.filter { case (spec, _) => partitionFilter(parseSpec(spec)) }
-      require(kept.nonEmpty, s"partitionFilter matched no partitions of $table v$v")
-      readSpecs(spark,
-        kept.toSeq.flatMap { case (spec, bases) => bases.map((_, spec)) },
-        m.schema, partColumns(m))
+      (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], structOf(schemaJson)), Nil)
+    } else {
+      val kept = leafPairs(m, spec => partitionFilter(parseSpec(spec)))
+      require(m.partitions.isEmpty || kept.nonEmpty,
+        s"partitionFilter matched no partitions of $table v$v")
+      readLeaves(spark, kept, m.schema, partColumns(m))
     }
+
+  /** The (commit dir, spec) leaf dirs manifest `m` names: every
+    * unpartitioned commit dir (spec ""), and each base of every spec that
+    * `keep` accepts. */
+  private def leafPairs(
+      m: Manifest, keep: String => Boolean = _ => true): Seq[(String, String)] =
+    m.dirs.map((_, "")) ++ m.partitions.toSeq.flatMap { case (spec, bases) =>
+      if (keep(spec)) bases.map((_, spec)) else Nil }
 
   private def structOf(json: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(json)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  /** Scan a set of unpartitioned commit dirs. The manifest's recorded
-    * schema drives the read when present — at scale, `mergeSchema` is a
-    * scan-startup killer (the driver reads EVERY file's footer before the
-    * first task launches; millions of files = millions of sequential
-    * footer reads), while the manifest schema costs nothing and is
-    * authoritative by construction (it IS the last commit's schema).
-    * SCHEMA EVOLUTION stays free: files from older commits missing a
-    * later-added column read back null under the explicit schema; the
+  /** A leaf dir a read names, qualified as `dir`: a commit dir with hive
+    * `spec` below it ("" for an unpartitioned commit dir), and the data
+    * files listed under it. */
+  private case class Leaf(spec: String, dir: Path, files: Seq[FileStatus])
+
+  /** Scan (commit base, spec) leaf dirs of one table as ONE parquet
+    * relation over exactly those dirs: one file index and one scan however
+    * many commits the read spans, as per-commit file indexes, plan branches
+    * and scan tasks would cost each small read more than its bytes. Only
+    * those leaf dirs are listed, once and on the driver ([[scanLeafDirs]]),
+    * never `data/` itself, so unpublished commit dirs stay invisible.
+    *
+    * The manifest's recorded schema drives the read when present — at
+    * scale, `mergeSchema` is a scan-startup killer (the driver reads EVERY
+    * file's footer before the first task launches; millions of files =
+    * millions of sequential footer reads), while the manifest schema costs
+    * nothing and is authoritative by construction (it IS the last commit's
+    * schema). SCHEMA EVOLUTION stays free: files from older commits missing
+    * a later-added column read back null under the explicit schema; the
     * table's schema is the LAST committed one (a column dropped by the
     * latest commit is gone from reads — table semantics, not file
     * semantics). Pre-schema manifests fall back to footer reconciliation.
-    * The named dirs are listed once, on the driver ([[scanLeafDirs]]). */
-  private def readDirs(
-      spark: SparkSession, dirs: Seq[String], schemaJson: Option[String]): DataFrame =
-    scanLeafDirs(spark, dirs, schemaJson.map(structOf), Map.empty)
-
-  /** Scan (commit base, spec) pairs of a partitioned table as ONE parquet
-    * relation over exactly the `base/spec` leaf dirs the manifest names:
-    * one file index and one scan however many commits the read spans, as
-    * per-commit file indexes, plan branches and scan tasks would cost each
-    * small read more than its bytes. Only those leaf dirs are listed, once
-    * and on the driver ([[scanLeafDirs]]), never `data/` itself, so
-    * unpublished commit dirs stay invisible.
     *
-    * `basePath` is the commit dirs' shared parent, `table/data` (every
-    * writer puts its commit dir there; bases with different parents fail
-    * loudly). Hive discovery then parses the `k=v` segments below it into
-    * partition columns and, under `ignoreInvalidPartitionPaths`, steps
-    * over the `c-<v>-<uuid>` segment above them. That option also SKIPS
-    * any leaf that does not parse to the same columns as the others, so
-    * every spec is first required to name exactly the table's partition
-    * columns: a malformed spec fails the read instead of dropping rows.
-    *
-    * The explicit schema covers the DATA columns only (same footer-read
-    * rationale as [[readDirs]]); files from older commits missing a
-    * later-added column read back null. Partition columns stay on hive
-    * discovery's type inference, appended after the data columns. */
-  private def readSpecs(
+    * A partitioned read's `basePath` is the commit dirs' shared parent,
+    * `table/data` (every writer puts its commit dir there; bases with
+    * different parents fail loudly). Hive discovery then parses the `k=v`
+    * segments below it into partition columns and, under
+    * `ignoreInvalidPartitionPaths`, steps over the `c-<v>-<uuid>` segment
+    * above them. That option also SKIPS any leaf that does not parse to the
+    * same columns as the others, so every spec is first required to name
+    * exactly the table's partition columns: a malformed spec fails the read
+    * instead of dropping rows. The explicit schema then covers the DATA
+    * columns only; partition columns stay on hive discovery's type
+    * inference, appended after the data columns. */
+  private def readLeaves(
       spark: SparkSession,
       baseSpecs: Seq[(String, String)],
       schemaJson: Option[String],
-      partCols: Seq[String]): DataFrame = {
-    val malformed = baseSpecs.map(_._2).distinct.filterNot(specColumns(_) == partCols)
-    require(partCols.forall(_.nonEmpty) && malformed.isEmpty,
-      s"partition specs [${malformed.mkString(", ")}] do not name exactly the " +
-        s"table's partition columns ${partCols.mkString("/")}")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val parents = baseSpecs.map(_._1).distinct.map { base =>
-      val p = new Path(base).getParent
-      p.getFileSystem(conf).makeQualified(p)
-    }.distinct
-    require(parents.size == 1,
-      s"commit dirs do not share one data dir: ${parents.mkString(", ")}")
+      partCols: Seq[String]): (DataFrame, Seq[Leaf]) = {
+    val options =
+      if (partCols.isEmpty) Map.empty[String, String]
+      else {
+        val malformed = baseSpecs.map(_._2).distinct.filterNot(specColumns(_) == partCols)
+        require(partCols.forall(_.nonEmpty) && malformed.isEmpty,
+          s"partition specs [${malformed.mkString(", ")}] do not name exactly the " +
+            s"table's partition columns ${partCols.mkString("/")}")
+        val conf = spark.sparkContext.hadoopConfiguration
+        val parents = baseSpecs.map(_._1).distinct.map { base =>
+          val p = new Path(base).getParent
+          p.getFileSystem(conf).makeQualified(p)
+        }.distinct
+        require(parents.size == 1,
+          s"commit dirs do not share one data dir: ${parents.mkString(", ")}")
+        Map("basePath" -> parents.head.toString, "ignoreInvalidPartitionPaths" -> "true")
+      }
     val dataSchema = schemaJson.map(j =>
       StructType(structOf(j).filterNot(f => partCols.contains(f.name))))
-    scanLeafDirs(spark, baseSpecs.map { case (base, spec) => s"$base/$spec" }, dataSchema,
-      Map("basePath" -> parents.head.toString, "ignoreInvalidPartitionPaths" -> "true"))
+    scanLeafDirs(spark, baseSpecs, dataSchema, options)
   }
 
-  /** ONE parquet relation over exactly `dirs`, built as Spark's
-    * `DataSource` builds it — same file index, partition discovery and
-    * relation — except that the dirs are listed HERE, once each, serially
-    * on the driver. `DataSource` hands more than
-    * `parallelPartitionDiscovery.threshold` (32) dirs to a distributed
-    * listing job with one task per dir, which on a small read costs more
-    * than the bytes read; a manifest-resolved read names every dir up
-    * front, so the listings are handed to the index through a cache
-    * private to this read, and planning starts no Spark job. The trade:
-    * one serial LIST per named dir, a count compaction keeps bounded.
+  /** ONE parquet relation over exactly the `baseSpecs` leaf dirs, built as
+    * Spark's `DataSource` builds it — same file index, partition discovery
+    * and relation — except that the dirs are listed HERE, once each,
+    * serially on the driver, and returned beside the relation.
+    * `DataSource` hands more than `parallelPartitionDiscovery.threshold`
+    * (32) dirs to a distributed listing job with one task per dir, which on
+    * a small read costs more than the bytes read; a manifest-resolved read
+    * names every dir up front, so the listings are handed to the index
+    * through a cache private to this read, and planning starts no Spark
+    * job. The trade: one serial LIST per named dir, a count compaction
+    * keeps bounded.
     *
     * The listing is Spark's: recursive below each dir, block locations
     * kept, hidden and in-flight names (`_*`, `.*`, `*._COPYING_`) skipped
@@ -1259,55 +1292,147 @@ object Snapshots {
     * `mergeSchema`, as before. */
   private def scanLeafDirs(
       spark: SparkSession,
-      dirs: Seq[String],
+      baseSpecs: Seq[(String, String)],
       dataSchema: Option[StructType],
-      options: Map[String, String]): DataFrame = {
+      options: Map[String, String]): (DataFrame, Seq[Leaf]) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val roots = dirs.map { d =>
-      val p = new Path(d)
-      p.getFileSystem(conf).makeQualified(p)
-    }.distinct
-    // Spark's own listing: HDFS and viewfs return block locations with the
-    // LIST; elsewhere each file's locations are asked for separately (no
-    // RPC on local or object stores), because the generic
-    // listLocatedStatus reads every local file's permissions by forking a
-    // shell
-    def located(f: FileSystem, st: FileStatus): FileStatus = st match {
-      case _: LocatedFileStatus => st
-      case _ =>
-        new LocatedFileStatus(st.getLen, false, st.getReplication, st.getBlockSize,
-          st.getModificationTime, 0, null, null, null,
-          if (st.isSymlink) st.getSymlink else null, st.getPath, false, false, false,
-          f.getFileBlockLocations(st, 0, st.getLen))
+    val leaves = baseSpecs.distinct.map { case (base, spec) =>
+      val p = new Path(if (spec.isEmpty) base else s"$base/$spec")
+      val f = p.getFileSystem(conf)
+      val dir = f.makeQualified(p)
+      Leaf(spec, dir, leafFiles(f, dir))
     }
-    def leafFiles(f: FileSystem, dir: Path): Seq[FileStatus] = {
-      val kids = f match {
-        case _: DistributedFileSystem | _: ViewFileSystem =>
-          val it = f.listLocatedStatus(dir)
-          val b = Seq.newBuilder[FileStatus]
-          while (it.hasNext) b += it.next()
-          b.result()
-        case _ => f.listStatus(dir).toSeq
-      }
-      val (subdirs, files) = kids
-        .filterNot(st => SqlBridge.isHiddenPathName(st.getPath.getName))
-        .partition(_.isDirectory)
-      files.map(located(f, _)) ++ subdirs.flatMap(d => leafFiles(f, d.getPath))
-    }
-    val listed = roots.map(r => r -> leafFiles(r.getFileSystem(conf), r).toArray).toMap
+    val listed = leaves.map(l => l.dir -> l.files.toArray).toMap
     val cache = new FileStatusCache {
       override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path)
       override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
       override def invalidateAll(): Unit = ()
     }
+    val roots = leaves.map(_.dir)
     val opts = if (dataSchema.isEmpty) options + ("mergeSchema" -> "true") else options
     val index = new InMemoryFileIndex(spark, roots, opts, dataSchema, cache)
     val format = new ParquetFileFormat
     val schema = dataSchema.orElse(format.inferSchema(spark, opts, index.allFiles()))
       .getOrElse(throw new IllegalStateException(
         s"no parquet footer to infer a schema from under ${roots.mkString(", ")}"))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      SqlBridge.asNullable(schema), None, format, opts)(spark))
+    (spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      SqlBridge.asNullable(schema), None, format, opts)(spark)), leaves)
+  }
+
+  /** One LIST of `dir` (Spark's listing): HDFS and viewfs return block
+    * locations with the LIST; elsewhere each file's locations are asked
+    * for separately ([[located]]), because the generic listLocatedStatus
+    * reads every local file's permissions by forking a shell. */
+  private def listDir(f: FileSystem, dir: Path): Seq[FileStatus] = f match {
+    case _: DistributedFileSystem | _: ViewFileSystem =>
+      val it = f.listLocatedStatus(dir)
+      val b = Seq.newBuilder[FileStatus]
+      while (it.hasNext) b += it.next()
+      b.result()
+    case _ => f.listStatus(dir).toSeq
+  }
+
+  /** `st` with its block locations (no RPC on local or object stores). */
+  private def located(f: FileSystem, st: FileStatus): FileStatus = st match {
+    case _: LocatedFileStatus => st
+    case _ =>
+      new LocatedFileStatus(st.getLen, false, st.getReplication, st.getBlockSize,
+        st.getModificationTime, 0, null, null, null,
+        if (st.isSymlink) st.getSymlink else null, st.getPath, false, false, false,
+        f.getFileBlockLocations(st, 0, st.getLen))
+  }
+
+  /** The data files below `dir`, recursively, hidden names skipped. */
+  private def leafFiles(f: FileSystem, dir: Path): Seq[FileStatus] = {
+    val (subdirs, files) = listDir(f, dir)
+      .filterNot(st => SqlBridge.isHiddenPathName(st.getPath.getName))
+      .partition(_.isDirectory)
+    files.map(located(f, _)) ++ subdirs.flatMap(d => leafFiles(f, d.getPath))
+  }
+
+  /** A data file of the current snapshot, as the interop exports publish
+    * it: its status from the read's own listing, its path relative to the
+    * table root, and its partition values decoded from the spec it was
+    * listed under (null for Hive's default partition; empty when
+    * unpartitioned). */
+  private[sinks] case class LiveFile(
+      rel: String, status: FileStatus, partitionValues: Map[String, String])
+
+  /** The current version of `table` as [[DeltaExport]] and
+    * [[IcebergExport]] publish it: the schema a [[read]] returns, the
+    * partition columns in path order, and every live data file sorted by
+    * path. It opens one manifest and makes the read's own listing, one
+    * LIST per leaf dir, and no second pass. A file outside the table root
+    * fails loudly: both exports reference data relative to it. */
+  private[sinks] def liveFiles(
+      spark: SparkSession, table: String): (StructType, Seq[String], Seq[LiveFile]) = {
+    val (v, m) = manifestAt(spark, table, None)
+    val (df, leaves) = scanListed(spark, table, v, m, _ => true)
+    val root = fs(spark, table).makeQualified(new Path(table)).toString.stripSuffix("/")
+    val files = leaves.flatMap { l =>
+      val pv = if (l.spec.isEmpty) Map.empty[String, String] else parseSpec(l.spec).map {
+        case (c, x) => c -> (if (x == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else x)
+      }
+      l.files.map { st =>
+        val path = st.getPath.toString
+        require(path.startsWith(root + "/"), s"data file $path outside table root $root")
+        LiveFile(path.stripPrefix(root + "/"), st, pv)
+      }
+    }
+    (df.schema, partColumns(m), files.sortBy(_.rel))
+  }
+
+  /** ONE parquet relation over explicitly named data files, each with its
+    * own partition tuple: the scan of [[DeltaExport.read]] and
+    * [[IcebergExport.read]], whose logs name files, not dirs. `files` are
+    * `(path, column -> value string or null)` pairs, `schema` the table's
+    * full schema and `partCols` its partition columns; the result has
+    * `schema`'s columns in `schema`'s order.
+    *
+    * Each distinct parent dir is listed once, on the driver, and a named
+    * file missing from its dir's listing fails the read, naming the file.
+    * Values are cast to their column's type as `CAST` casts them in this
+    * session (its time zone and ANSI setting, so a malformed value still
+    * fails). The file index holds one partition per distinct TUPLE, not per
+    * dir — a log may place files of different tuples in one dir — so a
+    * filter on a partition column prunes files through Spark's own
+    * partition pruning. Empty and unpartitioned inputs take the same
+    * path. */
+  private[sinks] def scanFiles(
+      spark: SparkSession,
+      schema: StructType,
+      partCols: Seq[String],
+      files: Seq[(String, Map[String, String])]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val paths = files.map { case (p, _) =>
+      val q = new Path(p)
+      q.getFileSystem(conf).makeQualified(q)
+    }
+    val listed = paths.map(_.getParent).distinct.flatMap { dir =>
+      val f = dir.getFileSystem(conf)
+      listDir(f, dir).filter(_.isFile).map(st => st.getPath -> located(f, st))
+    }.toMap
+    val statuses = paths.map(p => listed.getOrElse(p, throw new java.io.FileNotFoundException(
+      s"data file $p named by the table's metadata is not in its directory")))
+    val evalMode =
+      if (spark.conf.get("spark.sql.ansi.enabled").toBoolean) EvalMode.ANSI else EvalMode.LEGACY
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    val tuples = files.map { case (_, pv) => partCols.map(pv.getOrElse(_, null)) }.zip(statuses)
+    val byTuple = tuples.groupMap(_._1)(_._2)
+    val parts = tuples.map(_._1).distinct.zipWithIndex.map { case (t, i) =>
+      val values = partCols.zip(t).map { case (c, x) =>
+        Cast(Literal(x), schema(c).dataType, tz, evalMode).eval() }
+      // the i-th tuple's key names no directory and is never listed
+      PartitionPath(InternalRow.fromSeq(values),
+        new Path(byTuple(t).head.getPath.getParent, s"tuple-$i")) -> byTuple(t)
+    }
+    val partSchema = StructType(partCols.map(c => schema(c).copy(nullable = true)))
+    val index = new TupleFileIndex(spark, PartitionSpec(partSchema, parts.map(_._1)), parts)
+    val dataSchema = StructType(schema.filterNot(fld => partCols.contains(fld.name)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      SqlBridge.asNullable(dataSchema), None, new ParquetFileFormat, Map.empty)(spark))
+      .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
   }
 
   /** Change data feed between two versions: every row added or removed going
@@ -1334,29 +1459,16 @@ object Snapshots {
     require(vs.contains(toVersion), s"version $toVersion not in $vs")
     require(fromVersion <= toVersion, "fromVersion must be <= toVersion")
     val (m1, m2) = (readManifest(f, table, fromVersion), readManifest(f, table, toVersion))
-    val (ins, del) =
-      if (m1.partitions.isEmpty && m2.partitions.isEmpty) {
-        val (d1, d2) = (m1.dirs.toSet, m2.dirs.toSet)
-        // each side reads under ITS OWN manifest's schema (inserts are
-        // to-version rows, deletes from-version rows)
-        def rd(dirs: Seq[String], m: Manifest) =
-          if (dirs.isEmpty) None else Some(readDirs(spark, dirs, m.schema))
-        (rd(m2.dirs.filterNot(d1), m2), rd(m1.dirs.filterNot(d2), m1))
-      } else {
-        def diff(a: Map[String, Seq[String]], b: Map[String, Seq[String]]) =
-          a.toSeq.flatMap { case (spec, bases) =>
-            val other = b.getOrElse(spec, Seq.empty).toSet
-            bases.filterNot(other).map((_, spec))
-          }
-        def rd(bs: Seq[(String, String)], m: Manifest) =
-          if (bs.isEmpty) None
-          else Some(readSpecs(spark, bs, m.schema, partColumns(m)))
-        (rd(diff(m2.partitions, m1.partitions), m2),
-          rd(diff(m1.partitions, m2.partitions), m1))
-      }
+    // the leaf dirs only `a` names, read under `a`'s own schema (inserts
+    // are to-version rows, deletes from-version rows)
+    def only(a: Manifest, b: Manifest): Option[DataFrame] = {
+      val other = leafPairs(b).toSet
+      val pairs = leafPairs(a).filterNot(other)
+      if (pairs.isEmpty) None else Some(readLeaves(spark, pairs, a.schema, partColumns(a))._1)
+    }
     val tagged = Seq(
-      ins.map(_.withColumn("_change_type", lit("insert"))),
-      del.map(_.withColumn("_change_type", lit("delete")))).flatten
+      only(m2, m1).map(_.withColumn("_change_type", lit("insert"))),
+      only(m1, m2).map(_.withColumn("_change_type", lit("delete")))).flatten
     tagged match {
       case Seq(one) => one
       case Seq(a, b) => a.unionByName(b, allowMissingColumns = true)
@@ -1470,10 +1582,7 @@ object Snapshots {
         try f.delete(new Path(mp.getParent, s"${mp.getName}.claim"), false)
         catch { case _: java.io.IOException => () }
       }
-    val keepManifests = keep.map(readManifest(f, table, _))
-    val liveDirs = keepManifests.flatMap(_.dirs).toSet
-    val livePairs = keepManifests.flatMap(_.partitions.toSeq.flatMap {
-      case (spec, bases) => bases.map(b => (b, spec)) }).toSet
+    val livePairs = keep.flatMap(v => leafPairs(readManifest(f, table, v))).toSet
     val cutoff = System.currentTimeMillis() - math.max(0L, minAgeMs)
     val dataRoot = new Path(s"$table/data")
     if (f.exists(dataRoot))
@@ -1481,26 +1590,38 @@ object Snapshots {
         if (st.getModificationTime <= cutoff) {
           val p = st.getPath
           def matches(s: String) = s == p.toString || s.endsWith(p.toUri.getPath)
-          val wholeDirLive = liveDirs.exists(matches)
+          val wholeDirLive = livePairs.exists { case (b, spec) => spec.isEmpty && matches(b) }
           val liveSpecsHere = livePairs.collect {
-            case (b, spec) if matches(b) => spec }
+            case (b, spec) if spec.nonEmpty && matches(b) => spec }
           if (!wholeDirLive && liveSpecsHere.isEmpty) f.delete(p, true)
           else if (!wholeDirLive) {
             // partition-level pass: walk this commit's spec subdirs at the
             // table's partition depth; delete the ones no manifest references
             val depth = liveSpecsHere.head.count(_ == '/') + 1
-            def specDirs(q: Path, d: Int): Seq[(Path, String)] =
-              if (d == 0) Seq((q, ""))
-              else f.listStatus(q).toSeq
-                .filter(s2 => s2.isDirectory && s2.getPath.getName.contains("="))
-                .flatMap(s2 => specDirs(s2.getPath, d - 1).map { case (leaf, rest) =>
-                  (leaf, if (rest.isEmpty) s2.getPath.getName
-                         else s"${s2.getPath.getName}/$rest") })
-            specDirs(p, depth).foreach { case (leaf, spec) =>
-              if (!liveSpecsHere.contains(spec)) f.delete(leaf, true)
+            writtenSpecs(f, p, depth).foreach { spec =>
+              if (!liveSpecsHere.contains(spec)) f.delete(new Path(p, spec), true)
             }
           }
         }
       }
   }
+}
+
+/** [[Snapshots.scanFiles]]' file index over explicitly named files: one
+  * partition of `spec` per `(partition, files)` pair of `parts`, its files
+  * keyed by the partition's path. Nothing is listed here; `rootPaths` are
+  * the files' dirs, for the plan's description only. */
+private final class TupleFileIndex(
+    spark: SparkSession,
+    spec: PartitionSpec,
+    parts: Seq[(PartitionPath, Seq[FileStatus])])
+    extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+  override def partitionSpec(): PartitionSpec = spec
+  override def allFiles(): Seq[FileStatus] = parts.flatMap(_._2)
+  override lazy val rootPaths: Seq[Path] = allFiles().map(_.getPath.getParent).distinct
+  override protected lazy val leafFiles: scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
+    scala.collection.mutable.LinkedHashMap.from(allFiles().map(st => st.getPath -> st))
+  override protected lazy val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+    parts.map { case (pp, sts) => pp.path -> sts.toArray }.toMap
+  override def refresh(): Unit = ()
 }

@@ -372,6 +372,61 @@ class DeltaExportSpec extends SparkSpec {
       .select($"k").as[Int].collect().toSet == Set(2))
   }
 
+  /** Three one-row data files (k = 1, 2, 3) in ONE dir of `t` and a
+    * metaData commit partitioned by p (string) and q (int); returns the
+    * add line for k's file with partitionValues `pv`. */
+  private def oneDirFixture(t: String): (Int, String) => String = {
+    new java.io.File(t).mkdirs()
+    (1 to 3).foreach(k => Seq((k, s"v$k")).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(s"$t/mixed"))
+    val byK = new java.io.File(s"$t/mixed").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getName)
+      .map(n => spark.read.parquet(s"$t/mixed/$n").select($"k").as[Int].head() -> s"mixed/$n")
+      .toMap
+    assert(byK.keySet == Set(1, 2, 3))
+    writeCommit(t, 0L, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      s"""{"metaData":{"id":"fixture-one-dir","format":{"provider":"parquet","options":{}},"schemaString":${
+        com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
+          .writeValueAsString(schemaJson("k" -> "integer", "v" -> "string",
+            "p" -> "string", "q" -> "integer"))
+      },"partitionColumns":["p","q"],"configuration":{},"createdTime":1}}"""))
+    (k, pv) =>
+      s"""{"add":{"path":"${byK(k)}","partitionValues":$pv,"size":1,"modificationTime":1,"dataChange":true}}"""
+  }
+
+  test("files of different partition tuples in ONE directory read back with their own tuples") {
+    // a foreign writer may put every data file in one dir (randomized file
+    // prefixes): partition values come from each add, so the reader's file
+    // index must key partitions by tuple, not by directory
+    val t = tmp()
+    val add = oneDirFixture(t)
+    writeCommit(t, 1L, Seq(add(1, """{"p":"a","q":"1"}"""),
+      add(2, """{"p":"b","q":"2"}"""), add(3, """{"p":"b","q":"3"}""")))
+    val back = DeltaExport.read(spark, t)
+    assert(back.columns.toSeq == Seq("k", "v", "p", "q"))
+    assert(back.select($"k", $"p", $"q").as[(Int, String, Int)].collect().toSet ==
+      Set((1, "a", 1), (2, "b", 2), (3, "b", 3)))
+    // a filter on a partition column reads that tuple's one file
+    val onlyA = back.filter($"p" === "a")
+    assert(onlyA.collect().map(_.getInt(0)).toSeq == Seq(1))
+    val scans = onlyA.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.map(_.metrics("numFiles").value) == Seq(1L),
+      s"partition filter did not prune the shared dir: ${scans.map(_.metrics("numFiles").value)}")
+  }
+
+  test("a null partition value reads as null in both protocol forms: JSON null and the empty string") {
+    val t = tmp()
+    val add = oneDirFixture(t)
+    writeCommit(t, 1L, Seq(add(1, """{"p":"a","q":"1"}"""),
+      add(2, """{"p":null,"q":""}"""), add(3, """{"p":"","q":null}""")))
+    assert(DeltaExport.read(spark, t).collect()
+      .map(r => (r.getInt(0), Option(r.getString(2)), Option(r.get(3)))).toSet ==
+      Set((1, Some("a"), Some(1)), (2, None, None), (3, None, None)))
+  }
+
   test("foreign log demanding a newer reader fails LOUDLY, never misreads") {
     val t = tmp()
     new java.io.File(t).mkdirs()
@@ -561,27 +616,42 @@ class DeltaExportSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.cfs.impl", classOf[CountingFs].getName)
     val t = "cfs://" + tmp()
-    // 40 files in ONE commit dir: the per-file getFileStatus shape would
-    // issue 40 metadata RPCs; the listStatus-per-dir shape issues exactly
-    // one list and ZERO per-file stats
-    Snapshots.commit(
-      spark.range(0, 4000).selectExpr("id", "id * 2 AS v").repartition(40), t)
-    val f = org.apache.hadoop.fs.FileSystem.get(java.net.URI.create(t), conf)
-    val uris = Snapshots.read(spark, t).inputFiles.toSeq
-    assert(uris.size == 40)
-    CountingFs.gets.set(0)
+    // 2 commits x 8 specs = 16 leaf dirs, 5 files each: the per-file
+    // getFileStatus shape would issue 80 metadata RPCs; the export resolves
+    // the manifest once and reuses the snapshot read's own listing, one
+    // LIST per leaf dir and ZERO per-file stats
+    (0 until 2).foreach { c =>
+      Snapshots.commitPartitioned(
+        spark.range(0, 400).selectExpr(s"concat('p', id % 8) AS g", s"id + $c * 400 AS k")
+          .repartition(5), t, Seq("g"))
+    }
+    val leafDirs = 16
     CountingFs.lists.set(0)
-    val stats = DeltaExport.statLiveFiles(f, uris)
-    assert(CountingFs.gets.get() == 0,
-      s"stat step issued ${CountingFs.gets.get()} per-file getFileStatus calls")
-    assert(CountingFs.lists.get() == 1, "one leaf dir → exactly one listStatus")
-    // and the batched stats actually cover every live file (no silent
-    // fallback to the per-file path inside export)
-    uris.foreach(u => assert(stats.contains(
-      f.makeQualified(new org.apache.hadoop.fs.Path(new java.net.URI(u))).toString)))
+    CountingFs.dataGets.set(0)
+    CountingFs.manifestLists.set(0)
+    CountingFs.manifestOpens.set(0)
+    assert(DeltaExport.export(spark, t) == 0L)
+    assert(CountingFs.manifestLists.get() == 1, "one _manifests LIST")
+    assert(CountingFs.manifestOpens.get() == 1, "one manifest open")
+    assert(CountingFs.dataGets.get() == 0,
+      s"export issued ${CountingFs.dataGets.get()} per-file getFileStatus calls on data files")
+    assert(CountingFs.lists.get() - CountingFs.manifestLists.get() == leafDirs,
+      s"${CountingFs.lists.get()} LISTs: one per leaf dir plus _manifests expected")
+    // and the stats cover every live file: the log's adds are exactly the
+    // snapshot's files with their on-disk sizes
+    val log = new java.io.File(
+      new java.net.URI(t).getPath + "/_delta_log/00000000000000000000.json")
+    val adds = scala.io.Source.fromFile(log).getLines().toSeq
+      .map(new com.fasterxml.jackson.databind.ObjectMapper().readTree)
+      .filter(_.has("add")).map(_.get("add"))
+    val root = new java.net.URI(t).getPath
+    val onDisk = Snapshots.read(spark, t).inputFiles.toSeq
+      .map(u => new java.io.File(new java.net.URI(u).getPath))
+      .map(fl => fl.getPath.stripPrefix(root + "/") -> fl.length).toMap
+    assert(adds.map(a => DeltaExport.decodePath(a.get("path").asText) -> a.get("size").asLong)
+      .toMap == onDisk)
     // end-to-end on the counting scheme: export + read still round-trip
-    DeltaExport.export(spark, t)
-    assert(DeltaExport.read(spark, t).count() == 4000)
+    assert(DeltaExport.read(spark, t).count() == 800)
   }
 }
 
@@ -597,7 +667,10 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "cfs"
   override def getUri: java.net.URI = java.net.URI.create("cfs:///")
   override def getFileStatus(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
-    if (!CountingFs.inList.get()) CountingFs.gets.incrementAndGet()
+    if (!CountingFs.inList.get()) {
+      CountingFs.gets.incrementAndGet()
+      if (p.getName.endsWith(".parquet")) CountingFs.dataGets.incrementAndGet()
+    }
     super.getFileStatus(p)
   }
   override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
@@ -618,6 +691,7 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object CountingFs {
   val gets = new java.util.concurrent.atomic.AtomicInteger(0)
+  val dataGets = new java.util.concurrent.atomic.AtomicInteger(0) // gets on *.parquet
   val lists = new java.util.concurrent.atomic.AtomicInteger(0)
   val opens = new java.util.concurrent.atomic.AtomicInteger(0)
   val manifestLists = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -129,6 +129,29 @@ class IcebergExportSpec extends SparkSpec {
       .select($"lang", $"id", $"n").as[(String, Long, Int)].collect().toSet
     assert(viaDelta == direct, s"Delta read drifted: $viaDelta vs $direct")
     assert(viaIceberg == direct, s"Iceberg read drifted: $viaIceberg vs $direct")
+
+    // null partition values, on a string and on an int column: both legs
+    // read back exactly what the snapshot read returns (null, not Hive's
+    // default-partition name, and no failed cast on the int column)
+    val tn = tmp()
+    Snapshots.commitPartitioned(
+      Seq[(String, Option[Int], Long)](("en", Some(1), 1L), (null, Some(2), 2L),
+        ("de", None, 3L), (null, None, 4L)).toDF("lang", "k", "id"),
+      tn, Seq("lang", "k"))
+    DeltaExport.export(spark, tn)
+    IcebergExport.export(spark, tn)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"lang", $"k", $"id").as[(Option[String], Option[Int], Long)].collect().toSet
+    val directN = rows(Snapshots.read(spark, tn))
+    assert(directN == Set((Some("en"), Some(1), 1L), (None, Some(2), 2L),
+      (Some("de"), None, 3L), (None, None, 4L)))
+    assert(rows(DeltaExport.read(spark, tn)) == directN, "Delta leg drifted on null partitions")
+    assert(rows(IcebergExport.read(spark, tn)) == directN, "Iceberg leg drifted on null partitions")
+    // and through a Delta checkpoint (v1), whose partitionValues and
+    // partitionValues_parsed carry the nulls
+    DeltaExport.export(spark, tn, checkpointInterval = 1)
+    assert(new java.io.File(s"$tn/_delta_log/${"0" * 19}1.checkpoint.parquet").isFile)
+    assert(rows(DeltaExport.read(spark, tn)) == directN, "Delta checkpoint drifted on null partitions")
   }
 
   test("v1 foreign chain: legacy schema/partition-spec keys, inline manifests, DELETED entries skipped, stale hint ignored") {
@@ -257,26 +280,31 @@ class IcebergExportSpec extends SparkSpec {
 
   test("many partition tuples: ONE bounded plan (no union chain), distributed footer reads, agreement with direct read") {
     // r17 read() unioned one DataFrame per distinct partition tuple — at
-    // thousands of tuples the plan bloats O(partitions). Now: one parquet
-    // read + a broadcast (file → typed tuple) join on input_file_name().
+    // thousands of tuples the plan bloats O(partitions). Now both legs scan
+    // ONE parquet relation whose file index holds one partition per tuple:
+    // no union, and no join attaching the tuples.
     val t = tmp()
     val df = spark.range(200).selectExpr(
       "concat('p', id) AS part", "id", "id * 2 AS n")
     Snapshots.commitPartitioned(df, t, Seq("part"))
     IcebergExport.export(spark, t) // > 16 files: footer counts distribute
-    val back = IcebergExport.read(spark, t)
-    // plan shape: NO Union nodes regardless of tuple count
-    val unions = back.queryExecution.optimizedPlan.collect {
-      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
-    }
-    assert(unions.isEmpty, s"union chain survived: ${unions.size} Union nodes")
-    // values agree with the direct snapshot read, partition column included
+    DeltaExport.export(spark, t)
     val direct = Snapshots.read(spark, t)
       .select($"part", $"id", $"n").as[(String, Long, Long)].collect().toSet
-    val viaIceberg = back
-      .select($"part", $"id", $"n").as[(String, Long, Long)].collect().toSet
-    assert(viaIceberg == direct)
-    assert(viaIceberg.size == 200)
+    assert(direct.size == 200)
+    Seq("Iceberg" -> IcebergExport.read(spark, t), "Delta" -> DeltaExport.read(spark, t))
+      .foreach { case (leg, back) =>
+        // plan shape: NO Union and NO Join nodes regardless of tuple count
+        val plan = back.queryExecution.optimizedPlan
+        val unions = plan.collect { case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }
+        val joins = plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+        assert(unions.isEmpty && joins.isEmpty,
+          s"$leg plan: ${unions.size} Union and ${joins.size} Join nodes")
+        // values agree with the direct snapshot read, partition column included
+        val via = back
+          .select($"part", $"id", $"n").as[(String, Long, Long)].collect().toSet
+        assert(via == direct, s"$leg read drifted from the snapshot read")
+      }
     // manifest-driven pruning still precedes file IO
     val pruned = IcebergExport.read(spark, t,
       partitionFilter = pv => pv.get("part").contains("p7"))

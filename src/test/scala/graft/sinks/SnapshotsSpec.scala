@@ -927,6 +927,16 @@ class SnapshotsSpec extends SparkSpec {
     // the merge's change feed touches only dt=d1 files
     val c = Snapshots.changes(spark, t, v - 1, v)
     assert(c.inputFiles.forall(_.contains("dt=d1")))
+
+    // updates touching only a partition the table does not hold yet insert
+    // it: a merge against nothing, published as v+1 holding both partitions
+    val t2 = tmp()
+    val v1 = Snapshots.commitPartitioned(Seq(("d1", 1, "a")).toDF("dt", "k", "v"), t2, Seq("dt"))
+    val v2 = Snapshots.merge(spark, t2, Seq(("d9", 9, "z")).toDF("dt", "k", "v"), Seq("dt", "k"))
+    assert(v2 == v1 + 1)
+    assert(Snapshots.partitions(spark, t2) == Seq("dt=d1", "dt=d9"))
+    assert(Snapshots.read(spark, t2).select("dt", "k", "v").as[(String, Int, String)]
+      .collect().toSet == Set(("d1", 1, "a"), ("d9", 9, "z")))
   }
 
   test("versionAsOf resolves the newest manifest at or before a wall-clock instant") {
