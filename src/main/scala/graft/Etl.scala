@@ -47,21 +47,28 @@ object Etl {
         (Some(prev.toLocalDate.toString), Some(f"${prev.getHour}%02d"))
       }
 
-    val raw = cfg.quarantine match {
+    cfg.quarantine match {
       case Some(qDir) =>
-        // quarantine path: one PERMISSIVE parse, malformed lines land in
-        // qDir as raw text for replay, contract rows continue downstream
-        val (good, bad) = BronzeReader.readWithQuarantine(
+        // quarantine path: one cached PERMISSIVE parse, malformed lines
+        // land in qDir as raw text for replay, contract rows continue
+        // downstream; the parse is unpersisted once the commit consumed it
+        val parsed = BronzeReader.parseQuarantine(
           spark, BronzeReader.globFor(cfg.bronze, dtF, hourF), Weather.contract)
-        bad.write.mode("append").text(qDir)
-        good
+        try {
+          val (good, bad) = BronzeReader.splitQuarantine(parsed)
+          bad.write.mode("append").text(qDir)
+          load(good, cfg)
+        } finally parsed.unpersist()
       case None =>
-        BronzeReader.readPartitioned(spark, cfg.bronze, Weather.contract, dtF, hourF)
+        load(BronzeReader.readPartitioned(spark, cfg.bronze, Weather.contract, dtF, hourF)
           // partition cols come back from the directory layout; drop so the
           // event-time derivation below re-derives them from the record itself
-          .drop("dt", "hour")
+          .drop("dt", "hour"), cfg)
     }
+  }
 
+  /** Bronze rows → gold commit; returns the loaded frame's metrics. */
+  private def load(raw: DataFrame, cfg: Config): Map[String, Any] = {
     // conditional embedded-JSON expansion (glue:42-61)
     val expanded = JsonExpand.findJsonColumn(raw)
       .map(c => JsonExpand.withInference(raw, c))

@@ -96,8 +96,10 @@ object DeltaExport {
     // for a null partition), from the snapshot read's own listing
     val (schema, partCols, files) = Snapshots.liveFiles(spark, table)
     val schemaJson = schema.json
-    val priorVersions = listDeltaVersions(f, table)
-    val priorCkpts = listCheckpointVersions(f, table)
+    // the log's ONE listing: the later steps only ever look at entries
+    // older than the version this export publishes
+    val log = listLog(f, table)
+    val (priorVersions, priorCkpts) = (log.json, log.checkpoints)
     val v = (priorVersions ++ priorCkpts).maxOption.map(_ + 1).getOrElse(0L)
     // prior live set resolves CHECKPOINT-FIRST like read(): after old JSON
     // commits are vacuumed past a checkpoint, a JSON-only replay would
@@ -107,7 +109,7 @@ object DeltaExport {
       if (priorVersions.isEmpty && priorCkpts.isEmpty) Set.empty
       else {
         val upTo = (priorVersions ++ priorCkpts).max
-        val ck = checkpointAtOrBelow(f, table, upTo)
+        val ck = checkpointAtOrBelow(f, table, upTo, log)
         val m = ck.map(readCheckpoint(spark, table, _)._1).getOrElse(
           scala.collection.mutable.LinkedHashMap.empty[String, Map[String, String]])
         replayJson(f, table,
@@ -163,7 +165,7 @@ object DeltaExport {
       sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       s"delta export race on $table v$v")
     if (checkpointInterval > 0 && v > 0 && v % checkpointInterval == 0) {
-      writeCheckpoint(spark, f, table, v, schemaJson, partCols, files)
+      writeCheckpoint(spark, f, table, v, schemaJson, partCols, files, log)
       if (logRetention > 0) {
         // best-effort, post-checkpoint cleanup, ANCHORED TO A CHECKPOINT
         // (ADVICE r17): a retained version is only resolvable if some
@@ -178,9 +180,9 @@ object DeltaExport {
         // the WHOLE cleanup (anchor lookup included) stays best-effort:
         // the version is already published, and a transient listing
         // failure here must not make a landed export read as failed
-        try listCheckpointVersions(f, table).filter(_ <= horizon).lastOption
+        try priorCkpts.filter(_ <= horizon).lastOption
           .foreach { cut =>
-            f.listStatus(logDir(table)).foreach { st =>
+            log.entries.foreach { st =>
               val n = st.getPath.getName
               val expired =
                 (n.matches("\\d{20}\\.json") &&
@@ -253,7 +255,8 @@ object DeltaExport {
       v: Long,
       schemaJson: String,
       partCols: Seq[String],
-      files: Seq[Snapshots.LiveFile]): Unit = {
+      files: Seq[Snapshots.LiveFile],
+      log: LogListing): Unit = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
     val pvType = MapType(StringType, StringType, valueContainsNull = true)
@@ -300,9 +303,9 @@ object DeltaExport {
     // metaData-bearing JSON commit was vacuumed (checkpoint + tail only),
     // the newest prior checkpoint carries the id; minting a fresh UUID
     // there would change table identity mid-log (round-15 advice).
-    val tableId = metaNodeIn(f, table, listDeltaVersions(f, table))
+    val tableId = metaNodeIn(f, table, log.json)
       .map(_.get("id").asText())
-      .orElse(checkpointAtOrBelow(f, table, v - 1)
+      .orElse(checkpointAtOrBelow(f, table, v - 1, log)
         .flatMap(c => readCheckpoint(spark, table, c)._2.map(_._1)))
       .getOrElse(java.util.UUID.randomUUID().toString)
     val rows = new java.util.ArrayList[Row]()
@@ -345,19 +348,36 @@ object DeltaExport {
     } finally f.delete(tmpDir, true)
   }
 
-  /** ASCENDING version order is part of this function's contract — the
+  /** One LIST of a table's `_delta_log` (empty when it does not exist):
+    * its entries, and the versions present as JSON commits, as single-part
+    * checkpoints and as MULTI-PART checkpoints
+    * (`NNN.checkpoint.0000000001.0000000002.parquet` — out of v1 scope;
+    * their presence turns an unresolvable read into a LOUD
+    * unsupported-feature error instead of a generic missing-commits one).
+    *
+    * ASCENDING version order is part of the contract: the
     * `.filter(_ <= bound).lastOption` anchors in the retention cut and
     * [[checkpointAtOrBelow]]'s fallback both mean "newest qualifying
     * checkpoint", and `FileSystem.listStatus` guarantees no order (local
     * FS is readdir order), so dropping the sort would silently anchor
     * those cuts to an arbitrary older checkpoint. */
-  private def listCheckpointVersions(f: FileSystem, table: String): Seq[Long] =
-    if (!f.exists(logDir(table))) Seq.empty
-    else f.listStatus(logDir(table)).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.checkpoint\\.parquet") =>
-        n.stripSuffix(".checkpoint.parquet").toLong }
-      .sorted
+  private final case class LogListing(
+      entries: Seq[org.apache.hadoop.fs.FileStatus],
+      json: Seq[Long],
+      checkpoints: Seq[Long],
+      multipart: Seq[Long])
+
+  private def listLog(f: FileSystem, table: String): LogListing = {
+    val entries =
+      if (!f.exists(logDir(table))) Seq.empty else f.listStatus(logDir(table)).toSeq
+    val names = entries.map(_.getPath.getName)
+    LogListing(entries,
+      names.collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }.sorted,
+      names.collect { case n if n.matches("\\d{20}\\.checkpoint\\.parquet") =>
+        n.stripSuffix(".checkpoint.parquet").toLong }.sorted,
+      names.collect { case n if n.matches("\\d{20}\\.checkpoint\\.\\d{10}\\.\\d{10}\\.parquet") =>
+        n.take(20).toLong }.distinct.sorted)
+  }
 
   /** Live (path → partitionValues) plus metaData (id, schema, partCols)
     * from a checkpoint file. Rejects reader requirements beyond v1 loudly
@@ -479,14 +499,18 @@ object DeltaExport {
           "or v2 checkpoints) — see DeltaExport scope note")
 
   /** Newest checkpoint at or below `upTo`: `_last_checkpoint` when it
-    * qualifies (the protocol's fast path), else the directory listing
+    * qualifies (the protocol's fast path), else the log's listing `log`
     * (time travel below the last checkpoint, or a torn pointer). */
-  private def checkpointAtOrBelow(f: FileSystem, table: String, upTo: Long): Option[Long] = {
+  private def checkpointAtOrBelow(
+      f: FileSystem,
+      table: String,
+      upTo: Long,
+      log: LogListing): Option[Long] = {
     val fromPointer =
       try {
-        val p = new Path(logDir(table), "_last_checkpoint")
-        if (!f.exists(p)) None
+        if (!log.entries.exists(_.getPath.getName == "_last_checkpoint")) None
         else {
+          val p = new Path(logDir(table), "_last_checkpoint")
           val in = f.open(p)
           val body = try org.apache.commons.io.IOUtils.toString(
             in, java.nio.charset.StandardCharsets.UTF_8) finally in.close()
@@ -497,31 +521,12 @@ object DeltaExport {
           // finds single-part candidates; read() fails loudly if none
           // resolve the requested version)
           val multiPart = Option(node.get("parts")).exists(_.asLong > 1)
-          if (!multiPart && v <= upTo && f.exists(checkpointPath(table, v))) Some(v)
+          if (!multiPart && v <= upTo && log.checkpoints.contains(v)) Some(v)
           else None
         }
       } catch { case scala.util.control.NonFatal(_) => None }
-    fromPointer.orElse(listCheckpointVersions(f, table).filter(_ <= upTo).lastOption)
+    fromPointer.orElse(log.checkpoints.filter(_ <= upTo).lastOption)
   }
-
-  /** Versions present only as MULTI-PART checkpoint files
-    * (`NNN.checkpoint.0000000001.0000000002.parquet`) — out of v1 scope;
-    * their presence turns an unresolvable read into a LOUD
-    * unsupported-feature error instead of a generic missing-commits one. */
-  private def listMultipartVersions(f: FileSystem, table: String): Seq[Long] =
-    if (!f.exists(logDir(table))) Seq.empty
-    else f.listStatus(logDir(table)).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.checkpoint\\.\\d{10}\\.\\d{10}\\.parquet") =>
-        n.take(20).toLong }
-      .distinct.sorted
-
-  private def listDeltaVersions(f: FileSystem, table: String): Seq[Long] =
-    if (!f.exists(logDir(table))) Seq.empty
-    else f.listStatus(logDir(table)).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("\\d{20}\\.json") => n.stripSuffix(".json").toLong }
-      .sorted
 
   /** Replay JSON commits `versions` into `into` (add minus remove, path
     * identity); returns the LAST metaData action seen — per protocol the
@@ -625,9 +630,8 @@ object DeltaExport {
       partitionFilter: Map[String, String] => Boolean = keepAll,
       predicates: Seq[PartitionPredicate] = Seq.empty): DataFrame = {
     val f = fs(spark, table)
-    val jsonVs = listDeltaVersions(f, table)
-    val ckptVs = listCheckpointVersions(f, table)
-    val multiVs = listMultipartVersions(f, table)
+    val log = listLog(f, table)
+    val (jsonVs, ckptVs, multiVs) = (log.json, log.checkpoints, log.multipart)
     val resolvable = (jsonVs ++ ckptVs ++ multiVs).distinct.sorted
     require(resolvable.nonEmpty, s"no _delta_log at $table")
     val upTo = version.getOrElse(resolvable.last)
@@ -635,7 +639,7 @@ object DeltaExport {
     // checkpoint-first resolution (the protocol's read path): state at the
     // newest checkpoint <= upTo, then replay only the JSON tail — old JSON
     // commits may be vacuumed away on real tables
-    val ckpt = checkpointAtOrBelow(f, table, upTo)
+    val ckpt = checkpointAtOrBelow(f, table, upTo, log)
     val tail = jsonVs.filter(v => v <= upTo && ckpt.forall(c => v > c))
     // STRUCTURED predicates (round-20) need the partition spec BEFORE the
     // checkpoint scan they are compiled into — resolve the governing

@@ -38,19 +38,30 @@ object BronzeReader {
   def readWithQuarantine(
       spark: SparkSession,
       path: String,
-      schema: StructType): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.col
+      schema: StructType): (DataFrame, DataFrame) =
+    splitQuarantine(parseQuarantine(spark, path, schema))
+
+  /** [[readWithQuarantine]]'s single PERMISSIVE parse, cached: the two
+    * splits must not re-read the source per branch with differing parse
+    * results. The caller unpersists it once both splits are consumed. */
+  private[graft] def parseQuarantine(
+      spark: SparkSession,
+      path: String,
+      schema: StructType): DataFrame = {
     val withCorrupt = StructType(schema.fields :+
       org.apache.spark.sql.types.StructField("_corrupt_record",
         org.apache.spark.sql.types.StringType))
-    val raw = spark.read.schema(withCorrupt)
+    spark.read.schema(withCorrupt)
       .option("recursiveFileLookup", "true")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
-      // corrupt-record splits must not re-read the source per branch with
-      // differing parse results — cache the single parse
       .cache()
+  }
+
+  /** (good, bad) of a [[parseQuarantine]] parse. */
+  private[graft] def splitQuarantine(raw: DataFrame): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.col
     val good = raw.filter(col("_corrupt_record").isNull)
       .drop("_corrupt_record")
     val bad = raw.filter(col("_corrupt_record").isNotNull)

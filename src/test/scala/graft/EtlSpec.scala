@@ -102,4 +102,20 @@ class EtlSpec extends SparkSpec {
     val quarantined = spark.read.text(qdir).collect().map(_.getString(0))
     assert(quarantined.length == 1 && quarantined.head.contains("broken json"))
   }
+
+  test("a quarantine run leaves nothing cached") {
+    val bronze = Files.createTempDirectory("graft-etl-bronze4").toString
+    val gold = Files.createTempDirectory("graft-etl-gold4").toString + "/weather"
+    val qdir = Files.createTempDirectory("graft-etl-q4").toString + "/bad"
+    writeBronzePartition(bronze, "2025-08-29", "14", Seq(
+      rec("Austin", "2025-08-29T14:05:00Z"), """{"broken""", rec("Boston", "2025-08-29T14:10:00Z")))
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    for (snapshot <- Seq(false, true)) {
+      val m = Etl.run(spark, Etl.Config(bronze, gold + snapshot, full = true,
+        quarantine = Some(qdir + snapshot), snapshot = snapshot))
+      assert(m("rows") == 2L)
+      assert(cache.isEmpty, s"snapshot = $snapshot: the run left a cached plan behind")
+    }
+  }
 }

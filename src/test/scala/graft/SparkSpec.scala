@@ -36,21 +36,35 @@ abstract class SparkSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val key = "graft.spec.jobsDuring"
     val tag = java.util.UUID.randomUUID().toString
+    val prior = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, tag)
+    try countJobs(e => Option(e.properties).exists(_.getProperty(key) == tag))(body)
+    finally sc.setLocalProperty(key, prior)
+  }
+
+  /** `body`'s result and the number of Spark jobs ANY thread started while
+    * it ran. A streaming query's micro-batch thread never sees the caller's
+    * local properties, so [[jobsDuring]] cannot count its jobs; this can,
+    * at the price that nothing else may run jobs meanwhile. */
+  def allJobsDuring[T](body: => T): (T, Int) = countJobs(_ => true)(body)
+
+  /** Jobs started while `body` ran that `counted` accepts. The bus is
+    * drained before and after `body`, so earlier events are not counted
+    * and late ones are. */
+  private def countJobs[T](counted: org.apache.spark.scheduler.SparkListenerJobStart => Boolean)(
+      body: => T): (T, Int) = {
+    val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
+        if (counted(e)) jobs.incrementAndGet()
     }
+    org.apache.spark.graftspec.Bus.drain(sc)
     sc.addSparkListener(listener)
-    val prior = sc.getLocalProperty(key)
-    sc.setLocalProperty(key, tag)
     try {
       val out = body
       org.apache.spark.graftspec.Bus.drain(sc)
       (out, jobs.get())
-    } finally {
-      sc.setLocalProperty(key, prior)
-      sc.removeSparkListener(listener)
-    }
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -653,6 +653,36 @@ class DeltaExportSpec extends SparkSpec {
     // end-to-end on the counting scheme: export + read still round-trip
     assert(DeltaExport.read(spark, t).count() == 800)
   }
+
+  test("a read and an export each list _delta_log once") {
+    spark.sparkContext.hadoopConfiguration.set("fs.cfs.impl", classOf[CountingFs].getName)
+    val t = "cfs://" + tmp()
+    def logLists[T](body: => T): (T, Int) = {
+      CountingFs.logLists.set(0)
+      val out = body
+      (out, CountingFs.logLists.get())
+    }
+    def commit(c: Int): Unit = Snapshots.commitPartitioned(
+      spark.range(0, 30).selectExpr("concat('p', id % 3) AS g", s"id + $c * 30 AS k"),
+      t, Seq("g"), SaveMode.Append)
+    // v0 and v1 without a checkpoint: no _last_checkpoint, so the
+    // checkpoint lookup falls back to the listing (v0 finds no log to list)
+    for (c <- 0 until 2) {
+      commit(c)
+      assert(logLists(DeltaExport.export(spark, t, checkpointInterval = 0)) == (c.toLong, c))
+    }
+    val (df1, n1) = logLists(DeltaExport.read(spark, t))
+    assert(n1 == 1 && df1.count() == 60, s"$n1 log LISTs")
+    // v2 writes a checkpoint and _last_checkpoint: the latest read takes
+    // the pointer, time travel below it the listing
+    commit(2)
+    assert(logLists(DeltaExport.export(spark, t, checkpointInterval = 2)) == (2L, 1))
+    for ((version, rows) <- Seq(None -> 90L, Some(1L) -> 60L, Some(0L) -> 30L)) {
+      val (df, n) = logLists(DeltaExport.read(spark, t, version = version))
+      assert(n == 1, s"read of $version: $n log LISTs")
+      assert(df.count() == rows, s"read of $version")
+    }
+  }
 }
 
 /** Test-only counting FileSystem (scheme cfs://): local semantics, counts
@@ -662,7 +692,8 @@ class DeltaExportSpec extends SparkSpec {
   * object store answers a list in one RPC), so nested calls are excluded
   * from the count via the in-list flag. LISTs and opens under a table's
   * `_manifests` dir are also tallied on their own, so a spec can pin how
-  * often an operation resolves a manifest. */
+  * often an operation resolves a manifest, and so are LISTs of a Delta
+  * log dir. */
 class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "cfs"
   override def getUri: java.net.URI = java.net.URI.create("cfs:///")
@@ -676,6 +707,7 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
     CountingFs.lists.incrementAndGet()
     if (CountingFs.underManifests(p)) CountingFs.manifestLists.incrementAndGet()
+    if (p.getName == "_delta_log") CountingFs.logLists.incrementAndGet()
     CountingFs.inList.set(true)
     try super.listStatus(p) finally CountingFs.inList.set(false)
   }
@@ -696,6 +728,7 @@ object CountingFs {
   val opens = new java.util.concurrent.atomic.AtomicInteger(0)
   val manifestLists = new java.util.concurrent.atomic.AtomicInteger(0)
   val manifestOpens = new java.util.concurrent.atomic.AtomicInteger(0)
+  val logLists = new java.util.concurrent.atomic.AtomicInteger(0) // LISTs of a _delta_log dir
   def underManifests(p: org.apache.hadoop.fs.Path): Boolean =
     p.getName == "_manifests" || p.toUri.getPath.contains("/_manifests/")
   val inList = new ThreadLocal[Boolean] { override def initialValue(): Boolean = false }

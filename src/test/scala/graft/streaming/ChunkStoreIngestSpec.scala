@@ -560,4 +560,107 @@ class ChunkStoreIngestSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
     assert(back == Map(9L -> "fresh after erase"))
   }
+
+  /** A gate over a fresh memory stream; the caller stops the query. */
+  private def startGate(chunkT: String, manT: String, ckpt: String)
+      : (org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)],
+        org.apache.spark.sql.streaming.StreamingQuery) = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    (mem, StreamingOps.startChunkStoreIngest(mem.toDF().toDF("doc_id", "text"), chunkT, manT,
+      ckpt, trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)))
+  }
+
+  private def words(id: Long, n: Int): String = (1 to n).map(t => s"d$id-w$t").mkString(" ")
+
+  test("each batch writes at most one file per touched spec in both tables") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore-files").toString
+    val (chunkT, manT) = (s"$dir/chunks", s"$dir/manifest")
+    // the newest commit dir's parquet files, counted per spec dir
+    def filesPerSpec(table: String): Map[String, Int] = {
+      val v = Snapshots.versions(spark, table).last
+      val commit = new java.io.File(s"$table/data").listFiles()
+        .filter(_.getName.startsWith(f"c-$v%05d-")).head
+      commit.listFiles().filter(_.isDirectory)
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    }
+    val (mem, q) = startGate(chunkT, manT, s"$dir/ckpt")
+    try {
+      for (b <- 0 until 2) {
+        // 200 documents over 64 doc buckets: the chunker's round-robin
+        // fan-out spreads a bucket's documents over every task; the second
+        // batch re-delivers a tenth of the first
+        val ids = if (b == 0) 0L until 200L else (200L until 380L) ++ (0L until 200L by 10)
+        mem.addData(ids.map(id => id -> words(id, 40)))
+        q.processAllAvailable()
+        for (t <- Seq(chunkT, manT)) {
+          val per = filesPerSpec(t)
+          assert(per.size > 1, s"batch $b: $t touched ${per.size} specs")
+          assert(per.values.forall(_ == 1),
+            s"batch $b: $t wrote more than one file in ${per.filter(_._2 != 1)}")
+        }
+      }
+    } finally q.stop()
+  }
+
+  test("novel check: an all-new batch under a trusted sidecar opens no chunk file; twins and re-deliveries store each novel digest once") {
+    import graft.sinks.{CountingFs, DigestBloom}
+    spark.sparkContext.hadoopConfiguration.set("fs.cfs.impl", classOf[CountingFs].getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore-novel").toString
+    val (chunkT, manT) = (s"cfs://$dir/chunks", s"$dir/manifest")
+    val (mem, q) = startGate(chunkT, manT, s"$dir/ckpt")
+    val sent = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    def deliver(docs: Seq[(Long, String)]): Unit = {
+      mem.addData(docs)
+      q.processAllAvailable()
+      sent ++= docs
+    }
+    def stored(): Array[String] =
+      Snapshots.read(spark, chunkT).select($"chunk_hash".as[String]).collect()
+    try {
+      deliver((1L to 10L).map(i => i -> words(i, 80)))
+      val v1 = Snapshots.versions(spark, chunkT).last
+      assert(DigestBloom.read(spark, chunkT, v1).isDefined, "precondition: trusted sidecar")
+
+      // every digest of this batch is new and none is bloom-positive, so
+      // the check decides on the driver without reading the chunk table
+      CountingFs.opens.set(0)
+      deliver((11L to 20L).map(i => i -> words(i, 80)))
+      assert(CountingFs.opens.get() == 0,
+        s"an all-new batch opened ${CountingFs.opens.get()} chunk-table data files")
+      assert(Snapshots.versions(spark, chunkT).last == v1 + 1, "the all-new batch stored nothing")
+
+      // mixed: two re-deliveries, identical twins 21 and 22, and doc 23,
+      // which repeats doc 21 and then a body of its own
+      val before = stored().toSet
+      deliver(Seq(3L -> words(3, 80), 12L -> words(12, 80), 21L -> words(21, 80),
+        22L -> words(21, 80), 23L -> s"${words(21, 80)} ${words(23, 80)}"))
+      val after = stored()
+      assert(after.length == after.distinct.length,
+        s"${after.length - after.distinct.length} digests stored twice")
+      val expected = graft.ext.ContentChunker.chunks(sent.toSeq.toDF("doc_id", "text"), "doc_id", "text")
+        .select(md5(array_join($"ctoks", " ")).as[String]).distinct().collect().toSet
+      assert(after.toSet == expected, "the stored digests are not the delivered documents' digests")
+      assert(after.toSet.diff(before).nonEmpty, "the mixed batch stored no novel digest")
+    } finally q.stop()
+    val docs = StreamingOps.reconstruct(spark, manT, chunkT).as[(Long, String)].collect().toMap
+    assert(docs(22L) == norm(words(21, 80)) && docs(23L) == norm(s"${words(21, 80)} ${words(23, 80)}"))
+  }
+
+  test("a steady-state gate batch runs a pinned number of Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore-jobs").toString
+    val (chunkT, manT) = (s"$dir/chunks", s"$dir/manifest")
+    val (mem, q) = startGate(chunkT, manT, s"$dir/ckpt")
+    try {
+      mem.addData((1L to 20L).map(i => i -> words(i, 60)))
+      q.processAllAvailable()
+      // trusted sidecar, a re-delivered document (its digests are bloom
+      // hits the probed read confirms) and new ones; no compaction
+      val (_, jobs) = allJobsDuring {
+        mem.addData((3L -> words(3, 60)) +: (21L to 30L).map(i => i -> words(i, 60)))
+        q.processAllAvailable()
+      }
+      assert(jobs == 9, s"$jobs Spark jobs in one steady-state batch")
+    } finally q.stop()
+  }
 }
