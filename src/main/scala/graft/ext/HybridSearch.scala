@@ -50,13 +50,11 @@ object HybridSearch {
       .map(_.select(col(idCol).cast("long").as("id"),
         (lit(1.0) / (lit(kRrf) + col(rankCol).cast("int"))).as("c")))
       .reduce(_.unionAll(_))
-    contrib
+    val fused = contrib
       .groupBy(col("id"))
       .agg(round(sum(col("c")), roundTo).as("rrf"))
-      .agg(graft.functions.TopKAggregate.top_k(col("rrf"), col("id"), limit).as("top"))
-      .select(posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("e.id").cast(idType).as(idCol), col("e.v").as("rrf"),
-        (col("pos") + 1).cast("int").as("rank"))
+    graft.functions.TopKAggregate.rankedTopK(fused, Nil, col("rrf"), col("id"), limit)
+      .select(col("id").cast(idType).as(idCol), col("v").as("rrf"), col("rank"))
   }
 
   /** Convenience: attach 1-based ranks to a scored leg by (score desc, id
@@ -70,10 +68,7 @@ object HybridSearch {
         org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
         .contains(idType),
       s"rankLeg requires an integral $idCol column (got $idType)")
-    scored
-      .agg(graft.functions.TopKAggregate.top_k(col(scoreCol), col(idCol), depth).as("top"))
-      .select(posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("e.id").cast(idType).as(idCol),
-        (col("pos") + 1).cast("int").as("rank"))
+    graft.functions.TopKAggregate.rankedTopK(scored, Nil, col(scoreCol), col(idCol), depth)
+      .select(col("id").cast(idType).as(idCol), col("rank"))
   }
 }

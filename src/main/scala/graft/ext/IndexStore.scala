@@ -33,6 +33,24 @@ object IndexStore {
     }
   }
 
+  /** Load-or-build of an index dir's `model.bin`: an existing model is
+    * returned as is; otherwise `train` runs, `commitCodes` writes the code
+    * table, and only then is the model saved — so its presence marks a
+    * complete index. */
+  private[ext] def loadOrBuild[T <: java.io.Serializable](dir: String)(train: => T)(
+      commitCodes: T => Unit): T =
+    load[T](s"$dir/model.bin").getOrElse {
+      val model = train
+      commitCodes(model)
+      save(s"$dir/model.bin", model)
+      model
+    }
+
+  /** The `model.bin` of a built index; fails loudly when there is none. */
+  private[ext] def loadBuilt[T](dir: String, kind: String): T =
+    load[T](s"$dir/model.bin").getOrElse(
+      throw new IllegalStateException(s"no $kind index at $dir — run buildIndex"))
+
   /** 12-hex-char stable key for a source-dir string — the shared artifact-
     * naming primitive (index dirs, bucketed table names). One definition so
     * key width/hash can never silently diverge between artifact kinds. */

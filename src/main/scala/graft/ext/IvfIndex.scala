@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * scale path for embedding search, complementing the LSH variant:
   *
   *  1. TRAIN: k coarse centroids by Lloyd's iterations, fully in DataFrame
-  *     ops (assignment = broadcast-join argmax over centroids; update =
-  *     posexplode → per-(cluster, dim) mean → re-assembled arrays). Init is
+  *     ops (assignment = map-side argmax over the collected centroids;
+  *     update = one two-phase [[graft.functions.CentroidAggregator]] mean
+  *     per cluster). Init is
   *     deterministic (first k distinct ids) so results don't depend on
   *     partition layout.
   *  2. BUILD: every vector assigned to its nearest centroid — the inverted
@@ -25,16 +26,6 @@ import org.apache.spark.sql.functions._
 object IvfIndex {
 
   private def cos = graft.functions.CosineSimilarity.cosine_similarity _
-
-  /** Element-wise mean of the `vec` arrays per `cluster_id`. */
-  private def meanByCluster(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cluster_id"), posexplode(col("vec")).as(Seq("pos", "x")))
-      .groupBy("cluster_id", "pos")
-      .agg(avg("x").as("m"))
-      .groupBy("cluster_id")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        e => e.getField("m")).as("centroid"))
 
   /** Nearest-centroid assignment, genuinely map-side: centroids are k rows
     * by construction, so they are collected once and closed over by a single
@@ -113,9 +104,13 @@ object IvfIndex {
     val seedRows = base.orderBy("id").limit(k).select("vec").collect()
     var centroids = centroidFrame(spark,
       seedRows.zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](0).toArray) })
+    val mean = graft.functions.CentroidAggregator.centroid(
+      seedRows.headOption.fold(0)(_.getSeq[Double](0).length))
     var i = 0
     while (i < iters) {
-      centroids = materialize(meanByCluster(assign(base, centroids)))
+      centroids = materialize(assign(base, centroids)
+        .groupBy("cluster_id")
+        .agg(mean(col("vec")).cast("array<double>").as("centroid")))
       i += 1
     }
     centroids
@@ -135,14 +130,6 @@ object IvfIndex {
       k: Int,
       nprobe: Int,
       roundTo: Int = 6): DataFrame = {
-    val q = queries.select(col("id").as("query_id"),
-      col("vec").cast("array<double>").as("qv"))
-    val probeW = Window.partitionBy("query_id").orderBy(col("_c").desc, col("cluster_id"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("_c", cos(col("qv"), col("centroid")))
-      .withColumn("_rn", row_number().over(probeW))
-      .filter(col("_rn") <= nprobe)
-      .select(col("query_id"), col("qv"), col("cluster_id"))
     val lists = invertedLists.select(
       col("cluster_id"), col("id").as("neighbor_id"), col("vec").as("cv"))
     // Rank with the bounded top-k aggregate, not a window: the shuffle then
@@ -150,15 +137,27 @@ object IvfIndex {
     // scored candidate. Rounding happens BEFORE ranking and ties break on
     // the smaller neighbor_id — both matching bruteForceTopK, so the
     // nprobe = k ≡ brute force pin still holds bit-for-bit.
-    probes.join(lists, "cluster_id") // co-partitioned by cluster at scale
+    val scored = probes(queries, centroids, nprobe)
+      .join(lists, "cluster_id") // co-partitioned by cluster at scale
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cos(col("qv"), col("cv")), roundTo).as("cos"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAggregate.top_k(col("cos"), col("neighbor_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e.id").as("neighbor_id"),
-        col("e.v").as("cos"), (col("pos") + 1).cast("int").as("rank"))
+    graft.functions.TopKAggregate.rankedTopK(scored, Seq("query_id"), col("cos"),
+        col("neighbor_id"), k)
+      .select(col("query_id"), col("id").as("neighbor_id"), col("v").as("cos"), col("rank"))
+  }
+
+  /** Each query's `nprobe` nearest lists as (query_id, qv, cluster_id):
+    * codegen'd cosine against the broadcast centroids, ranked per query,
+    * ties to the lower cluster_id. */
+  private def probes(queries: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame = {
+    val probeW = Window.partitionBy("query_id").orderBy(col("_c").desc, col("cluster_id"))
+    queries.select(col("id").as("query_id"), col("vec").cast("array<double>").as("qv"))
+      .crossJoin(broadcast(centroids))
+      .withColumn("_c", cos(col("qv"), col("centroid")))
+      .withColumn("_rn", row_number().over(probeW))
+      .filter(col("_rn") <= nprobe)
+      .select(col("query_id"), col("qv"), col("cluster_id"))
   }
 
   /** The one centroid-frame schema, shared by [[train]]'s seed init and
@@ -218,21 +217,6 @@ object IvfIndex {
     centroidFrame(spark, cents.toSeq)
   }
 
-  /** One-call convenience: train + build + search over a single table.
-    * Demonstration path — production queries go through [[buildIndex]] once
-    * and [[searchIndexed]] per query batch, so index construction never sits
-    * in the query path. */
-  def topK(
-      spark: SparkSession,
-      vectors: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      nClusters: Int,
-      nprobe: Int): DataFrame = {
-    val centroids = train(vectors, nClusters)
-    search(queries, build(vectors, centroids), centroids, k, nprobe)
-  }
-
   /** BUILD JOB: train centroids and materialize the inverted lists ONCE as a
     * snapshot table hive-partitioned by `cluster_id` (plus a k-row centroids
     * snapshot). This is the indexing job a 100 TB deployment runs offline /
@@ -273,13 +257,7 @@ object IvfIndex {
       k: Int,
       nprobe: Int): DataFrame = {
     val centroids = graft.sinks.Snapshots.read(spark, s"$indexDir/centroids")
-    val q = queries.select(col("id").as("query_id"),
-      col("vec").cast("array<double>").as("qv"))
-    val probeW = Window.partitionBy("query_id").orderBy(col("_c").desc, col("cluster_id"))
-    val probed: Set[String] = q.crossJoin(broadcast(centroids))
-      .withColumn("_c", cos(col("qv"), col("centroid")))
-      .withColumn("_rn", row_number().over(probeW))
-      .filter(col("_rn") <= nprobe)
+    val probed: Set[String] = probes(queries, centroids, nprobe)
       .select(col("cluster_id").cast("string"))
       .distinct().collect().map(_.getString(0)).toSet
     val lists = graft.sinks.Snapshots.read(spark, s"$indexDir/lists",

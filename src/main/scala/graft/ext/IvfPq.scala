@@ -27,9 +27,6 @@ object IvfPq {
       centroids: Array[Array[Double]], // index = cluster_id
       books: Array[Array[Array[Double]]])
 
-  private def nearestCentroid(v: Array[Double], cents: Array[Array[Double]]): Int =
-    PqIndex.nearest(v, cents)
-
   private def residual(v: Array[Double], c: Array[Double]): Array[Double] = {
     val r = new Array[Double](v.length)
     var i = 0
@@ -48,26 +45,16 @@ object IvfPq {
       iters: Int = 5): Model = {
     val sample = PqIndex.sampleVectors(vectors, sampleN)
     val coarse = PqIndex.trainOnPoints(sample, m = 1, k = nlist, iters = iters)(0)
-    val residuals = sample.map(v => residual(v, coarse(nearestCentroid(v, coarse))))
+    val residuals = sample.map(v => residual(v, coarse(PqIndex.nearest(v, 0, coarse))))
     Model(coarse, PqIndex.trainOnPoints(residuals, m, k, iters))
   }
 
   /** Map-only encode: (id, cluster_id, code) — code = PQ(v − centroid). */
   def encode(vectors: DataFrame, model: Model): DataFrame = {
-    val m = model.books.length
-    val sub = model.books(0)(0).length
     val enc = udf((v: Seq[Double]) => {
       val arr = v.toArray
-      val c = nearestCentroid(arr, model.centroids)
-      val r = residual(arr, model.centroids(c))
-      val code = new Array[Byte](m)
-      var j = 0
-      while (j < m) {
-        code(j) = PqIndex.nearest(
-          java.util.Arrays.copyOfRange(r, j * sub, (j + 1) * sub), model.books(j)).toByte
-        j += 1
-      }
-      (c, code)
+      val c = PqIndex.nearest(arr, 0, model.centroids)
+      (c, PqIndex.encodeSubvectors(residual(arr, model.centroids(c)), model.books))
     })
     vectors
       .select(col("id"), enc(col("vec").cast("array<double>")).as("e"))
@@ -91,53 +78,46 @@ object IvfPq {
       model: Model,
       topK: Int,
       nprobe: Int,
-      roundTo: Int = 6): DataFrame = {
-    val k = model.books(0).length
-    val qRows = queries
-      .select(col("id").cast("long").as("id"), col("vec").cast("array<double>").as("v"))
-      .collect()
-    val probePairs = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-    val tableMap = scala.collection.mutable.HashMap.empty[(Long, Int), Array[Double]]
-    qRows.foreach { r =>
-      val qid = r.getLong(0)
-      val arr = r.getSeq[Double](1).toArray
-      model.centroids.indices
-        .map { c =>
-          var dd = 0.0
-          var i = 0
-          while (i < arr.length) { val t = arr(i) - model.centroids(c)(i); dd += t * t; i += 1 }
-          (c, dd)
-        }
+      roundTo: Int = 6): DataFrame =
+    searchProbed(probe(queries, model, nprobe), encoded, model, topK, roundTo)
+
+  /** The query batch, collected once, with each query's `nprobe` nearest
+    * lists by squared L2 (ties to the lower list): (query id, vector,
+    * probed lists). */
+  private def probe(
+      queries: DataFrame,
+      model: Model,
+      nprobe: Int): Seq[(Long, Array[Double], Seq[Int])] =
+    PqIndex.queryVectors(queries).toSeq.map { case (qid, v) =>
+      val lists = model.centroids.indices
+        .map(c => (c, PqIndex.sqL2(v, 0, model.centroids(c))))
         .sortBy { case (c, dd) => (dd, c) }
-        .take(nprobe)
-        .foreach { case (c, _) =>
-          probePairs += ((qid, c))
-          tableMap((qid, c)) =
-            PqIndex.adcTable(residual(arr, model.centroids(c)), model.books)
-        }
+        .take(nprobe).map(_._1)
+      (qid, v, lists)
     }
-    val tablesB = queries.sparkSession.sparkContext.broadcast(tableMap.toMap)
-    val q = queries.sparkSession.range(1)
-      .select(explode(typedlit(probePairs.toSeq.sorted)).as("p"))
+
+  /** ADC-rank `encoded` for already-probed queries: one table per (query,
+    * probed list) from the query's residual against that list's centroid,
+    * and the (query, list) pairs joined as a literal relation on cluster_id
+    * alone — co-partitioned by list at scale, ids-only shuffle. */
+  private def searchProbed(
+      probes: Seq[(Long, Array[Double], Seq[Int])],
+      encoded: DataFrame,
+      model: Model,
+      topK: Int,
+      roundTo: Int): DataFrame = {
+    val pairs = probes.flatMap { case (qid, _, lists) => lists.map(c => (qid, c)) }
+    val tables = probes.flatMap { case (qid, v, lists) =>
+      lists.map(c => (qid, c) -> PqIndex.adcTable(residual(v, model.centroids(c)), model.books))
+    }.toMap
+    val q = encoded.sparkSession.range(1)
+      .select(explode(typedlit(pairs.sorted)).as("p"))
       .select(col("p._1").as("query_id"), col("p._2").as("cluster_id"))
-    val scoreUdf = udf((qid: Long, cid: Int, code: Array[Byte]) => {
-      val tbl = tablesB.value((qid, cid))
-      var s = 0.0
-      var j = 0
-      while (j < code.length) { s += tbl(j * k + (code(j) & 0xFF)); j += 1 }
-      s
-    })
-    encoded.select(col("id").as("neighbor_id"),
-        col("cluster_id").cast("int").as("cluster_id"), col("code"))
-      .join(broadcast(q), "cluster_id") // co-partitioned by list at scale
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(scoreUdf(col("query_id"), col("cluster_id"), col("code")), roundTo).as("adist"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAggregate.top_k(-col("adist"), col("neighbor_id"), topK).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e.id").as("neighbor_id"),
-        (-col("e.v")).as("adist"), (col("pos") + 1).cast("int").as("rank"))
+    PqIndex.adcTopK(
+      encoded.select(col("id").as("neighbor_id"),
+          col("cluster_id").cast("int").as("cluster_id"), col("code"))
+        .join(broadcast(q), "cluster_id"), // co-partitioned by list at scale
+      tables, model.books(0).length, topK, roundTo)
   }
 
   /** BUILD JOB: train coarse+residual quantizers, materialize the code table
@@ -150,40 +130,27 @@ object IvfPq {
       m: Int = 16,
       k: Int = 256,
       sampleN: Int = 10000): Model =
-    IndexStore.load[Model](s"$dir/model.bin").getOrElse {
-      val model = train(vectors, nlist, m, k, sampleN)
+    IndexStore.loadOrBuild(dir)(train(vectors, nlist, m, k, sampleN)) { model =>
       graft.sinks.Snapshots.commitPartitioned(encode(vectors, model),
         s"$dir/lists", Seq("cluster_id"), org.apache.spark.sql.SaveMode.Overwrite)
-      IndexStore.save(s"$dir/model.bin", model)
-      model
     }
 
-  /** SEARCH-ONLY path: the probed cluster set resolves driver-side from the
-    * (bounded) query batch, the code table is read through a manifest-level
-    * partition filter, then ADC-scored. No training in the query path. */
+  /** SEARCH-ONLY path: the query batch is collected and probed once at the
+    * driver; its probed lists drive both the manifest-level partition
+    * filter on the code table and the ADC scoring. No training in the
+    * query path. */
   def searchIndexed(
       spark: org.apache.spark.sql.SparkSession,
       queries: DataFrame,
       dir: String,
       topK: Int,
       nprobe: Int): DataFrame = {
-    val model = IndexStore.load[Model](s"$dir/model.bin")
-      .getOrElse(throw new IllegalStateException(s"no IVFPQ index at $dir — run buildIndex"))
-    val probeUdf = udf((v: Seq[Double]) => {
-      val arr = v.toArray
-      model.centroids.indices.map { c =>
-        var dd = 0.0
-        var i = 0
-        while (i < arr.length) { val t = arr(i) - model.centroids(c)(i); dd += t * t; i += 1 }
-        (c, dd)
-      }.sortBy { case (c, dd) => (dd, c) }.take(nprobe).map(_._1)
-    })
-    val probed: Set[String] = queries
-      .select(explode(probeUdf(col("vec").cast("array<double>"))).as("c"))
-      .distinct().collect().map(_.get(0).toString).toSet
+    val model = IndexStore.loadBuilt[Model](dir, "IVFPQ")
+    val probes = probe(queries, model, nprobe)
+    val probed: Set[String] = probes.flatMap(_._3).map(_.toString).toSet
     val codes = graft.sinks.Snapshots.read(spark, s"$dir/lists",
         partitionFilter = spec => spec.get("cluster_id").exists(probed))
       .select(col("id"), col("cluster_id").cast("int").as("cluster_id"), col("code"))
-    search(queries, codes, model, topK, nprobe)
+    searchProbed(probes, codes, model, topK, roundTo = 6)
   }
 }

@@ -43,7 +43,7 @@ object MinHash {
   }
 
   /** FNV-1a 64-bit base hash of one shingle. */
-  private def fnv1a64(s: String): Long = {
+  private[ext] def fnv1a64(s: String): Long = {
     var h = 0xcbf29ce484222325L
     var i = 0
     while (i < s.length) {
@@ -55,7 +55,7 @@ object MinHash {
   }
 
   /** splitmix64 finalizer — the per-permutation mix. */
-  private def mix64(z0: Long): Long = {
+  private[ext] def mix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL

@@ -236,12 +236,9 @@ object Opq {
       k: Int = 16,
       sampleN: Int = 10000,
       iters: Int = 5): Model =
-    IndexStore.load[Model](s"$dir/model.bin").getOrElse {
-      val model = train(vectors, m, k, sampleN, iters)
+    IndexStore.loadOrBuild(dir)(train(vectors, m, k, sampleN, iters)) { model =>
       graft.sinks.Snapshots.commit(encode(vectors, model), s"$dir/codes",
         org.apache.spark.sql.SaveMode.Overwrite)
-      IndexStore.save(s"$dir/model.bin", model)
-      model
     }
 
   /** SEARCH-ONLY path: load rotation + codebooks, rotate the queries, scan
@@ -251,8 +248,7 @@ object Opq {
       queries: DataFrame,
       dir: String,
       topK: Int): DataFrame = {
-    val model = IndexStore.load[Model](s"$dir/model.bin")
-      .getOrElse(throw new IllegalStateException(s"no OPQ index at $dir — run buildIndex"))
+    val model = IndexStore.loadBuilt[Model](dir, "OPQ")
     search(queries, graft.sinks.Snapshots.read(spark, s"$dir/codes"), model, topK)
   }
 }

@@ -61,7 +61,7 @@ object PqIndex {
         val sums = Array.fill(cents.length)(new Array[Double](sub))
         val counts = new Array[Int](cents.length)
         pts.foreach { p =>
-          val c = nearest(p, cents)
+          val c = nearest(p, 0, cents)
           counts(c) += 1
           var i = 0
           while (i < sub) { sums(c)(i) += p(i); i += 1 }
@@ -77,59 +77,50 @@ object PqIndex {
     }
   }
 
-  private[ext] def nearest(p: Array[Double], cents: Array[Array[Double]]): Int = {
+  /** Squared L2 distance between `b` and the `b.length` elements of `a`
+    * starting at `off` — the one distance loop behind [[nearest]],
+    * [[adcTable]] and the IVF+PQ probe. */
+  private[ext] def sqL2(a: Array[Double], off: Int, b: Array[Double]): Double = {
+    var dd = 0.0
+    var i = 0
+    while (i < b.length) { val t = a(off + i) - b(i); dd += t * t; i += 1 }
+    dd
+  }
+
+  /** Index of the centroid nearest the subvector of `p` at `off`; ties go
+    * to the first (lowest code). */
+  private[ext] def nearest(p: Array[Double], off: Int, cents: Array[Array[Double]]): Int = {
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
     while (c < cents.length) {
-      var dd = 0.0
-      var i = 0
-      while (i < p.length) { val t = p(i) - cents(c)(i); dd += t * t; i += 1 }
+      val dd = sqL2(p, off, cents(c))
       if (dd < bestD) { bestD = dd; best = c } // ties: first (lowest code)
       c += 1
     }
     best
   }
 
+  /** The m one-byte codes of `v`: code(j) = nearest centroid of subvector j. */
+  private[ext] def encodeSubvectors(
+      v: Array[Double],
+      codebooks: Array[Array[Array[Double]]]): Array[Byte] = {
+    val sub = codebooks(0)(0).length
+    Array.tabulate(codebooks.length)(j => nearest(v, j * sub, codebooks(j)).toByte)
+  }
+
   /** Map-only encode: (id, code: binary), code(j) = nearest centroid of
     * subvector j. Codebooks ride the task closure (m·k·sub doubles). */
   def encode(vectors: DataFrame, codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val m = codebooks.length
-    val sub = codebooks(0)(0).length
-    val enc = udf((v: Seq[Double]) => {
-      val arr = v.toArray
-      val code = new Array[Byte](m)
-      var j = 0
-      while (j < m) {
-        code(j) = nearest(
-          java.util.Arrays.copyOfRange(arr, j * sub, (j + 1) * sub), codebooks(j)).toByte
-        j += 1
-      }
-      code
-    })
+    val enc = udf((v: Seq[Double]) => encodeSubvectors(v.toArray, codebooks))
     vectors.select(col("id"), enc(col("vec").cast("array<double>")).as("code"))
   }
 
   /** ADC table for one query vector: flat m·k doubles, entry (j, c) =
     * ||q_j − centroid_jc||². */
   private[ext] def adcTable(q: Array[Double], codebooks: Array[Array[Array[Double]]]): Array[Double] = {
-    val m = codebooks.length
-    val k = codebooks(0).length
     val sub = codebooks(0)(0).length
-    val t = new Array[Double](m * k)
-    var j = 0
-    while (j < m) {
-      var c = 0
-      while (c < k) {
-        var dd = 0.0
-        var i = 0
-        while (i < sub) { val x = q(j * sub + i) - codebooks(j)(c)(i); dd += x * x; i += 1 }
-        t(j * k + c) = dd
-        c += 1
-      }
-      j += 1
-    }
-    t
+    codebooks.zipWithIndex.flatMap { case (book, j) => book.map(sqL2(q, j * sub, _)) }
   }
 
   /** BUILD JOB: train codebooks and materialize the code table ONCE (codes
@@ -143,12 +134,9 @@ object PqIndex {
       k: Int = 16,
       sampleN: Int = 10000,
       iters: Int = 5): Array[Array[Array[Double]]] =
-    IndexStore.load[Array[Array[Array[Double]]]](s"$dir/model.bin").getOrElse {
-      val books = train(vectors, m, k, sampleN, iters)
+    IndexStore.loadOrBuild(dir)(train(vectors, m, k, sampleN, iters)) { books =>
       graft.sinks.Snapshots.commit(encode(vectors, books), s"$dir/codes",
         org.apache.spark.sql.SaveMode.Overwrite)
-      IndexStore.save(s"$dir/model.bin", books)
-      books
     }
 
   /** SEARCH-ONLY path against a [[buildIndex]]-persisted index: load the
@@ -160,9 +148,8 @@ object PqIndex {
       queries: DataFrame,
       dir: String,
       topK: Int): DataFrame = {
-    val books = IndexStore.load[Array[Array[Array[Double]]]](s"$dir/model.bin")
-      .getOrElse(throw new IllegalStateException(s"no PQ index at $dir — run buildIndex"))
-    search(queries, graft.sinks.Snapshots.read(spark, s"$dir/codes"), books, topK)
+    val model = IndexStore.loadBuilt[Array[Array[Array[Double]]]](dir, "PQ")
+    search(queries, graft.sinks.Snapshots.read(spark, s"$dir/codes"), model, topK)
   }
 
   /** Approximate top-k by ADC distance (ascending). Output:
@@ -175,40 +162,59 @@ object PqIndex {
     * every (candidate × query) row and re-converts it per UDF call —
     * observed as a multi-second single-task stage at 2000 candidates × 5
     * queries (guide §1.2 per-task work, §2.3 ship keys not payloads). The
-    * tables now ship ONCE per task in a broadcast keyed by query id, and
-    * the scoring UDF receives only (query_id, code). */
+    * tables ship ONCE per task through [[adcTopK]]'s broadcast, and the
+    * scoring UDF receives only keys and the code. */
   def search(
       queries: DataFrame, // (id, vec)
       encoded: DataFrame, // (id, code) from encode()
       codebooks: Array[Array[Array[Double]]],
       topK: Int,
       roundTo: Int = 6): DataFrame = {
-    val k = codebooks(0).length
-    val qRows = queries
+    val qRows = queryVectors(queries)
+    val tables: Map[(Long, Int), Array[Double]] = qRows.iterator
+      .map { case (qid, v) => (qid, 0) -> adcTable(v, codebooks) }
+      .toMap
+    val qids: Seq[Long] = qRows.map(_._1).toSeq.sorted
+    adcTopK(
+      encoded.select(explode(typedlit(qids)).as("query_id"), lit(0).as("cluster_id"),
+        col("id").as("neighbor_id"), col("code")),
+      tables, codebooks(0).length, topK, roundTo)
+  }
+
+  /** The query batch collected at the driver as (id, vector). */
+  private[ext] def queryVectors(queries: DataFrame): Array[(Long, Array[Double])] =
+    queries
       .select(col("id").cast("long").as("id"), col("vec").cast("array<double>").as("v"))
       .collect()
-    val tables: Map[Long, Array[Double]] = qRows.iterator
-      .map(r => r.getLong(0) -> adcTable(r.getSeq[Double](1).toArray, codebooks))
-      .toMap
-    val tablesB = queries.sparkSession.sparkContext.broadcast(tables)
-    val qids: Seq[Long] = qRows.map(_.getLong(0)).toSeq.sorted
-    val scoreUdf = udf((qid: Long, code: Array[Byte]) => {
-      val tbl = tablesB.value(qid)
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+
+  /** The one ADC scorer behind [[search]] and [[IvfPq.search]]: `pairs`
+    * carries (query_id, cluster_id, neighbor_id, code), and `tables` maps
+    * (query id, list) to that query's flat m·k table for the list (flat PQ
+    * is list 0). The tables ship once per task in a broadcast; each code
+    * costs m byte-indexed lookups. Output: (query_id, neighbor_id, adist,
+    * rank), the `topK` smallest rounded distances per query. */
+  private[ext] def adcTopK(
+      pairs: DataFrame,
+      tables: Map[(Long, Int), Array[Double]],
+      k: Int,
+      topK: Int,
+      roundTo: Int): DataFrame = {
+    val tablesB = pairs.sparkSession.sparkContext.broadcast(tables)
+    val scoreUdf = udf((qid: Long, cid: Int, code: Array[Byte]) => {
+      val tbl = tablesB.value((qid, cid))
       var s = 0.0
       var j = 0
       while (j < code.length) { s += tbl(j * k + (code(j) & 0xFF)); j += 1 }
       s
     })
-    encoded.select(col("id").as("neighbor_id"), col("code"))
-      .select(explode(typedlit(qids)).as("query_id"), col("neighbor_id"), col("code"))
+    val scored = pairs
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(scoreUdf(col("query_id"), col("code")), roundTo).as("adist"))
-      .groupBy("query_id")
-      // top-k by SMALLEST distance: feed the max-heap the negated value
-      .agg(graft.functions.TopKAggregate.top_k(-col("adist"), col("neighbor_id"), topK).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e.id").as("neighbor_id"),
-        (-col("e.v")).as("adist"), (col("pos") + 1).cast("int").as("rank"))
+        round(scoreUdf(col("query_id"), col("cluster_id"), col("code")), roundTo).as("adist"))
+    // top-k by SMALLEST distance: feed the max-heap the negated value
+    graft.functions.TopKAggregate.rankedTopK(scored, Seq("query_id"), -col("adist"),
+        col("neighbor_id"), topK)
+      .select(col("query_id"), col("id").as("neighbor_id"), (-col("v")).as("adist"), col("rank"))
   }
 }

@@ -16,23 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object SimHash {
 
-  /** FNV-1a 64-bit hash — deterministic, seedable via prefix. */
-  private def fnv1a64(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i).toLong
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
-
   private[ext] def simhash64(tokens: Seq[String]): Long = {
     if (tokens == null || tokens.isEmpty) return 0L
     val acc = new Array[Int](64)
     tokens.foreach { t =>
-      val h = fnv1a64(t)
+      val h = MinHash.fnv1a64(t)
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1

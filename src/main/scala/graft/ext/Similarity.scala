@@ -7,15 +7,16 @@ import org.apache.spark.sql.functions._
   *
   * Two paths:
   *  - brute-force cosine top-k — the exact baseline. Queries are broadcast,
-  *    candidates stream; per-query top-k via window. Cost O(|Q|·|C|), which
-  *    is the right baseline shape when |Q| is small and |C| is a full scan;
+  *    candidates stream; per-query top-k via the bounded top-k aggregate.
+  *    Cost O(|Q|·|C|), which is the right baseline shape when |Q| is small
+  *    and |C| is a full scan;
   *  - random-hyperplane LSH buckets — the scale path. Each vector gets a
   *    b-bit signature (sign of dot with b deterministic hyperplanes);
   *    near-duplicate candidates are generated per signature band with a
   *    shuffle equi-join, never an all-pairs product.
   *
-  * All vector math is `zip_with`/`aggregate` over double-cast arrays —
-  * built-in higher-order functions, no UDF in the hot path.
+  * Cosine scoring is the codegen'd [[graft.functions.CosineSimilarity]]
+  * expression; the LSH signature is a JVM UDF (one pass per row).
   */
 object Similarity {
 
@@ -50,62 +51,51 @@ object Similarity {
       queries: DataFrame, // (id, vec)
       candidates: DataFrame, // (id, vec)
       k: Int,
-      roundTo: Int = 6): DataFrame = {
-    val idType = candidates.schema("id").dataType
-    val q = queries.select(col("id").as("query_id"), asDouble(col("vec")).as("qv"))
-    val c = candidates.select(col("id").as("neighbor_id"), asDouble(col("vec")).as("cv"))
-    c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosine(col("qv"), col("cv")), roundTo).as("cos"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAggregate.top_k(col("cos"), col("neighbor_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e.id").cast(idType).as("neighbor_id"),
-        col("e.v").as("cos"), (col("pos") + 1).cast("int").as("rank"))
-  }
+      roundTo: Int = 6): DataFrame =
+    scoredTopK(queries, candidates, k, roundTo, labelCol = None)
 
   /** Hard-negative mining for contrastive training: for each query vector,
     * the exact top-k most-similar candidates whose `label` DIFFERS from the
     * query's — the "hard" negatives that sit closest to the decision
-    * boundary. Same bounded-heap discipline as [[bruteForceTopK]] (queries
-    * broadcast, candidates stream, ≤ k pairs per partial map-side); the
-    * label-mismatch predicate is applied before scoring so excluded pairs
-    * never enter the heap. Output: (query_id, neighbor_id, cos, rank). */
+    * boundary. [[bruteForceTopK]]'s body with the label-mismatch predicate
+    * applied before scoring, so excluded pairs never enter the heap.
+    * Output: (query_id, neighbor_id, cos, rank). */
   def hardNegatives(
       queries: DataFrame, // (id, vec, label)
       candidates: DataFrame, // (id, vec, label)
       k: Int,
-      roundTo: Int = 6): DataFrame = {
+      roundTo: Int = 6): DataFrame =
+    scoredTopK(queries, candidates, k, roundTo, labelCol = Some("label"))
+
+  /** Queries broadcast, candidates stream, self-pairs (and, with
+    * `labelCol`, same-label pairs) dropped before the rounded cosine is
+    * ranked per query. */
+  private def scoredTopK(
+      queries: DataFrame,
+      candidates: DataFrame,
+      k: Int,
+      roundTo: Int,
+      labelCol: Option[String]): DataFrame = {
     val idType = candidates.schema("id").dataType
-    val q = queries.select(col("id").as("query_id"), asDouble(col("vec")).as("qv"),
-      col("label").as("q_label"))
-    val c = candidates.select(col("id").as("neighbor_id"), asDouble(col("vec")).as("cv"),
-      col("label").as("c_label"))
-    c.crossJoin(broadcast(q))
+    val q = queries.select(Seq(col("id").as("query_id"), asDouble(col("vec")).as("qv")) ++
+      labelCol.map(l => col(l).as("q_label")): _*)
+    val c = candidates.select(Seq(col("id").as("neighbor_id"), asDouble(col("vec")).as("cv")) ++
+      labelCol.map(l => col(l).as("c_label")): _*)
+    val pairs = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id") &&
-        col("q_label") =!= col("c_label"))
+        labelCol.fold(lit(true))(_ => col("q_label") =!= col("c_label")))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("cv")), roundTo).as("cos"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAggregate.top_k(col("cos"), col("neighbor_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
-      .select(col("query_id"), col("e.id").cast(idType).as("neighbor_id"),
-        col("e.v").as("cos"), (col("pos") + 1).cast("int").as("rank"))
-  }
-
-  /** splitmix64 finalizer — deterministic hash for hyperplane components. */
-  private def mix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
+    graft.functions.TopKAggregate.rankedTopK(pairs, Seq("query_id"), col("cos"),
+        col("neighbor_id"), k)
+      .select(col("query_id"), col("id").cast(idType).as("neighbor_id"),
+        col("v").as("cos"), col("rank"))
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane i, dim j),
     * folded to [-1, 1). No RNG state, identical on every executor. */
   private def planeComponent(i: Int, j: Int): Double =
-    java.lang.Math.floorMod(mix64(i.toLong * 0x100000001b3L + j), 1000000L)
+    java.lang.Math.floorMod(MinHash.mix64(i.toLong * 0x100000001b3L + j), 1000000L)
       .toDouble / 500000.0 - 1.0
 
   /** b-bit random-hyperplane signature: bit i = sign(vec · plane_i).

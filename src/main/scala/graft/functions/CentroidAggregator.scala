@@ -10,9 +10,9 @@ import org.apache.spark.sql.expressions.Aggregator
   * Spark plans this as a regular two-phase hash aggregate: partial buffers
   * combine map-side (each partition emits one buffer per group), so at
   * 100 TB the shuffle carries one (dim+1)-double buffer per (partition,
-  * group) — not the vectors. This is what the posexplode/groupBy
-  * formulation (see IvfIndex.meanByCluster) cannot do: it shuffles
-  * dim× rows per vector.
+  * group) — not the vectors, where a posexplode → groupBy(cluster, pos)
+  * mean would shuffle dim× rows per vector. `IvfIndex.train`'s Lloyd's
+  * update is this aggregate.
   *
   * Null/empty vectors are ignored; an all-null group yields null.
   */

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -118,4 +118,19 @@ object TopKAggregate {
     SqlBridge.column(TopKAggregate(
       SqlBridge.expression(value.cast("double")),
       SqlBridge.expression(id.cast("long")), k).toAggregateExpression())
+
+  /** [[top_k]] ranked out per group: `groupBy(keys)` (empty = one global
+    * group) → `top_k(score, id, k)` → posexplode, as (keys…, id: long,
+    * v: double, rank: int 1..k). Ranks are dense per group, v descending,
+    * ties to the smaller id; pass a negated score for the k smallest. */
+  def rankedTopK(df: DataFrame, keys: Seq[String], score: Column, id: Column,
+      k: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, posexplode}
+    val keyCols = keys.map(col)
+    df.groupBy(keyCols: _*)
+      .agg(top_k(score, id, k).as("_top"))
+      .select(keyCols :+ posexplode(col("_top")).as(Seq("_pos", "_e")): _*)
+      .select(keyCols ++ Seq(col("_e.id").as("id"), col("_e.v").as("v"),
+        (col("_pos") + 1).cast("int").as("rank")): _*)
+  }
 }

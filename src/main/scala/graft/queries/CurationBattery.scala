@@ -966,11 +966,10 @@ object CurationBattery {
       import s.implicits._
       val slice = Tables.embeddings(s, d).filter($"vec_id" < 500)
         .select($"vec_id".as("id"), $"embedding".as("vec"))
-      Similarity.bruteForceTopK(slice, slice, k = 1)
+      val nn = Similarity.bruteForceTopK(slice, slice, k = 1)
         .select($"query_id".as("vec_id"), $"cos".as("nn_cos"))
-        .agg(graft.functions.TopKAggregate.top_k(-$"nn_cos", $"vec_id", 20).as("top"))
-        .select(posexplode($"top").as(Seq("pos", "e")))
-        .select($"e.id".as("vec_id"), (-$"e.v").as("nn_cos"))
+      graft.functions.TopKAggregate.rankedTopK(nn, Nil, -$"nn_cos", $"vec_id", 20)
+        .select($"id".as("vec_id"), (-$"v").as("nn_cos"))
         .orderBy($"nn_cos".asc, $"vec_id")
     },
 
@@ -1228,11 +1227,9 @@ object CurationBattery {
         .join(scored, Seq("doc_id"))
         .select($"doc_id", $"lang", round($"score", 6).as("score"))
         .localCheckpoint()
-      val top = sc.groupBy($"lang")
-        .agg(graft.functions.TopKAggregate.top_k(-abs($"score"), $"doc_id", 5).as("tk"))
-        .select($"lang", posexplode($"tk"))
-        .select($"lang", ($"pos" + 1).cast("int").as("rank"),
-          $"col.id".as("doc_id"), (-$"col.v").as("unc"))
+      val top = graft.functions.TopKAggregate
+        .rankedTopK(sc, Seq("lang"), -abs($"score"), $"doc_id", 5)
+        .select($"lang", $"rank", $"id".as("doc_id"), (-$"v").as("unc"))
       // re-attach the signed score: the picked set is ≤ 5·|langs| rows, so
       // it broadcasts and the corpus-sized score frame streams past it
       sc.select($"doc_id", $"score")

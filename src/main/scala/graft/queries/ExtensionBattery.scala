@@ -149,6 +149,21 @@ object ExtensionBattery {
       claimId = Some(s"ivf-exact-centroids|$d|k4"))
   }
 
+  /** The build-once serving sequence of the persisted-index entries. The
+    * index dir embeds the embeddings' data fingerprint, so a regenerated
+    * corpus misses the old index and rebuilds instead of serving it; the
+    * build is an idempotent no-op when the index exists; the IndexStore
+    * claim (which vacuums the prior vintage) runs AFTER the build, so a
+    * failed build leaves that vintage and its registry entry intact. */
+  private def servedIndex(d: String, claimId: String, dirFor: String => String)(
+      build: String => Any)(
+      serve: String => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val dir = dirFor(graft.ext.IndexStore.dataFingerprint(s"$d/embeddings.parquet"))
+    build(dir)
+    graft.ext.IndexStore.claim(claimId, dir)
+    serve(dir)
+  }
+
   private val (ivfTrainExactOracleSql, ivfSearchExactOracleSql, annRecallOracleSql) = {
     val dims = 8
     def fold(term: String) =
@@ -1534,16 +1549,11 @@ object ExtensionBattery {
     sql("q_cosine_topk_maintained", cosineTopk5OracleSql) { (s, d) =>
       import s.implicits._
       val emb = Tables.embeddings(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
-      // fingerprint in the key: this query is HASH-ORACLED, so a regenerated
-      // embeddings table must miss the old index and rebuild, never serve it
-      val dir = IvfIndex.indexDir(d, 8) +
-        "-maint-" + graft.ext.IndexStore.dataFingerprint(s"$d/embeddings.parquet")
-      IvfIndex.buildIndex(emb.filter($"id" >= 200), dir, nClusters = 8)
-      IvfIndex.appendDelta(emb.filter($"id" < 200), dir, txn = Some("maint" -> 1L))
-      // claim AFTER the build+delta commit: a failed build must leave the
-      // prior vintage and its registry entry intact (vacuums it otherwise)
-      graft.ext.IndexStore.claim(s"ivf-maint|$d|k8", dir)
-      IvfIndex.searchIndexed(s, emb.filter($"id" < 10), dir, k = 5, nprobe = 8)
+      servedIndex(d, s"ivf-maint|$d|k8", fp => IvfIndex.indexDir(d, 8) + "-maint-" + fp) {
+        dir =>
+          IvfIndex.buildIndex(emb.filter($"id" >= 200), dir, nClusters = 8)
+          IvfIndex.appendDelta(emb.filter($"id" < 200), dir, txn = Some("maint" -> 1L))
+      }(IvfIndex.searchIndexed(s, emb.filter($"id" < 10), _, k = 5, nprobe = 8))
         .select($"query_id", $"neighbor_id", $"cos", $"rank")
         .orderBy($"query_id", $"rank")
     },
@@ -1822,15 +1832,12 @@ object ExtensionBattery {
     rowsOnly("q_cosine_topk_ivf_indexed") { (s, d) =>
       import s.implicits._
       val emb = Tables.embeddings(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
-      // fingerprint in the key: rows-only entries have no oracle to catch a
-      // stale index silently serving a regenerated corpus — a data change
-      // must miss the old index and rebuild (the q_cosine_topk_maintained
-      // discipline, extended to every persisted-index entry)
-      val dir = IvfIndex.indexDir(d, nClusters = 16) + "-" +
-        graft.ext.IndexStore.dataFingerprint(s"$d/embeddings.parquet")
-      IvfIndex.buildIndex(emb, dir, nClusters = 16)
-      graft.ext.IndexStore.claim(s"ivf-indexed|$d|k16", dir) // claim-after-build
-      IvfIndex.searchIndexed(s, emb.filter($"id" < 10), dir, k = 5, nprobe = 4)
+      // rows-only entries have no oracle to catch a stale index silently
+      // serving a regenerated corpus — the fingerprinted dir is the guard
+      servedIndex(d, s"ivf-indexed|$d|k16",
+          fp => IvfIndex.indexDir(d, nClusters = 16) + "-" + fp)(
+          IvfIndex.buildIndex(emb, _, nClusters = 16))(
+          IvfIndex.searchIndexed(s, emb.filter($"id" < 10), _, k = 5, nprobe = 4))
         .orderBy($"query_id", $"rank")
     },
 
@@ -2652,17 +2659,12 @@ object ExtensionBattery {
     sql("q_pq_topk", pqTopkOracleSql) { (s, d) =>
       import s.implicits._
       val emb = Tables.embeddings(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
-      // build-once (idempotent no-op when the index exists), search-only
-      // steady state: training/encoding never sits in the query path
-      // fingerprint-keyed (see q_cosine_topk_ivf_indexed): a regenerated
-      // corpus must rebuild, never serve the stale codes
-      val dir = graft.ext.IndexStore.indexDir("pq", d,
-        "m16k256-" + graft.ext.IndexStore.dataFingerprint(s"$d/embeddings.parquet"))
-      graft.ext.PqIndex.buildIndex(emb, dir, m = 16, k = 256, sampleN = 2000, iters = 5)
-      // claim AFTER the build: a failed build must leave the prior vintage
-      // and its registry entry intact (vacuums the prior vintage otherwise)
-      graft.ext.IndexStore.claim(s"pq|$d|m16k256", dir)
-      graft.ext.PqIndex.searchIndexed(s, emb.filter($"id" < 5), dir, topK = 10)
+      // build-once, search-only steady state: training/encoding never sits
+      // in the query path
+      servedIndex(d, s"pq|$d|m16k256",
+          fp => graft.ext.IndexStore.indexDir("pq", d, s"m16k256-$fp"))(
+          PqIndex.buildIndex(emb, _, m = 16, k = 256, sampleN = 2000, iters = 5))(
+          PqIndex.searchIndexed(s, emb.filter($"id" < 5), _, topK = 10))
         .orderBy($"query_id", $"rank")
     },
 
@@ -2673,12 +2675,10 @@ object ExtensionBattery {
     rowsOnly("q_opq_topk") { (s, d) =>
       import s.implicits._
       val emb = Tables.embeddings(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
-      val dir = graft.ext.IndexStore.indexDir("opq", d,
-        "m16k256-" + graft.ext.IndexStore.dataFingerprint(s"$d/embeddings.parquet"))
-      graft.ext.Opq.buildIndex(emb, dir, m = 16, k = 256, sampleN = 2000, iters = 5)
-      graft.ext.IndexStore.claim(s"opq|$d|m16k256", dir) // claim-after-build
-
-      graft.ext.Opq.searchIndexed(s, emb.filter($"id" < 5), dir, topK = 10)
+      servedIndex(d, s"opq|$d|m16k256",
+          fp => graft.ext.IndexStore.indexDir("opq", d, s"m16k256-$fp"))(
+          graft.ext.Opq.buildIndex(emb, _, m = 16, k = 256, sampleN = 2000, iters = 5))(
+          graft.ext.Opq.searchIndexed(s, emb.filter($"id" < 5), _, topK = 10))
         .orderBy($"query_id", $"rank")
     },
 
@@ -2687,12 +2687,10 @@ object ExtensionBattery {
     rowsOnly("q_ivfpq_topk") { (s, d) =>
       import s.implicits._
       val emb = Tables.embeddings(s, d).select($"vec_id".as("id"), $"embedding".as("vec"))
-      val dir = graft.ext.IndexStore.indexDir("ivfpq", d,
-        "n16m16k256-" + graft.ext.IndexStore.dataFingerprint(s"$d/embeddings.parquet"))
-      graft.ext.IvfPq.buildIndex(emb, dir, nlist = 16, m = 16, k = 256, sampleN = 2000)
-      graft.ext.IndexStore.claim(s"ivfpq|$d|n16m16k256", dir) // claim-after-build
-
-      graft.ext.IvfPq.searchIndexed(s, emb.filter($"id" < 5), dir, topK = 10, nprobe = 4)
+      servedIndex(d, s"ivfpq|$d|n16m16k256",
+          fp => graft.ext.IndexStore.indexDir("ivfpq", d, s"n16m16k256-$fp"))(
+          graft.ext.IvfPq.buildIndex(emb, _, nlist = 16, m = 16, k = 256, sampleN = 2000))(
+          graft.ext.IvfPq.searchIndexed(s, emb.filter($"id" < 5), _, topK = 10, nprobe = 4))
         .orderBy($"query_id", $"rank")
     },
 
@@ -3235,11 +3233,9 @@ object ExtensionBattery {
       import s.implicits._
       val priority = conv(substring(md5($"doc_id".cast("string")), 1, 8), 16, 10)
         .cast("double")
-      Tables.documents(s, d)
-        .groupBy($"source")
-        .agg(graft.functions.TopKAggregate.top_k(-priority, $"doc_id", 5).as("top"))
-        .select($"source", posexplode($"top").as(Seq("pos", "e")))
-        .select($"source", ($"pos" + 1).cast("int").as("rank"), $"e.id".as("doc_id"))
+      graft.functions.TopKAggregate
+        .rankedTopK(Tables.documents(s, d), Seq("source"), -priority, $"doc_id", 5)
+        .select($"source", $"rank", $"id".as("doc_id"))
         .orderBy($"source", $"rank")
     },
 

@@ -1235,12 +1235,10 @@ object RelationalBattery {
         |  FROM orders) t
         |WHERE rn <= 5 ORDER BY o_orderpriority, rank""".stripMargin) { (s, d) =>
       import s.implicits._
-      Tables.orders(s, d)
-        .groupBy($"o_orderpriority")
-        .agg(graft.functions.TopKAggregate.top_k($"o_totalprice", $"o_orderkey", 5).as("top"))
-        .select($"o_orderpriority", posexplode($"top").as(Seq("pos", "e")))
-        .select($"o_orderpriority", ($"pos" + 1).cast("int").as("rank"),
-          round($"e.v", 2).as("v"), $"e.id".as("id"))
+      graft.functions.TopKAggregate
+        .rankedTopK(Tables.orders(s, d), Seq("o_orderpriority"), $"o_totalprice",
+          $"o_orderkey", 5)
+        .select($"o_orderpriority", $"rank", round($"v", 2).as("v"), $"id")
         .orderBy($"o_orderpriority", $"rank")
     },
 

@@ -18,11 +18,6 @@ import org.apache.spark.sql.types.StructType
   */
 object BronzeReader {
 
-  /** Reference-parity read: recursive lookup, gz transparent, inferred schema.
-    * Kept for drift detection; prefer `readContract`. */
-  def readInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").json(path)
-
   /** Production read: explicit schema, no inference pass. */
   def readContract(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema)
@@ -69,10 +64,6 @@ object BronzeReader {
     (good, bad)
   }
 
-  /** Partition-aware read: `dt`/`hour` become real partition columns so
-    * `filter($"dt" === ... && $"hour" === ...)` prunes at file-listing time —
-    * the advertised `--dt_filter`/`--hour_filter` semantics
-    * (`README.md:188-190`) done right. */
   /** The directory a (dt, hour) filter narrows the scan to — shared by the
     * partition-pruned and quarantine read paths. */
   def globFor(
@@ -85,6 +76,10 @@ object BronzeReader {
       case _                   => basePath
     }
 
+  /** Partition-aware read: `dt`/`hour` become real partition columns so
+    * `filter($"dt" === ... && $"hour" === ...)` prunes at file-listing time —
+    * the advertised `--dt_filter`/`--hour_filter` semantics
+    * (`README.md:188-190`) done right. */
   def readPartitioned(
       spark: SparkSession,
       basePath: String,

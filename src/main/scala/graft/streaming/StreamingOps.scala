@@ -1393,24 +1393,6 @@ object StreamingOps {
   final case class ZState(vals: Seq[Double])
   final case class ZAnomaly(event_id: Long, event_type: String, value: Double, z: Double)
 
-  /** Rolling z-score anomaly detection, STREAMING form — the incremental
-    * twin of the batch `q_anomaly_zscore` window (`RollingHalo
-    * .precedingStats` + filter): each event is scored against the mean /
-    * sample-stddev of the `frame` events that PRECEDED it for its key, so
-    * an outlier never dilutes its own baseline; events with fewer than
-    * `minPrev` predecessors are warm-up and never emitted.
-    *
-    * State per key is a bounded ring of the last `frame` values — O(frame)
-    * doubles regardless of history length, the same state discipline as
-    * [[sessionizeStream]]. `flatMapGroupsWithState` rather than a windowed
-    * agg because the frame is a ROW count, not a time width — no built-in
-    * streaming window expresses "last 100 events".
-    *
-    * Ordering contract: rows are folded in (ts, event_id) order WITHIN each
-    * micro-batch; cross-batch order is arrival order — correct for per-key
-    * in-order sources (the CDC / append-log shape this models). Late
-    * arrivals would need a watermarked reorder buffer in front.
-    * ZscoreStreamSpec pins stream ≡ batch on a planted fixture. */
   /** Shared fold: score a (ts, event_id)-SORTED run of events against the
     * rolling ring, returning the advanced ring and the anomalies. Both
     * streaming variants delegate here so their scoring can never diverge. */
@@ -1454,6 +1436,24 @@ object StreamingOps {
       c < 0 || (c == 0 && a.event_id < b.event_id)
     }
 
+  /** Rolling z-score anomaly detection, STREAMING form — the incremental
+    * twin of the batch `q_anomaly_zscore` window (`RollingHalo
+    * .precedingStats` + filter): each event is scored against the mean /
+    * sample-stddev of the `frame` events that PRECEDED it for its key, so
+    * an outlier never dilutes its own baseline; events with fewer than
+    * `minPrev` predecessors are warm-up and never emitted.
+    *
+    * State per key is a bounded ring of the last `frame` values — O(frame)
+    * doubles regardless of history length, the same state discipline as
+    * [[sessionizeStream]]. `flatMapGroupsWithState` rather than a windowed
+    * agg because the frame is a ROW count, not a time width — no built-in
+    * streaming window expresses "last 100 events".
+    *
+    * Ordering contract: rows are folded in (ts, event_id) order WITHIN each
+    * micro-batch; cross-batch order is arrival order — correct for per-key
+    * in-order sources (the CDC / append-log shape this models). Late
+    * arrivals would need a watermarked reorder buffer in front.
+    * ZscoreStreamSpec pins stream ≡ batch on a planted fixture. */
   def zscoreAnomaliesStream(
       events: Dataset[ZEvent],
       frame: Int = 100,

@@ -75,4 +75,14 @@ class IvfPqSpec extends SparkSpec {
     assert(scanned.nonEmpty && scanned.length < 8,
       s"probe scanned all partitions: ${scanned.mkString(",")}")
   }
+
+  test("searchIndexed collects the query batch once before its result is consumed") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-jobs").toString + "/idx"
+    IvfPq.buildIndex(emb, dir, nlist = 8, m = 8, k = 16, sampleN = 300)
+    val queries = emb.filter($"id" < 3)
+    // one collect of the query batch feeds both the partition filter and
+    // the ADC tables
+    val (_, jobs) = jobsDuring(IvfPq.searchIndexed(spark, queries, dir, topK = 5, nprobe = 2))
+    assert(jobs == 1, s"searchIndexed started $jobs jobs before its result was consumed")
+  }
 }

@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.functions.TopKAggregate.top_k
+import graft.functions.TopKAggregate.{rankedTopK, top_k}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,6 +34,34 @@ class TopKAggregateSpec extends SparkSpec {
       .select(explode(col("top")).as("e"))
       .select(col("e.v")).as[Double].collect().toSeq
     assert(out == Seq(7.0, 5.0))
+  }
+
+  test("rankedTopK: keyed and keyless ranks match row_number, ties to the smaller id") {
+    // group 2 holds two rows (< k); score ties everywhere
+    val df = spark.range(40).select(
+        when(col("id") < 2, lit(2L)).otherwise(col("id") % 2).as("g"),
+        (col("id") % 5).cast("double").as("v"),
+        col("id"))
+      .repartition(3)
+    def rows(d: DataFrame) =
+      d.collect().map(r => r.toSeq.map(_.toString)).toSet
+    def byWindow(part: Seq[String], order: Column) = {
+      val w = Window.partitionBy(part.map(col): _*).orderBy(order, col("id"))
+      df.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
+        .select(part.map(col) ++ Seq(col("id"), col("v"), col("rank")): _*)
+    }
+    val keyed = rankedTopK(df, Seq("g"), col("v"), col("id"), 3)
+    assert(keyed.columns.toSeq == Seq("g", "id", "v", "rank"))
+    assert(rows(keyed) == rows(byWindow(Seq("g"), col("v").desc)))
+    assert(keyed.filter(col("g") === 2).count() == 2)
+    // dense ranks 1..n per group
+    assert(keyed.groupBy("g").agg(collect_list("rank").as("r")).collect()
+      .forall(r => r.getSeq[Int](1).sorted == (1 to r.getSeq[Int](1).size)))
+    // keyless, ascending through the negated score
+    val asc = rankedTopK(df, Nil, -col("v"), col("id"), 3)
+      .select(col("id"), (-col("v")).as("v"), col("rank"))
+    assert(rows(asc) == rows(byWindow(Nil, col("v").asc)))
+    assert(rows(asc) == Set(Seq("0", "0.0", "1"), Seq("5", "0.0", "2"), Seq("10", "0.0", "3")))
   }
 
   test("serialization round-trip preserves heap contents") {
