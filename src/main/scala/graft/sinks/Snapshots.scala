@@ -26,8 +26,14 @@ import org.apache.spark.sql.types.StructType
   * Layout:
   * {{{
   *   table/data/c-<version>-<uuid>/part-*.parquet   immutable per-commit dirs
-  *   table/_manifests/v00001.json                   {"version":1,"dirs":[...]}
+  *   table/_manifests/v00001.json                   {"version":1,"dirs":["c-00001-<uuid>"]}
   * }}}
+  *
+  * A manifest names each commit dir under `table/data` by its bare name,
+  * relative to the table, so a table copied or moved as a whole reads, and
+  * commits on, its own files, and a manifest's size does not depend on
+  * where the table lives. Entries holding a path (manifests written before
+  * entries were table-relative) are still read as the paths they name.
   *
   * The manifest is one small JSON file per version — at 100 TB the data
   * volume is in the (never-rewritten) parquet; commit cost is one rename.
@@ -62,6 +68,7 @@ object Snapshots {
   /** One resolved manifest version: `dirs` for unpartitioned commits,
     * `partitions` (hive spec → commit base dirs; data lives at
     * `base/spec`) for partitioned ones. A table uses one or the other.
+    * Every commit dir is a path here, whatever the file records.
     * `txn` is the streaming-transaction watermark map (writer appId → last
     * committed epoch/batch id), carried forward by every commit — the
     * Delta-style idempotence token that makes a replayed `foreachBatch`
@@ -91,16 +98,27 @@ object Snapshots {
       .sorted
   }
 
+  /** `table`'s data dir, as a prefix of the commit dirs written there. */
+  private def dataPrefix(table: String) = s"$table/data/"
+
+  /** A manifest entry that names a path rather than a commit dir of the
+    * table: it holds a `/` or a scheme. */
+  private def isPath(entry: String) = entry.contains('/') || entry.contains(':')
+
+  /** Version `v`'s manifest, every commit dir resolved: a bare entry is a
+    * commit dir under `table/data`; an entry that [[isPath]] is used as it
+    * is, so manifests written with absolute entries read as before. */
   private def readManifest(f: FileSystem, table: String, v: Long): Manifest = {
     val in = f.open(manifestPath(table, v))
     val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
     val node = mapper.readTree(bytes)
+    def resolved(e: String) = if (isPath(e)) e else dataPrefix(table) + e
     val dirs = Seq.newBuilder[String]
-    if (node.has("dirs")) node.get("dirs").forEach(d => dirs += d.asText())
+    if (node.has("dirs")) node.get("dirs").forEach(d => dirs += resolved(d.asText()))
     val parts = Map.newBuilder[String, Seq[String]]
     if (node.has("partitions")) node.get("partitions").fields().forEachRemaining { e =>
       val bases = Seq.newBuilder[String]
-      e.getValue.forEach(b => bases += b.asText())
+      e.getValue.forEach(b => bases += resolved(b.asText()))
       parts += e.getKey -> bases.result()
     }
     val txn = Map.newBuilder[String, Long]
@@ -111,17 +129,24 @@ object Snapshots {
     Manifest(dirs.result(), parts.result(), txn.result(), schema)
   }
 
-  /** Write-temp + rename publication shared by both commit flavors. */
+  /** Write-temp + rename publication shared by both commit flavors. Each
+    * commit dir directly under `table/data` is written as its bare name,
+    * the inverse of [[readManifest]]'s resolution; any other dir keeps its
+    * path. */
   private def publish(f: FileSystem, table: String, v: Long, m: Manifest): Long = {
+    def entry(dir: String) = {
+      val name = dir.stripPrefix(dataPrefix(table))
+      if (dir.startsWith(dataPrefix(table)) && !isPath(name)) name else dir
+    }
     val root = mapper.createObjectNode()
     root.put("version", v)
     val arr = root.putArray("dirs")
-    m.dirs.foreach(arr.add)
+    m.dirs.foreach(d => arr.add(entry(d)))
     if (m.partitions.nonEmpty) {
       val po = root.putObject("partitions")
       m.partitions.toSeq.sortBy(_._1).foreach { case (spec, bases) =>
         val a = po.putArray(spec)
-        bases.foreach(a.add)
+        bases.foreach(b => a.add(entry(b)))
       }
     }
     if (m.txn.nonEmpty) {

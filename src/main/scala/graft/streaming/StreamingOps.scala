@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import graft.sinks.Snapshots
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -779,7 +779,9 @@ object StreamingOps {
     * discipline as the other gates: a read error FAILS the batch, a
     * non-overlapping batch sees an empty store). `manifestTable` holds
     * (doc_id, chunk_idx, chunk_hash, n_tok) partitioned by a doc-id
-    * bucket so [[reconstruct]] prunes to the requested docs' buckets.
+    * bucket so [[reconstruct]] prunes to the requested docs' buckets, and
+    * from there to their digests' chunk buckets ([[cbucketOf]], the one
+    * bucket expression the gate writes by).
     * Both appends carry (appId, batchId) txn watermarks → replays no-op
     * at both tables, and each clusters its rows by its partition column
     * first, so a commit writes one file per touched bucket. Intra-batch
@@ -851,7 +853,7 @@ object StreamingOps {
             array_join(col("ctoks"), " ").as("ctext"),
             size(col("ctoks")).cast("int").as("n_tok"))
           .withColumn("chunk_hash", md5(col("ctext")))
-          .withColumn("cbucket", pmod(xxhash64(col("chunk_hash")), lit(buckets)))
+          .withColumn("cbucket", cbucketOf(col("chunk_hash"), buckets))
           .localCheckpoint()
         // the batch's own (digest, bucket) set, deduped on the driver —
         // bounded by batch size
@@ -953,12 +955,28 @@ object StreamingOps {
     }
   }
 
-  /** Reassemble documents from the chunk store: manifest rows of the
-    * requested docs (doc-id-bucket pruned) joined to their chunks,
-    * re-ordered by chunk_idx. Returns (doc_id, text); requested ids whose
+  /** The chunk store's digest bucket: the `cbucket` a digest is stored
+    * under. The gate writes by it and every chunk-table read prunes by it,
+    * so it is defined once. */
+  private def cbucketOf(digest: Column, buckets: Int): Column =
+    pmod(xxhash64(digest), lit(buckets))
+
+  /** Reassemble documents from the chunk store: each document's manifest
+    * rows, re-ordered by chunk_idx, their chunks' texts joined by a space.
+    * Returns (doc_id, text).
+    *
+    * With `docIds` the read is bounded by the request, on the driver: the
+    * requested docs' manifest rows are read from their doc-id buckets and
+    * collected, each with its digest's `cbucket`; then only those chunk
+    * buckets are read, filtered to those digests and collected, and the
+    * texts are assembled locally into a frame typed (doc_id BIGINT, text
+    * STRING). Two Spark jobs, whatever the store holds. Requested ids whose
     * buckets hold no manifest rows (never stored, or erased until the
-    * bucket emptied) are simply absent, and when no requested bucket is
-    * present the frame is empty.
+    * bucket emptied) are simply absent. A requested document whose manifest
+    * names a digest the chunk table lacks throws IllegalStateException:
+    * chunks commit before manifests and an erase replaces the manifest
+    * first, so that can only be corruption. Without `docIds` the whole
+    * store is reassembled by a distributed join.
     *
     * Manifest rows are DEDUPED first: a document RE-DELIVERED in a later
     * batch (new batchId, so the txn watermark correctly does not swallow
@@ -971,25 +989,42 @@ object StreamingOps {
       manifestTable: String,
       chunkTable: String,
       docIds: Option[Seq[Long]] = None,
-      buckets: Int = 64): DataFrame = {
-    def assemble(man: DataFrame): DataFrame =
-      man.select(col("doc_id"), col("chunk_idx"), col("chunk_hash")).distinct()
+      buckets: Int = 64): DataFrame = docIds match {
+    case None =>
+      Snapshots.read(spark, manifestTable)
+        .select(col("doc_id"), col("chunk_idx"), col("chunk_hash")).distinct()
         .join(Snapshots.read(spark, chunkTable)
           .select(col("chunk_hash"), col("ctext")), Seq("chunk_hash"))
         .groupBy(col("doc_id"))
         .agg(array_join(transform(
           array_sort(collect_list(struct(col("chunk_idx"), col("ctext")))),
           e => e.getField("ctext")), " ").as("text"))
-    docIds match {
-      case None => assemble(Snapshots.read(spark, manifestTable))
-      case Some(ids) =>
-        // a requested bucket that holds no manifest rows only means that
-        // none of its requested documents is stored
-        val bks = ids.map(i => (((i % buckets) + buckets) % buckets).toString).toSet
-        assemble(Snapshots.readProbedOrEmpty(spark, manifestTable, "dbucket", bks,
-            StructType.fromDDL("doc_id BIGINT, chunk_idx INT, chunk_hash STRING"))
-          .filter(col("doc_id").isin(ids: _*)))
-    }
+    case Some(ids) =>
+      // a requested bucket that holds no manifest rows only means that
+      // none of its requested documents is stored
+      val dbks = ids.map(i => (((i % buckets) + buckets) % buckets).toString).toSet
+      val rows = Snapshots.readProbedOrEmpty(spark, manifestTable, "dbucket", dbks,
+          StructType.fromDDL("doc_id BIGINT, chunk_idx INT, chunk_hash STRING"))
+        .filter(col("doc_id").isin(ids: _*))
+        .select(col("doc_id"), col("chunk_idx"), col("chunk_hash"),
+          cbucketOf(col("chunk_hash"), buckets).cast("string"))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).distinct
+      val digests = rows.map(_._3).distinct
+      val ctext: Map[String, String] =
+        if (rows.isEmpty) Map.empty
+        else Snapshots.readProbedOrEmpty(spark, chunkTable, "cbucket", rows.map(_._4).toSet,
+            StructType.fromDDL("chunk_hash STRING, ctext STRING"))
+          .filter(col("chunk_hash").isin(digests.toSeq: _*))
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val docs = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (id, rs) =>
+        val parts = rs.map { case (_, idx, d, _) =>
+          idx -> ctext.getOrElse(d, throw new IllegalStateException(
+            s"document $id names chunk $d, which $chunkTable does not hold"))
+        }
+        Row(id, parts.sorted.map(_._2).mkString(" "))
+      }
+      spark.createDataFrame(java.util.List.of(docs: _*),
+        StructType.fromDDL("doc_id BIGINT, text STRING"))
   }
 
   /** Right-to-be-forgotten for the content-addressed store: drop the
@@ -1171,7 +1206,7 @@ object StreamingOps {
         case Some(cand0) =>
           val cand = cand0.select(col("chunk_hash")).distinct()
           val pbks: Set[String] = cand
-            .select(pmod(xxhash64(col("chunk_hash")), lit(buckets)).cast("string"))
+            .select(cbucketOf(col("chunk_hash"), buckets).cast("string"))
             .distinct().collect().map(_.getString(0)).toSet
           // the bucket-agnostic full scan, candidate-joined — None when the
           // chunk table holds no spec at all (nothing stored to sweep)

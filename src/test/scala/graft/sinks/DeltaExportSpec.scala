@@ -715,7 +715,10 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
       : org.apache.hadoop.fs.FSDataInputStream = {
     // parquet only: a plan-time read legitimately opens the (one) manifest
     // JSON; what must stay zero is DATA-file footer reconciliation
-    if (p.getName.endsWith(".parquet")) CountingFs.opens.incrementAndGet()
+    if (p.getName.endsWith(".parquet")) {
+      CountingFs.opens.incrementAndGet()
+      CountingFs.opened.add(p.toUri.getPath)
+    }
     if (CountingFs.underManifests(p)) CountingFs.manifestOpens.incrementAndGet()
     super.open(p, bufferSize)
   }
@@ -726,6 +729,7 @@ object CountingFs {
   val dataGets = new java.util.concurrent.atomic.AtomicInteger(0) // gets on *.parquet
   val lists = new java.util.concurrent.atomic.AtomicInteger(0)
   val opens = new java.util.concurrent.atomic.AtomicInteger(0)
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]() // paths of those opens
   val manifestLists = new java.util.concurrent.atomic.AtomicInteger(0)
   val manifestOpens = new java.util.concurrent.atomic.AtomicInteger(0)
   val logLists = new java.util.concurrent.atomic.AtomicInteger(0) // LISTs of a _delta_log dir

@@ -1114,6 +1114,80 @@ class SnapshotsSpec extends SparkSpec {
     assert(PlanScans.parquet(c) == 2)
   }
 
+  test("a table copied whole reads, appends, compacts and vacuums on its own files") {
+    val src = tmp()
+    Snapshots.commitPartitioned(Seq(("a", 1), ("b", 2)).toDF("g", "k"), src, Seq("g"))
+    Snapshots.commitPartitioned(Seq(("a", 3)).toDF("g", "k"), src, Seq("g"))
+    Snapshots.commit(Seq((1, "x")).toDF("k", "v"), s"$src-u")
+    val dst = java.nio.file.Files.createTempDirectory("graft-snap-copy").toString + "/t"
+    for (suffix <- Seq("", "-u")) {
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(src + suffix), new java.io.File(dst + suffix))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(src + suffix))
+    }
+    def ks(t: String) = Snapshots.read(spark, t).select($"k".as[Int]).collect().toSet
+    assert(ks(dst) == Set(1, 2, 3))
+    assert(ks(s"$dst-u") == Set(1))
+    Snapshots.commitPartitioned(Seq(("b", 4)).toDF("g", "k"), dst, Seq("g"))
+    Snapshots.commit(Seq((2, "y")).toDF("k", "v"), s"$dst-u")
+    assert(Snapshots.compactFragmented(spark, dst, maxBasesPerSpec = 1).isDefined)
+    Snapshots.compact(spark, s"$dst-u")
+    for (t <- Seq(dst, s"$dst-u")) Snapshots.vacuum(spark, t, retainLast = 1, minAgeMs = 0L)
+    assert(ks(dst) == Set(1, 2, 3, 4))
+    assert(ks(s"$dst-u") == Set(1, 2))
+    for (t <- Seq(dst, s"$dst-u"))
+      assert(Snapshots.read(spark, t).inputFiles.forall(_.contains(s"$t/data/")))
+  }
+
+  test("a table whose manifest holds absolute entries reads, appends, diffs and vacuums as before") {
+    val t = tmp()
+    Snapshots.commitPartitioned(Seq(("a", 1), ("b", 2)).toDF("g", "k"), t, Seq("g"))
+    // rewrite v1 as manifests were once written: every commit dir by its
+    // absolute path
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val v1 = new java.io.File(s"$t/_manifests/v00001.json")
+    val m = mapper.readTree(v1).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val parts = m.get("partitions").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    parts.fieldNames().forEachRemaining { spec =>
+      val bases = parts.putArray(spec)
+      bases.add(s"$t/data/${new java.io.File(s"$t/data").list().head}")
+    }
+    mapper.writeValue(v1, m)
+    assert(!mapper.readTree(v1).toString.contains("\"c-00001-"), "v1 holds a bare entry")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"g".as[String], $"k".as[Int]).collect().toSet
+    assert(rows(Snapshots.read(spark, t)) == Set(("a", 1), ("b", 2)))
+    Snapshots.commitPartitioned(Seq(("a", 3)).toDF("g", "k"), t, Seq("g"))
+    assert(rows(Snapshots.read(spark, t)) == Set(("a", 1), ("b", 2), ("a", 3)))
+    // the carried-forward dir is the same dir in both versions: only v2's
+    // own rows changed
+    val c = Snapshots.changes(spark, t, 1L, 2L)
+    assert(c.select($"g".as[String], $"k".as[Int], $"_change_type".as[String]).collect().toSeq ==
+      Seq(("a", 3, "insert")))
+    Snapshots.vacuum(spark, t, retainLast = 1, minAgeMs = 0L)
+    assert(Snapshots.versions(spark, t) == Seq(2L))
+    assert(new java.io.File(s"$t/data").list().length == 2)
+    assert(rows(Snapshots.read(spark, t)) == Set(("a", 1), ("b", 2), ("a", 3)))
+  }
+
+  test("manifests of identical tables do not grow with the table's path") {
+    val short = tmp()
+    val long = java.nio.file.Files.createTempDirectory("graft-snap").toString +
+      "/a/much/longer/path/to/the/same/table"
+    for (t <- Seq(short, long)) {
+      Snapshots.commitPartitioned(Seq(("a", 1), ("b", 2)).toDF("g", "k"), t, Seq("g"))
+      Snapshots.commitPartitioned(Seq(("a", 3)).toDF("g", "k"), t, Seq("g"))
+      Snapshots.commit(Seq((1, "x")).toDF("k", "v"), s"$t-u")
+      Snapshots.commit(Seq((2, "y")).toDF("k", "v"), s"$t-u")
+    }
+    def sizes(t: String) = new java.io.File(s"$t/_manifests").listFiles()
+      .filter(_.getName.endsWith(".json")).map(f => f.getName -> f.length()).sorted.toSeq
+    for (suffix <- Seq("", "-u")) {
+      assert(sizes(short + suffix).size == 2)
+      assert(sizes(short + suffix) == sizes(long + suffix))
+    }
+  }
+
   test("a read naming more than 32 leaf dirs starts no Spark job until its action") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
     def leaves(t: String, commits: Set[Int], glob: String) =

@@ -647,6 +647,59 @@ class ChunkStoreIngestSpec extends SparkSpec {
     assert(docs(22L) == norm(words(21, 80)) && docs(23L) == norm(s"${words(21, 80)} ${words(23, 80)}"))
   }
 
+  test("reconstruct of one document reads only its digests' chunk buckets, in two Spark jobs") {
+    import graft.sinks.CountingFs
+    spark.sparkContext.hadoopConfiguration.set("fs.cfs.impl", classOf[CountingFs].getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore-rec").toString
+    val (chunkT, manT) = (s"cfs://$dir/chunks", s"$dir/manifest")
+    val (mem, q) = startGate(chunkT, manT, s"$dir/ckpt")
+    try {
+      mem.addData((1L to 30L).map(i => i -> words(i, 60)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val own = Snapshots.read(spark, manT).filter($"doc_id" === 7L)
+      .select(concat(lit("cbucket="), pmod(xxhash64($"chunk_hash"), lit(64))).as[String])
+      .collect().toSet
+    assert(own.nonEmpty && own.size < Snapshots.partitions(spark, chunkT).size,
+      s"precondition: doc 7's ${own.size} buckets are a strict subset of the store's")
+    CountingFs.opened.clear()
+    val (docs, jobs) = jobsDuring(
+      StreamingOps.reconstruct(spark, manT, chunkT, Some(Seq(7L))).as[(Long, String)].collect())
+    assert(docs.toSeq == Seq(7L -> norm(words(7, 60))))
+    val opened = scala.jdk.CollectionConverters.IteratorHasAsScala(CountingFs.opened.iterator)
+      .asScala.toSeq
+    assert(opened.nonEmpty)
+    val outside = opened.filterNot(p => own.exists(b => p.contains(s"/$b/"))).distinct
+    assert(outside.isEmpty, s"opened ${outside.size} chunk files outside doc 7's buckets " +
+      s"${own.mkString(", ")}, e.g. ${outside.take(3).mkString(", ")}")
+    assert(jobs == 2, s"reconstruct + collect ran $jobs Spark jobs")
+  }
+
+  test("reconstruct of a document whose chunk is missing fails loudly, naming the doc and digest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore-hole").toString
+    val (chunkT, manT) = (s"$dir/chunks", s"$dir/manifest")
+    val (mem, q) = startGate(chunkT, manT, s"$dir/ckpt")
+    try {
+      mem.addData((1L to 5L).map(i => i -> words(i, 60)))
+      q.processAllAvailable()
+    } finally q.stop()
+    val (hash, bucket) = Snapshots.read(spark, manT).filter($"doc_id" === 3L && $"chunk_idx" === 1)
+      .select($"chunk_hash", pmod(xxhash64($"chunk_hash"), lit(64)).cast("string"))
+      .as[(String, String)].head()
+    // replace the digest's bucket with its other rows only
+    Snapshots.commitPartitionReplace(
+      Snapshots.read(spark, chunkT, None, _("cbucket") == bucket).filter($"chunk_hash" =!= hash),
+      chunkT, Seq("cbucket"), Seq(s"cbucket=$bucket"))
+    val e = intercept[IllegalStateException](
+      StreamingOps.reconstruct(spark, manT, chunkT, Some(Seq(3L))).collect())
+    assert(e.getMessage.contains("document 3") && e.getMessage.contains(hash), e.getMessage)
+    // a document whose chunks are all stored still reconstructs
+    val others = (1L to 5L).filterNot(i => Snapshots.read(spark, manT)
+      .filter($"doc_id" === i && $"chunk_hash" === hash).count() > 0)
+    assert(StreamingOps.reconstruct(spark, manT, chunkT, Some(others)).as[(Long, String)]
+      .collect().toMap == others.map(i => i -> norm(words(i, 60))).toMap)
+  }
+
   test("a steady-state gate batch runs a pinned number of Spark jobs") {
     val dir = java.nio.file.Files.createTempDirectory("graft-chunkstore-jobs").toString
     val (chunkT, manT) = (s"$dir/chunks", s"$dir/manifest")
